@@ -1375,52 +1375,14 @@ object SparkEntry {
           col("key"))
       val pairs = env.distinct()
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val regs = pairs
-        .withColumn("h",
-          conv(substring(md5(concat(lit("uu:"), col("key"))), 1, 8), 16, 10)
-            .cast("long"))
-        .withColumn("j", col("h") % 64)
-        .withColumn("rho", expr(
-          "CASE WHEN h div 64 = 0 THEN 27 " +
-            "ELSE 27 - length(bin(h div 64)) END"))
-        .groupBy(col("bucket"), col("j")).agg(max(col("rho")).as("m"))
+      val regs = graft.ext.Sketches.hourlyRegisters(pairs)
       val buckets = pairs.select(col("bucket")).distinct()
         .withColumnRenamed("bucket", "b").localCheckpoint()
-      // trailing-24h merge as a 24-way explode + broadcast EQUI-join:
-      // `bucket BETWEEN b-23h AND b` planned as a BroadcastNestedLoopJoin
-      // — every register row interval-compared against EVERY bucket,
-      // O(rows x buckets). Each hour-aligned register row instead emits
-      // its 24 target buckets and hash-joins the bucket list: identical
-      // (b, row) pairs (bucket in [b-23h, b] <=> b in [bucket, bucket+23h]
-      // and b must exist in the list), O(rows x 24) and skew-free.
-      val merged = regs
-        .select(col("j"), col("m"), explode(expr(
-          "sequence(bucket, bucket + INTERVAL 23 HOURS, INTERVAL 1 HOUR)"))
-          .as("b"))
-        .join(broadcast(buckets), "b")
-        .groupBy(col("b"), col("j")).agg(max(col("m")).as("m"))
-        .groupBy(col("b"))
-        .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(27 - m AS INT))"))
-          .as("s_present"), count(lit(1)).as("n_present"))
-        .select(col("b"),
-          (col("s_present") + (lit(64) - col("n_present"))
-            * lit(134217728L)).cast("long").as("s_scaled"),
-          (lit(64) - col("n_present")).cast("long").as("v_zero"))
-      // same explode + equi-join shape for the exact leg (see `merged`)
-      val exact = pairs
-        .select(col("key"), explode(expr(
-          "sequence(bucket, bucket + INTERVAL 23 HOURS, INTERVAL 1 HOUR)"))
-          .as("b"))
-        .join(broadcast(buckets), "b")
+      // the exact leg shares the trailing-24 h explode + equi-join
+      val exact = graft.ext.Sketches.trailingDay(pairs, buckets, "key")
         .groupBy(col("b")).agg(countDistinct(col("key")).as("exact_uniques"))
-      merged.join(exact, "b")
-        .withColumn("e_raw",
-          lit(0.709) * lit(4096.0) * lit(134217728.0)
-            / col("s_scaled").cast("double"))
-        .withColumn("hll_est", round(
-          when(col("e_raw") <= lit(160.0) && col("v_zero") > 0,
-            lit(64.0) * log(lit(64.0) / col("v_zero").cast("double")))
-            .otherwise(col("e_raw")), 6))
+      graft.ext.Sketches.withEstimate(
+          graft.ext.Sketches.trailingDaySketch(regs, buckets).join(exact, "b"))
         .select(col("b").as("bucket"), col("exact_uniques"),
           col("v_zero"), col("s_scaled"), col("hll_est"))
         .orderBy(col("bucket"))
@@ -1439,48 +1401,8 @@ object SparkEntry {
       val env = Pipeline.envelopeFlat(s, dir)
         .select(date_trunc("hour", col("timestamp")).as("bucket"),
           col("key"))
-      val regs = env
-        .withColumn("h",
-          conv(substring(md5(concat(lit("uu:"), col("key"))), 1, 8), 16, 10)
-            .cast("long"))
-        .withColumn("j", col("h") % 64)
-        .withColumn("rho", expr(
-          "CASE WHEN h div 64 = 0 THEN 27 " +
-            "ELSE 27 - length(bin(h div 64)) END"))
-        .groupBy(col("bucket"), col("j")).agg(max(col("rho")).as("m"))
-        .localCheckpoint()
-      // bucket list from the REGISTER table (buckets x 64 rows), not a
-      // second events scan — serving reads events exactly once
-      val buckets = regs.select(col("bucket")).distinct()
-        .withColumnRenamed("bucket", "b")
-      // 24-way explode + broadcast equi-join instead of the interval
-      // BroadcastNestedLoopJoin — identical (b, register) pairs, O(rows
-      // x 24) instead of O(rows x buckets); see kq65's merge for the
-      // equivalence argument
-      val merged = regs
-        .select(col("j"), col("m"), explode(expr(
-          "sequence(bucket, bucket + INTERVAL 23 HOURS, INTERVAL 1 HOUR)"))
-          .as("b"))
-        .join(broadcast(buckets), "b")
-        .groupBy(col("b"), col("j")).agg(max(col("m")).as("m"))
-        .groupBy(col("b"))
-        .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(27 - m AS INT))"))
-          .as("s_present"), count(lit(1)).as("n_present"))
-        .select(col("b"),
-          (col("s_present") + (lit(64) - col("n_present"))
-            * lit(134217728L)).cast("long").as("s_scaled"),
-          (lit(64) - col("n_present")).cast("long").as("v_zero"))
-      merged
-        .withColumn("e_raw",
-          lit(0.709) * lit(4096.0) * lit(134217728.0)
-            / col("s_scaled").cast("double"))
-        .withColumn("hll_est", round(
-          when(col("e_raw") <= lit(160.0) && col("v_zero") > 0,
-            lit(64.0) * log(lit(64.0) / col("v_zero").cast("double")))
-            .otherwise(col("e_raw")), 6))
-        .select(col("b").as("bucket"), col("v_zero"), col("s_scaled"),
-          col("hll_est"))
-        .orderBy(col("bucket"))
+      graft.ext.Sketches.slidingUniques(
+        graft.ext.Sketches.hourlyRegisters(env).localCheckpoint())
     }),
 
     // ---- kq102's STREAMING half (round-12 verdict item 7): the same ---

@@ -598,18 +598,14 @@ object Dedup {
    */
   def streamingIndexAppend(spark: SparkSession, dir: String,
       numHashes: Int = 12, rowsPerBand: Int = 3): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val table = "graft_minhash_index_" + indexSuffix(dir)
     if (!spark.catalog.tableExists(table))
       buildDedupIndex(spark, dir, numHashes, rowsPerBand)
-    val work =
-      java.nio.file.Files.createTempDirectory("x93-stream").toString
     val newBatch = Tables.load(spark, dir, "documents")
       .where(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    newBatch.repartition(2).write.mode("overwrite").parquet(s"$work/in")
-    val segPath = s"$work/segments"
-    try {
+    val streamSegs = graft.streaming.StreamPipeline.Replay(spark) { r =>
+      val segPath = s"${r.work}/segments"
       def commit(batch: DataFrame, batchId: Long): Unit =
         explodeBandKeys(minhashSignatures(batch, numHashes), numHashes,
             rowsPerBand)
@@ -618,31 +614,22 @@ object Dedup {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(segPath)
-      val q = spark.readStream.schema(newBatch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/in")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+      r.run(r.input(newBatch.repartition(2), perFile = true))(
+        _.foreachBatch { (batch: org.apache.spark.sql.Dataset[
             org.apache.spark.sql.Row], batchId: Long) =>
           commit(batch.toDF(), batchId)
           // at-least-once retry: the recommit must be a no-op
           if (batchId == 0L) commit(batch.toDF(), batchId)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val streamSegs = spark.read.parquet(segPath)
+        })
+      spark.read.parquet(segPath)
         .select(col("doc_id"), col("sig"), col("bkey"))
-        .localCheckpoint() // the probe result must outlive the temp dir
-      val probe = plantedProbe(spark, dir, numHashes, rowsPerBand,
-        2000000L, modulo = 7)
-      probeStored(probe, spark.table(table), numHashes)
-        .unionByName(probeStored(probe, streamSegs, numHashes))
-        .orderBy(col("new_id"), col("corpus_id"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$work/in"))
+        .localCheckpoint() // the probe result must outlive the work dir
     }
+    val probe = plantedProbe(spark, dir, numHashes, rowsPerBand,
+      2000000L, modulo = 7)
+    probeStored(probe, spark.table(table), numHashes)
+      .unionByName(probeStored(probe, streamSegs, numHashes))
+      .orderBy(col("new_id"), col("corpus_id"))
   }
 
   /**

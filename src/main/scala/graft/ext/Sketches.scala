@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,47 +83,103 @@ object Sketches {
    */
   def hllCardinality(spark: SparkSession, dir: String): DataFrame = {
     val vals = hllFields(spark, dir)
-    val hashed = vals
-      .withColumn("h",
-        conv(substring(md5(col("v")), 1, 8), 16, 10).cast("long"))
-      .withColumn("j", col("h") % M)
-      .withColumn("rho", expr(
-        s"CASE WHEN h div $M = 0 THEN $RhoCap " +
-          s"ELSE $RhoCap - length(bin(h div $M)) END"))
-    val regs = hashed.groupBy(col("source"), col("field"), col("j"))
+    val regs = withRegister(vals, col("v"))
+      .groupBy(col("source"), col("field"), col("j"))
       .agg(max(col("rho")).as("m"))
     // register-max merge: the cross-source sketch without re-reading data
     val merged = regs.groupBy(col("field"), col("j"))
       .agg(max(col("m")).as("m"))
       .select(lit("__all__").as("source"), col("field"), col("j"), col("m"))
-    val sketch = regs.unionByName(merged)
-      .groupBy(col("source"), col("field"))
-      .agg(sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST($RhoCap - m AS INT))"))
-        .as("s_present"),
-        count(lit(1)).as("n_present"))
-      .select(col("source"), col("field"),
-        (col("s_present") + (lit(M) - col("n_present")) * lit(Scale))
-          .cast("long").as("s_scaled"),
-        (lit(M) - col("n_present")).cast("long").as("v_zero"))
+    val sketch = registerSums(regs.unionByName(merged), "source", "field")
     val exact = vals.groupBy(col("source"), col("field"))
       .agg(countDistinct(col("v")).as("exact_distinct"))
       .unionByName(vals.groupBy(col("field"))
         .agg(countDistinct(col("v")).as("exact_distinct"))
         .select(lit("__all__").as("source"), col("field"),
           col("exact_distinct")))
-    sketch.join(exact, Seq("source", "field"))
-      // alpha_64 = 0.709 (Flajolet's constant for m = 64); the literal
-      // product folds left-assoc identically in both engines
-      .withColumn("e_raw",
+    withEstimate(sketch.join(exact, Seq("source", "field")))
+      .select(col("source"), col("field"), col("exact_distinct"),
+        col("v_zero"), col("s_scaled"), col("hll_est"))
+      .orderBy(col("field"), col("source"))
+  }
+
+  /** `df` plus the pinned md5-32 hash `h` of `v`, its register index
+    * `j` (low 6 bits) and its rank `rho` (from the remaining bits). */
+  private[graft] def withRegister(df: DataFrame, v: Column): DataFrame =
+    df.withColumn("h",
+        conv(substring(md5(v), 1, 8), 16, 10).cast("long"))
+      .withColumn("j", col("h") % M)
+      .withColumn("rho", expr(
+        s"CASE WHEN h div $M = 0 THEN $RhoCap " +
+          s"ELSE $RhoCap - length(bin(h div $M)) END"))
+
+  /** Per `keys` group of registers `m`: `s_scaled` = sum_j 2^(27 - M_j)
+    * over all 64 registers (an absent one counts 2^27) as an exact
+    * BIGINT, and the empty-register count `v_zero`. */
+  private def registerSums(regs: DataFrame, keys: String*): DataFrame =
+    regs.groupBy(keys.map(col): _*)
+      .agg(sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST($RhoCap - m AS INT))"))
+        .as("s_present"),
+        count(lit(1)).as("n_present"))
+      .select(keys.map(col) ++ Seq(
+        (col("s_present") + (lit(M) - col("n_present")) * lit(Scale))
+          .cast("long").as("s_scaled"),
+        (lit(M) - col("n_present")).cast("long").as("v_zero")): _*)
+
+  /** `df` plus the estimate `hll_est` from its `s_scaled`/`v_zero`. */
+  private[graft] def withEstimate(df: DataFrame): DataFrame =
+    // alpha_64 = 0.709 (Flajolet's constant for m = 64); the literal
+    // product folds left-assoc identically in both engines
+    df.withColumn("e_raw",
         lit(0.709) * lit(4096.0) * lit(Scale.toDouble)
           / col("s_scaled").cast("double"))
       .withColumn("hll_est", round(
         when(col("e_raw") <= lit(2.5 * M) && col("v_zero") > 0,
           lit(M.toDouble) * log(lit(M.toDouble) / col("v_zero").cast("double")))
           .otherwise(col("e_raw")), 6))
-      .select(col("source"), col("field"), col("exact_distinct"),
-        col("v_zero"), col("s_scaled"), col("hll_est"))
-      .orderBy(col("field"), col("source"))
+
+  /** Hourly per-user registers (`bucket`, `j`, `m`) of the sliding
+    * uniques family (kq65, kq102), from rows with `bucket` and `key`. */
+  private[graft] def hourlyRegisters(df: DataFrame): DataFrame =
+    withRegister(df, concat(lit("uu:"), col("key")))
+      .groupBy(col("bucket"), col("j")).agg(max(col("rho")).as("m"))
+
+  /**
+   * `df`'s hour-aligned `bucket` rows, projected to `keep`, paired with
+   * every bucket `b` of `buckets` whose trailing 24 h they fall in. A
+   * 24-way explode + broadcast EQUI-join: `bucket BETWEEN b-23h AND b`
+   * would plan as a BroadcastNestedLoopJoin, every row
+   * interval-compared against EVERY bucket, O(rows x buckets). Emitting
+   * each row's 24 target buckets and hash-joining the bucket list gives
+   * identical (b, row) pairs (bucket in [b-23h, b] <=> b in [bucket,
+   * bucket+23h], and b must exist in the list), O(rows x 24) and
+   * skew-free.
+   */
+  private[graft] def trailingDay(df: DataFrame, buckets: DataFrame,
+      keep: String*): DataFrame =
+    df.select(keep.map(col) :+ explode(expr(
+        "sequence(bucket, bucket + INTERVAL 23 HOURS, INTERVAL 1 HOUR)"))
+        .as("b"): _*)
+      .join(broadcast(buckets), "b")
+
+  /** Per bucket `b` of `buckets`: the register-max merge of the hourly
+    * registers `regs` over its trailing 24 h, as (`b`, `s_scaled`,
+    * `v_zero`). */
+  private[graft] def trailingDaySketch(regs: DataFrame,
+      buckets: DataFrame): DataFrame =
+    registerSums(trailingDay(regs, buckets, "j", "m")
+      .groupBy(col("b"), col("j")).agg(max(col("m")).as("m")), "b")
+
+  /** The serving estimate per bucket (kq102, kq105) from the hourly
+    * registers alone: the bucket list comes from the register table
+    * (buckets x 64 rows), never from a second events scan. */
+  private[graft] def slidingUniques(regs: DataFrame): DataFrame = {
+    val buckets = regs.select(col("bucket")).distinct()
+      .withColumnRenamed("bucket", "b")
+    withEstimate(trailingDaySketch(regs, buckets))
+      .select(col("b").as("bucket"), col("v_zero"), col("s_scaled"),
+        col("hll_est"))
+      .orderBy(col("bucket"))
   }
 
   /** DuckDB replay of every register, the merge, and the estimator. */

@@ -37,18 +37,18 @@ case class GumbelPick(first: Expression, second: Expression,
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
-  /** The struct ordinal of `score_nano`, resolved from the child's type
-    * (never a hardcoded position: a reordered n-best struct must fail
-    * analysis, not silently read the wrong long). */
-  @transient private lazy val scoreOrdinal: Int = third.dataType match {
-    case ArrayType(st: StructType, _) => st.fieldIndex("score_nano")
+  /** The n-best element struct, as [[checkInputDataTypes]] admits it. */
+  @transient private lazy val nbStruct: StructType = third.dataType match {
+    case ArrayType(st: StructType, _) => st
     case other => throw new IllegalStateException(
       s"gumbel_pick: unexpected input type $other")
   }
-  @transient private lazy val nbFields: Int = third.dataType match {
-    case ArrayType(st: StructType, _) => st.size
-    case _ => 3
-  }
+  /** The struct ordinal of `score_nano`, resolved from the child's type
+    * (never a hardcoded position: a reordered n-best struct must fail
+    * analysis, not silently read the wrong long). */
+  @transient private lazy val scoreOrdinal: Int =
+    nbStruct.fieldIndex("score_nano")
+  @transient private lazy val nbFields: Int = nbStruct.size
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {

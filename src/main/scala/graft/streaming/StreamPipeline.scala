@@ -1,10 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row,
+  SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
-  TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
+  GroupState, GroupStateTimeout, ListState, MapState, OutputMode,
+  StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues,
+  Trigger, ValueState}
+import org.apache.spark.sql.types.StructType
 
 import graft.transform.Transforms
 
@@ -28,7 +33,7 @@ object StreamPipeline {
 
   /** Move the single parquet part a `coalesce(1)` slice write left under
     * `tmp` into place as `dst` with mtime `mtime` — the shared tail of
-    * every four-slice replay harness. An EMPTY event-time slice (skewed
+    * every four-slice replay. An EMPTY event-time slice (skewed
     * timestamps can leave a quarter with no rows) writes NO part file,
     * so the move is skipped instead of crashing on `.head`; the
     * remaining files still replay in mtime order, one fewer
@@ -41,40 +46,156 @@ object StreamPipeline {
         dst.setLastModified(mtime)
       }
 
-  /** Writes the four time-ordered replay slices of `ev` into
-    * `$work/in/batch-0i.parquet` (strictly increasing mtimes — the
-    * file-source batch order) in ONE job: slice id = `(us − mn) div
-    * step` as a partition column, hash-repartitioned so each slice
-    * lands in one task → one part file per slice. Replaces the
-    * previous per-harness min/max pass + FOUR filtered coalesce(1)
-    * writes — five derivations of the upstream frame (for kq105/kq112
-    * that is the envelope/enrich chain) — with two: the min/max agg
-    * (column-pruned to the timestamp) and the partitioned write. Slice
-    * CONTENTS are identical (same deterministic ranges); only
-    * intra-file row order may differ, which no replay consumer
-    * observes (per-batch row sets feed order-insensitive state
-    * updates, and emission order is governed by batch boundaries and
-    * watermarks, both unchanged). */
-  private def writeSlices(spark: org.apache.spark.sql.SparkSession,
-      ev: DataFrame, us: org.apache.spark.sql.Column,
-      work: String): java.io.File = {
-    import spark.implicits._
-    val inDir = new java.io.File(s"$work/in"); inDir.mkdirs()
-    val withUs = ev.withColumn("_us", us.cast("long"))
-    val Array(mn, mx) = withUs.agg(min(col("_us")), max(col("_us")))
-      .as[(Long, Long)].collect().map(t => Array(t._1, t._2)).head
-    val step = math.max((mx - mn) / 4 + 1, 1L)
-    val tmp = s"$work/slices"
-    withUs
-      .withColumn("_slice", expr(s"CAST((_us - ${mn}L) div ${step}L AS INT)"))
-      .drop("_us")
-      .repartition(4, col("_slice"))
-      .write.mode("overwrite").partitionBy("_slice").parquet(tmp)
-    for (i <- 0 until 4)
-      moveSlicePart(s"$tmp/_slice=$i",
-        new java.io.File(inDir, f"batch-$i%02d.parquet"),
-        1700000000000L + i * 60000L)
-    inDir
+  /**
+   * The scope of ONE finite replay: a bounded input run as a streaming
+   * query to completion under `Trigger.AvailableNow`, with settings that
+   * belong to that query alone (the Structured Streaming model: a
+   * bounded replay is a query, and its configuration is the query's).
+   * Every replay harness goes through [[Replay.apply]]; harness code
+   * never writes session conf.
+   *
+   *  - `session` is `caller.newSession()` on the shared SparkContext. It
+   *    carries every modifiable SQL conf of the caller (session time
+   *    zone, ANSI mode, `nanosAsLong`, ...) plus the replay settings.
+   *    8 shuffle partitions: a stateful query opens one
+   *    state-store provider per shuffle partition per stateful operator
+   *    (a join has two), and at fixture scale a larger default is
+   *    seconds of pure provider/checkpoint set-up while the state itself
+   *    is tiny; each replay checkpoints from scratch, so the count is
+   *    free to differ between runs. RocksDB is set only for a query
+   *    whose plan holds a transformWithState, which requires it; every
+   *    other query keeps the caller's provider (the HDFS-backed default
+   *    is the faster of the two on these replays). The caller's session
+   *    is never written, so driver threads may replay concurrently.
+   *  - `work` holds the input (`in`) and the checkpoint (`ckpt`) and is
+   *    deleted when the replay ends. `out`, the sink directory, stays
+   *    until JVM exit, because the frame returned by [[readBack]] reads
+   *    it lazily.
+   *  - Inputs are written in the caller's session. Only the streaming
+   *    query and a memory sink's fixpoint run in `session`; sinks are
+   *    read back in the caller's session, so the returned plan and its
+   *    sort run under the caller's conf.
+   */
+  private[graft] final class Replay(caller: SparkSession) {
+    val session: SparkSession = {
+      val s = caller.newSession()
+      for ((k, v) <- caller.conf.getAll if caller.conf.isModifiable(k))
+        s.conf.set(k, v)
+      s.conf.set("spark.sql.shuffle.partitions", "8")
+      s
+    }
+    val work: java.io.File =
+      java.nio.file.Files.createTempDirectory("graft-replay").toFile
+    val in: String = s"$work/in"
+    val ckpt: String = s"$work/ckpt"
+    lazy val out: String = {
+      val d = java.nio.file.Files.createTempDirectory("graft-replay-out")
+        .toFile
+      FileUtils.forceDeleteOnExit(d)
+      d.toString
+    }
+
+    /** `in` as a stream in the replay session; `perFile` feeds one file
+      * per micro-batch. */
+    def stream(schema: StructType, perFile: Boolean = false): DataFrame = {
+      val r = session.readStream.schema(schema)
+      (if (perFile) r.option("maxFilesPerTrigger", "1") else r).parquet(in)
+    }
+
+    /** Writes `df` as the input and returns it as a stream. */
+    def input(df: DataFrame, perFile: Boolean = false): DataFrame = {
+      df.write.mode("overwrite").parquet(in)
+      stream(df.schema, perFile)
+    }
+
+    /** Writes the four time-ordered slices of `df` into
+      * `in/batch-0i.parquet` (strictly increasing mtimes — the
+      * file-source batch order) and returns them as a stream of four
+      * micro-batches. ONE job: slice id = `(us − mn) div step` as a
+      * partition column, hash-repartitioned so each slice lands in one
+      * task → one part file per slice, after a min/max agg
+      * column-pruned to the timestamp. Slice CONTENTS are deterministic
+      * ranges; only intra-file row order may vary, which no replay
+      * consumer observes (per-batch row sets feed order-insensitive
+      * state updates, and emission order is governed by batch
+      * boundaries and watermarks). */
+    def slices(df: DataFrame, us: Column): DataFrame = {
+      import df.sparkSession.implicits._
+      val inDir = new java.io.File(in); inDir.mkdirs()
+      val withUs = df.withColumn("_us", us.cast("long"))
+      val (mn, mx) = withUs.agg(min(col("_us")), max(col("_us")))
+        .as[(Long, Long)].head()
+      val step = math.max((mx - mn) / 4 + 1, 1L)
+      val tmp = s"$work/slices"
+      withUs
+        .withColumn("_slice", expr(s"CAST((_us - ${mn}L) div ${step}L AS INT)"))
+        .drop("_us")
+        .repartition(4, col("_slice"))
+        .write.mode("overwrite").partitionBy("_slice").parquet(tmp)
+      for (i <- 0 until 4)
+        moveSlicePart(s"$tmp/_slice=$i",
+          new java.io.File(inDir, f"batch-$i%02d.parquet"),
+          1700000000000L + i * 60000L)
+      stream(df.schema, perFile = true)
+    }
+
+    /** Runs `df` to completion through the writer `sink` builds, on the
+      * replay checkpoint. Callable twice on one checkpoint: the second
+      * run resumes from the first. */
+    def run[T](df: Dataset[T])(
+        sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+      val tws = df.queryExecution.analyzed
+        .exists(_.isInstanceOf[TransformWithState])
+      if (tws)
+        session.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")
+      val q = sink(df.writeStream).trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt).start()
+      q.awaitTermination()
+      q
+    }
+
+    /** Runs `df` into a parquet sink at `out` (Append, the only mode a
+      * file sink has) and reads it back. */
+    def toParquet(df: DataFrame): DataFrame = {
+      run(df)(_.format("parquet").option("path", out))
+      readBack(df.schema)
+    }
+
+    /** Runs `df` into a memory sink; returns the sink as a table of the
+      * replay session. [[Replay.apply]] drops the view at the end, so
+      * the sink's rows live no longer than the frames built on them. */
+    def toMemory(df: DataFrame, mode: OutputMode): DataFrame = {
+      run(df)(_.format("memory").queryName("replay").outputMode(mode))
+      session.table("replay")
+    }
+
+    /** Materializes a replay-session `fixpoint` at `out` — no driver
+      * collect — and reads it back. */
+    def keep(fixpoint: DataFrame): DataFrame = {
+      fixpoint.write.mode("overwrite").parquet(out)
+      readBack(fixpoint.schema)
+    }
+
+    /** `out` in the caller's session. The explicit schema also covers a
+      * sink that received no rows: it holds no data files, where
+      * schema inference would throw instead of yielding the empty
+      * frame. */
+    def readBack(schema: StructType): DataFrame =
+      caller.read.schema(schema).parquet(out)
+  }
+
+  private[graft] object Replay {
+    /** Runs `body` in a fresh [[Replay]], then drops its memory sink
+      * view and deletes its work dir. */
+    def apply[T](spark: SparkSession)(body: Replay => T): T = {
+      val r = new Replay(spark)
+      try body(r) finally {
+        r.session.catalog.dropTempView("replay")
+        FileUtils.deleteQuietly(r.work)
+      }
+    }
   }
 
   /** Enrich a STREAMING record frame (same chain as batch — stateless). */
@@ -244,61 +365,27 @@ object StreamPipeline {
    * offset)` per key, which is exactly the DuckDB oracle — Spark 4's
    * flagship stateful API gets a CORRECTNESS row, not just spec evidence.
    */
-  def keyStatsBatch(spark: org.apache.spark.sql.SparkSession,
-      env: DataFrame, valueJsonField: String): DataFrame =
-      withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq23-tws").toString
-    env.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(env.schema).parquet(s"$work/in")
-    val sinkName = s"kq23_tws_${System.nanoTime()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val q = keyStatsPerKey(stream, valueJsonField).toDF()
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      // the final state per key is the emission with the max n (n
-      // strictly increases every time a key appears in a micro-batch).
-      // Materialized EAGERLY to its own temp parquet (deleted on JVM
-      // exit) so the memory sink and the streaming workdir can be
-      // reclaimed below — but WITHOUT a driver-side collect: the
-      // fixpoint stays a distributed frame end to end, so a
-      // high-cardinality key space never funnels through the driver
-      // heap. The read-back re-sorts because parquet file order is not
-      // a contract.
-      // max_by aggregate, not a window: n strictly increases per key, so
-      // the fixpoint row is the unique n-max — a partial-aggregable
-      // groupBy (map-side combine, no per-partition sort; guide §2.3)
-      val fixpoint = spark.table(sinkName)
-        .groupBy(col("topic"), col("key"))
-        .agg(max_by(struct(col("n"), col("last_offset"),
-          col("last_value")), col("n")).as("top"))
-        .select(col("topic"), col("key"), col("top.n").as("n"),
-          col("top.last_offset").as("last_offset"),
-          col("top.last_value").as("last_value"))
-      val out = java.nio.file.Files.createTempDirectory("kq23-out").toFile
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-      fixpoint.write.mode("overwrite").parquet(out.toString)
-      spark.read.parquet(out.toString).orderBy(col("topic"), col("key"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      spark.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+  def keyStatsBatch(spark: SparkSession, env: DataFrame,
+      valueJsonField: String): DataFrame = Replay(spark) { r =>
+    val emitted = r.toMemory(
+      keyStatsPerKey(r.input(env), valueJsonField).toDF(),
+      OutputMode.Update())
+    // the final state per key is the emission with the max n (n
+    // strictly increases every time a key appears in a micro-batch) — a
+    // max_by aggregate, not a window: partial-aggregable, map-side
+    // combined, no per-partition sort (guide §2.3). Materialized EAGERLY
+    // at `out`, without a driver-side collect: the fixpoint stays a
+    // distributed frame end to end, so a high-cardinality key space
+    // never funnels through the driver heap. The read-back re-sorts
+    // because parquet file order is not a contract.
+    val fixpoint = emitted
+      .groupBy(col("topic"), col("key"))
+      .agg(max_by(struct(col("n"), col("last_offset"),
+        col("last_value")), col("n")).as("top"))
+      .select(col("topic"), col("key"), col("top.n").as("n"),
+        col("top.last_offset").as("last_offset"),
+        col("top.last_value").as("last_value"))
+    r.keep(fixpoint).orderBy(col("topic"), col("key"))
   }
 
   /** Input row for the kq83 map-state counter. */
@@ -351,54 +438,23 @@ object StreamPipeline {
    * (null event_type) are filtered before keying, so the state domain
    * is (live keys × observed types).
    */
-  def mapStateCountsBatch(spark: org.apache.spark.sql.SparkSession,
-      env: DataFrame): DataFrame = withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.Trigger
+  def mapStateCountsBatch(spark: SparkSession,
+      env: DataFrame): DataFrame = Replay(spark) { r =>
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("kq83-tws").toString
-    val in = env.where(col("event_type").isNotNull)
-      .select(col("key"), col("event_type"))
-    in.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(in.schema).parquet(s"$work/in")
-    val sinkName = s"kq83_tws_${System.nanoTime()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val q = stream.as[KeyType]
+    val emitted = r.toMemory(
+      r.input(env.where(col("event_type").isNotNull)
+          .select(col("key"), col("event_type")))
+        .as[KeyType]
         .groupByKey(_.key)
         .transformWithState(new TypeCountProcessor,
           TimeMode.None(), OutputMode.Update())
-        .toDF()
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      // plain max aggregate, not a window: per-(key, type) counts only
-      // grow, and n is the only carried column (see kq23's fixpoint)
-      val fixpoint = spark.table(sinkName)
-        .groupBy(col("key"), col("event_type"))
-        .agg(max(col("n")).as("n"))
-      val out = java.nio.file.Files.createTempDirectory("kq83-out").toFile
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-      fixpoint.write.mode("overwrite").parquet(out.toString)
-      spark.read.parquet(out.toString)
-        .orderBy(col("key"), col("event_type"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      spark.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        .toDF(),
+      OutputMode.Update())
+    // plain max aggregate, not a window: per-(key, type) counts only
+    // grow, and n is the only carried column (see kq23's fixpoint)
+    r.keep(emitted.groupBy(col("key"), col("event_type"))
+        .agg(max(col("n")).as("n")))
+      .orderBy(col("key"), col("event_type"))
   }
 
   /**
@@ -419,37 +475,21 @@ object StreamPipeline {
    * (parallel, no driver funnel); the audit is a scan-and-sort of
    * |keys| rows, independent of the event volume that built the state.
    */
-  def stateAuditBatch(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame): DataFrame = withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq74-state").toString
-    envFlat.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(envFlat.schema).parquet(s"$work/in")
-    try {
-      val cents = (col("value").cast("decimal(18,2)") * 100)
-        .cast("decimal(18,0)").cast("long")
-      val q = stream
-        .groupBy(col("key"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("value").isNotNull, cents).otherwise(0L)).as("cents"))
-        .writeStream.format("noop")
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      // the state value struct carries the AGG BUFFER fields, named by
-      // function ("count", "sum"), not by the output aliases
-      val state = spark.read.format("statestore").load(s"$work/ckpt")
+  def stateAuditBatch(spark: SparkSession,
+      envFlat: DataFrame): DataFrame = Replay(spark) { r =>
+    val cents = (col("value").cast("decimal(18,2)") * 100)
+      .cast("decimal(18,0)").cast("long")
+    r.run(r.input(envFlat)
+      .groupBy(col("key"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("value").isNotNull, cents).otherwise(0L)).as("cents")))(
+      _.format("noop").outputMode(OutputMode.Update()))
+    // the state value struct carries the AGG BUFFER fields, named by
+    // function ("count", "sum"), not by the output aliases
+    r.keep(r.session.read.format("statestore").load(r.ckpt)
         .select(col("key.key").as("key"),
-          col("value.count").as("n"), col("value.sum").as("cents"))
-      val out = java.nio.file.Files.createTempDirectory("kq74-out").toFile
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-      state.write.mode("overwrite").parquet(out.toString)
-      spark.read.parquet(out.toString).orderBy(col("key"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+          col("value.count").as("n"), col("value.sum").as("cents")))
+      .orderBy(col("key"))
   }
 
   /**
@@ -467,39 +507,21 @@ object StreamPipeline {
    * of the stream as EXACT integer cross-multiplication (5·n·windows >
    * 6·Σn), so the oracle replays it with no floating-point threshold.
    */
-  def windowAlertBatch(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame): DataFrame = withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq42-alert").toString
-    envFlat.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(envFlat.schema).parquet(s"$work/in")
-    val sinkName = s"kq42_alert_${System.nanoTime()}"
-    try {
-      val q = stream.where(col("event_type").isNotNull)
+  def windowAlertBatch(spark: SparkSession,
+      envFlat: DataFrame): DataFrame = Replay(spark) { r =>
+    val counts = r.keep(r.toMemory(
+      r.input(envFlat).where(col("event_type").isNotNull)
         .groupBy(window(col("timestamp"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("bucket"), col("event_type"),
-          col("n"))
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      val out = java.nio.file.Files.createTempDirectory("kq42-out").toFile
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-      spark.table(sinkName).write.mode("overwrite").parquet(out.toString)
-      val counts = spark.read.parquet(out.toString)
-      val stats = counts.agg(count(lit(1)).as("n_windows"),
-        sum(col("n")).as("sum_n")) // 1-row scalar
-      counts.crossJoin(broadcast(stats))
-        .where(col("n") * 5 * col("n_windows") > col("sum_n") * 6)
-        .select(col("bucket"), col("event_type"), col("n"))
-        .orderBy(col("bucket"), col("event_type"))
-    } finally {
-      spark.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+          col("n")),
+      OutputMode.Complete()))
+    val stats = counts.agg(count(lit(1)).as("n_windows"),
+      sum(col("n")).as("sum_n")) // 1-row scalar
+    counts.crossJoin(broadcast(stats))
+      .where(col("n") * 5 * col("n_windows") > col("sum_n") * 6)
+      .select(col("bucket"), col("event_type"), col("n"))
+      .orderBy(col("bucket"), col("event_type"))
   }
 
   /**
@@ -525,41 +547,15 @@ object StreamPipeline {
    * stay open by construction and are NOT in the result — that omission
    * is the bounded-state semantics, not data loss.
    */
-  def windowAlertWatermarked(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame, delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq44-alert").toString
-    envFlat.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(envFlat.schema).parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq44-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      val q = stream.where(col("event_type").isNotNull)
+  def windowAlertWatermarked(spark: SparkSession, envFlat: DataFrame,
+      delay: String = "1 hour"): DataFrame = Replay(spark) { r =>
+    r.toParquet(r.input(envFlat).where(col("event_type").isNotNull)
         .withWatermark("timestamp", delay)
         .groupBy(window(col("timestamp"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("bucket"), col("event_type"),
-          col("n"))
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(schema).parquet(out.toString)
-        .orderBy(col("bucket"), col("event_type"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+          col("n")))
+      .orderBy(col("bucket"), col("event_type"))
   }
 
   /**
@@ -576,37 +572,18 @@ object StreamPipeline {
    * guarantee weakens (by design) to "no duplicates within the
    * watermark delay of each other".
    */
-  def streamDedupWatermarked(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame, delay: String = "48 hours"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq45-dedup").toString
-    envFlat.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(envFlat.schema).parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq45-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      val q = stream
+  def streamDedupWatermarked(spark: SparkSession, envFlat: DataFrame,
+      delay: String = "48 hours"): DataFrame = Replay(spark) { r =>
+    r.toParquet(r.input(envFlat)
         .withColumn("dedup_type",
           coalesce(col("event_type"), lit("TOMBSTONE")))
         .withColumn("dedup_payload",
           coalesce(col("value_json"), lit("__null_payload__")))
         .withWatermark("timestamp", delay)
-        .dropDuplicatesWithinWatermark("dedup_type", "dedup_payload")
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.read.schema(envFlat.schema).parquet(out.toString)
-        .groupBy(coalesce(col("event_type"), lit("TOMBSTONE"))
-          .as("event_type"))
-        .agg(count(lit(1)).as("n_distinct"))
-        .orderBy(col("event_type"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        .dropDuplicatesWithinWatermark("dedup_type", "dedup_payload"))
+      .groupBy(col("dedup_type").as("event_type"))
+      .agg(count(lit(1)).as("n_distinct"))
+      .orderBy(col("event_type"))
   }
 
   /**
@@ -631,20 +608,10 @@ object StreamPipeline {
    * so the oracle is kq44's tail rule over the DISTINCT triples. State
    * in BOTH operators is watermark-bounded — the chain runs forever.
    */
-  def streamDedupThenWindow(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame, delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq61-chain").toString
+  def streamDedupThenWindow(spark: SparkSession, envFlat: DataFrame,
+      delay: String = "1 hour"): DataFrame = Replay(spark) { r =>
     val base = envFlat.where(col("event_type").isNotNull)
-    base.unionByName(base.where(col("offset") % 3 === 0))
-      .write.mode("overwrite").parquet(s"$work/in")
-    val schema = envFlat.schema
-    val stream = spark.readStream.schema(schema).parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq61-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      val q = stream
+    r.toParquet(r.input(base.unionByName(base.where(col("offset") % 3 === 0)))
         .withColumn("dedup_payload",
           coalesce(col("value_json"), lit("__null_payload__")))
         .withColumn("dedup_ts",
@@ -655,26 +622,8 @@ object StreamPipeline {
         .groupBy(window(col("timestamp"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("bucket"), col("event_type"),
-          col("n"))
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(outSchema).parquet(out.toString)
-        .orderBy(col("bucket"), col("event_type"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+          col("n")))
+      .orderBy(col("bucket"), col("event_type"))
   }
 
   /**
@@ -692,44 +641,23 @@ object StreamPipeline {
    * `withWatermark` + `dropDuplicatesWithinWatermark`; the replay is
    * finite so the exact variant is the honest equivalent here.
    */
-  def streamDedupBatch(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame): DataFrame = withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq43-dedup").toString
-    envFlat.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(envFlat.schema).parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq43-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      // dedup state keyed by (event type, payload), with NULL payloads
-      // mapped to an explicit sentinel: streaming dropDuplicates treats
-      // NULLs as equal while the oracle's count(DISTINCT) skips them, so
-      // a raw value_json key would diverge on any fixture with NULL
-      // payloads; scoping the key by type additionally keeps the grouped
-      // counts deterministic if one payload ever appeared under two types.
-      val q = stream
+  def streamDedupBatch(spark: SparkSession,
+      envFlat: DataFrame): DataFrame = Replay(spark) { r =>
+    // dedup state keyed by (event type, payload), with NULL payloads
+    // mapped to an explicit sentinel: streaming dropDuplicates treats
+    // NULLs as equal while the oracle's count(DISTINCT) skips them, so
+    // a raw value_json key would diverge on any fixture with NULL
+    // payloads; scoping the key by type additionally keeps the grouped
+    // counts deterministic if one payload ever appeared under two types.
+    r.toParquet(r.input(envFlat)
         .withColumn("dedup_type",
           coalesce(col("event_type"), lit("TOMBSTONE")))
         .withColumn("dedup_payload",
           coalesce(col("value_json"), lit("__null_payload__")))
-        .dropDuplicates("dedup_type", "dedup_payload")
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // explicit schema: a FileStreamSink that received zero rows has no
-      // data files, and a schema-less read would fail instead of
-      // returning the empty frame
-      spark.read.schema(envFlat.schema).parquet(out.toString)
-        .groupBy(coalesce(col("event_type"), lit("TOMBSTONE"))
-          .as("event_type"))
-        .agg(count(lit(1)).as("n_distinct"))
-        .orderBy(col("event_type"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        .dropDuplicates("dedup_type", "dedup_payload"))
+      .groupBy(col("dedup_type").as("event_type"))
+      .agg(count(lit(1)).as("n_distinct"))
+      .orderBy(col("event_type"))
   }
 
   /**
@@ -748,32 +676,13 @@ object StreamPipeline {
    * expressions — survive the streaming planner with identical
    * semantics, not just the batch one.
    */
-  def kqlSearchBatch(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame, query: String,
-      textField: String = "value_json"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq32-kql").toString
-    envFlat.write.mode("overwrite").parquet(s"$work/in")
-    val stream = spark.readStream.schema(envFlat.schema).parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq32-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      val q = stream.where(graft.query.Kql.parse(query, textField))
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // explicit schema: a no-match query leaves the sink with only
-      // _spark_metadata; schema-less inference would throw instead of
-      // yielding the empty frame
-      spark.read.schema(envFlat.schema).parquet(out.toString)
+  def kqlSearchBatch(spark: SparkSession, envFlat: DataFrame,
+      query: String, textField: String = "value_json"): DataFrame =
+    Replay(spark) { r =>
+      r.toParquet(r.input(envFlat)
+          .where(graft.query.Kql.parse(query, textField)))
         .orderBy(col("offset"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
-  }
 
   /**
    * kq46 — STREAM-STREAM INTERVAL JOIN, watermarked on BOTH sides: the
@@ -794,74 +703,30 @@ object StreamPipeline {
    * present — emits exactly the batch interval join; DuckDB replays it
    * as a plain time-bounded self-join.
    */
-  /** Run `f` with the session's shuffle partitions temporarily lowered.
-    * A stateful streaming query instantiates one state-store provider
-    * per shuffle partition per stateful operator (a join has TWO); at
-    * local fixture scale the 32-partition default is ~7 s of pure
-    * provider/checkpoint setup per run, while the state itself is tiny.
-    * A real cluster sizes this to state volume instead (state rows /
-    * partition must fit memory); the join semantics are unaffected —
-    * each fresh run here checkpoints from scratch, so the partition
-    * count is free to differ between runs. */
-  private def withStreamingPartitions[T](
-      spark: org.apache.spark.sql.SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, old)
-  }
+  def streamIntervalJoin(spark: SparkSession, events: DataFrame,
+      delay: String = "1 hour"): DataFrame =
+    streamIntervalJoinImpl(spark, events, delay, "inner")
 
-  def streamIntervalJoin(spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame, delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-      streamIntervalJoinImpl(spark, events, delay, "inner")
-    }
-
-  private def streamIntervalJoinImpl(
-      spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame, delay: String, joinType: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq46-join").toString
-    val ev = events.select(col("user_id"), col("event_id"),
-      col("event_type"), col("ts"))
-    ev.write.mode("overwrite").parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq46-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      def side(t: String, u: String, id: String, ts: String) =
-        spark.readStream.schema(ev.schema).parquet(s"$work/in")
-          .where(col("event_type") === t)
+  private def streamIntervalJoinImpl(spark: SparkSession,
+      events: DataFrame, delay: String, joinType: String): DataFrame =
+    Replay(spark) { r =>
+      val ev = events.select(col("user_id"), col("event_id"),
+        col("event_type"), col("ts"))
+      def side(s: DataFrame, t: String, u: String, id: String, ts: String) =
+        s.where(col("event_type") === t)
           .select(col("user_id").as(u), col("event_id").as(id),
             col("ts").as(ts))
           .withWatermark(ts, delay)
-      val q = side("signup", "u", "s_id", "s_ts")
-        .join(side("purchase", "u2", "p_id", "p_ts"), expr(
-          "u = u2 AND p_ts >= s_ts AND p_ts <= s_ts + interval 24 hours"),
-          joinType)
-        .select(col("u").as("user_id"), col("s_id"), col("p_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("s_ts")))
-            .as("gap_us"))
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("s_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("p_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("gap_us",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(schema).parquet(out.toString)
+      r.toParquet(side(r.input(ev), "signup", "u", "s_id", "s_ts")
+          .join(side(r.stream(ev.schema), "purchase", "u2", "p_id", "p_ts"),
+            expr("u = u2 AND p_ts >= s_ts AND " +
+              "p_ts <= s_ts + interval 24 hours"),
+            joinType)
+          .select(col("u").as("user_id"), col("s_id"), col("p_id"),
+            (unix_micros(col("p_ts")) - unix_micros(col("s_ts")))
+              .as("gap_us")))
         .orderBy(col("user_id"), col("s_id"), col("p_id"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
-  }
 
   /**
    * kq47 — LEFT-OUTER stream-stream interval join: kq46 with the
@@ -882,11 +747,9 @@ object StreamPipeline {
    * iff it has no match AND wm_ms > s_ts_ms + horizon_ms. DuckDB
    * replays both legs as pure batch predicates.
    */
-  def streamIntervalJoinOuter(spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame, delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-      streamIntervalJoinImpl(spark, events, delay, "leftOuter")
-    }
+  def streamIntervalJoinOuter(spark: SparkSession, events: DataFrame,
+      delay: String = "1 hour"): DataFrame =
+    streamIntervalJoinImpl(spark, events, delay, "leftOuter")
 
   /**
    * kq50 — STREAM-STATIC enrichment join, the third Structured Streaming
@@ -906,47 +769,17 @@ object StreamPipeline {
    * exactly the batch join, so the DuckDB oracle is the plain left join
    * — no watermark emission rule applies (nothing is held in state).
    */
-  def streamStaticEnrich(spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame, customers: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq50-enrich").toString
-    val ev = events.select(col("event_id"), col("user_id"),
-      col("event_type"), col("value"))
-    ev.write.mode("overwrite").parquet(s"$work/in")
+  def streamStaticEnrich(spark: SparkSession, events: DataFrame,
+      customers: DataFrame): DataFrame = Replay(spark) { r =>
     val dim = customers.where(col("c_acctbal") > 0)
       .select(col("c_custkey"), col("c_mktsegment").as("mktsegment"),
         col("c_nationkey").as("nationkey"))
-    val out = java.nio.file.Files.createTempDirectory("kq50-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      val q = spark.readStream.schema(ev.schema).parquet(s"$work/in")
+    r.toParquet(r.input(events.select(col("event_id"), col("user_id"),
+          col("event_type"), col("value")))
         .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
         .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("mktsegment"), col("nationkey"))
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("mktsegment",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("nationkey",
-          org.apache.spark.sql.types.IntegerType)))
-      spark.read.schema(schema).parquet(out.toString)
-        .orderBy(col("event_id"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+          col("value"), col("mktsegment"), col("nationkey")))
+      .orderBy(col("event_id"))
   }
 
   /**
@@ -976,53 +809,39 @@ object StreamPipeline {
    * the partition overwrite touches one directory per trigger, and
    * recovery after any crash is replay-the-batch, not reconcile-the-sink.
    */
-  def exactlyOnceSink(spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq53-e1").toString
-    val ev = events.select(col("event_id"), col("event_type"), col("value"))
-    // 4 input files → 4 micro-batches at one file per trigger
-    ev.repartition(4).write.mode("overwrite").parquet(s"$work/in")
-    val table = s"$work/table"
-    try {
-      def commit(batch: DataFrame, batchId: Long): Unit =
-        batch.where(col("event_type").isNotNull)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum((col("value").cast("decimal(18,2)") * 100)
-              .cast("decimal(18,0)")).as("sum_cents"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(table)
-      val q = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/in")
-        .writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          commit(batch, batchId)
-          // simulated at-least-once retry: batch 1's compute + commit
-          // runs twice, as a recovered task would — must be a no-op
-          if (batchId == 1L) commit(batch, batchId)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // cross-batch rollup: equals the one-shot batch aggregate IFF the
-      // replayed commit was idempotent (the exactly-once contract)
-      spark.read.parquet(table)
+  def exactlyOnceSink(spark: SparkSession,
+      events: DataFrame): DataFrame = Replay(spark) { r =>
+    val table = s"${r.work}/table"
+    def commit(batch: DataFrame, batchId: Long): Unit =
+      batch.where(col("event_type").isNotNull)
         .groupBy(col("event_type"))
-        .agg(sum(col("n")).as("n_events"),
-          sum(col("sum_cents")).cast("decimal(38,0)").as("cents"))
-        .select(col("event_type"), col("n_events"),
-          (col("cents").cast("double") / 100).as("sum_v"))
-        .orderBy(col("event_type"))
-        .localCheckpoint() // materialize before the temp dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        .agg(count(lit(1)).as("n"),
+          sum((col("value").cast("decimal(18,2)") * 100)
+            .cast("decimal(18,0)")).as("sum_cents"))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(table)
+    // 4 input files → 4 micro-batches at one file per trigger
+    r.run(r.input(events.select(col("event_id"), col("event_type"),
+          col("value")).repartition(4), perFile = true))(
+      _.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        commit(batch, batchId)
+        // simulated at-least-once retry: batch 1's compute + commit
+        // runs twice, as a recovered task would — must be a no-op
+        if (batchId == 1L) commit(batch, batchId)
+      })
+    // cross-batch rollup: equals the one-shot batch aggregate IFF the
+    // replayed commit was idempotent (the exactly-once contract)
+    spark.read.parquet(table)
+      .groupBy(col("event_type"))
+      .agg(sum(col("n")).as("n_events"),
+        sum(col("sum_cents")).cast("decimal(38,0)").as("cents"))
+      .select(col("event_type"), col("n_events"),
+        (col("cents").cast("double") / 100).as("sum_v"))
+      .orderBy(col("event_type"))
+      .localCheckpoint() // materialize before the work dir is deleted
   }
 
   /** Per-user running activity plus the registered inactivity-timer
@@ -1160,62 +979,22 @@ object StreamPipeline {
    * emission equals the batch RANGE-window count ≥ 3 row-for-row — the
    * DuckDB oracle, with no watermark tail rule (alerts fire on arrival).
    */
-  def patternAlerts(spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame, target: String = "click",
-      windowUs: Long = 86400L * 1000000L, minCount: Int = 3,
-      delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("kq56-cep").toString
-    val ev = events.where(col("event_type") === target)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"))
-    // four time-ordered slices with strictly increasing mtimes → the
-    // file source feeds them as four consecutive micro-batches
-    val inDir = writeSlices(spark, ev, col("us"), work)
-    val out = java.nio.file.Files.createTempDirectory("kq56-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-        .withWatermark("ts", delay)
-        .as[UserEvt]
-        .groupByKey(_.user_id)
-        .transformWithState(new PatternAlertProcessor(windowUs, minCount),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("at_us",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_window",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(schema).parquet(out.toString)
+  def patternAlerts(spark: SparkSession, events: DataFrame,
+      target: String = "click", windowUs: Long = 86400L * 1000000L,
+      minCount: Int = 3, delay: String = "1 hour"): DataFrame =
+    Replay(spark) { r =>
+      import spark.implicits._
+      val ev = events.where(col("event_type") === target)
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"))
+      r.toParquet(r.slices(ev, col("us"))
+          .withWatermark("ts", delay)
+          .as[UserEvt]
+          .groupByKey(_.user_id)
+          .transformWithState(new PatternAlertProcessor(windowUs, minCount),
+            TimeMode.EventTime(), OutputMode.Append())
+          .toDF())
         .orderBy(col("user_id"), col("at_us"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
-  }
 
   /** Geofence input row: per-event derived point reduced to the
     * inside-fence flag. */
@@ -1305,60 +1084,20 @@ object StreamPipeline {
     fenceAlertsImpl(spark, graft.query.Geo.eventPolygonFrame(spark, dir),
       delay)
 
-  private def fenceAlertsImpl(spark: org.apache.spark.sql.SparkSession,
-      fenceFrame: DataFrame, delay: String): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
+  private def fenceAlertsImpl(spark: SparkSession, fenceFrame: DataFrame,
+      delay: String): DataFrame = Replay(spark) { r =>
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("kq109-geo").toString
     val ev = fenceFrame
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("inside"))
-    val inDir = writeSlices(spark, ev, col("us"), work)
-    val out = java.nio.file.Files.createTempDirectory("kq109-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
+    r.toParquet(r.slices(ev, col("us"))
         .withWatermark("ts", delay)
         .as[GeoEvt]
         .groupByKey(_.user_id)
         .transformWithState(new GeofenceProcessor,
           TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("at_us",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("kind",
-          org.apache.spark.sql.types.StringType)))
-      spark.read.schema(schema).parquet(out.toString)
-        .orderBy(col("user_id"), col("at_us"), col("event_id"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        .toDF())
+      .orderBy(col("user_id"), col("at_us"), col("event_id"))
   }
 
   /**
@@ -1384,57 +1123,20 @@ object StreamPipeline {
    * the horizon; both are keyed RocksDB entries, shuffled once on
    * user_id — rate × horizon bounded, history-independent.
    */
-  def inactivityWatch(spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame, horizonMs: Long = 21600000L,
-      delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("kq49-inact").toString
-    val ev = events.select(col("user_id"), col("ts"))
-    ev.write.mode("overwrite").parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq49-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream.schema(ev.schema).parquet(s"$work/in")
-        .withWatermark("ts", delay)
-        .withColumn("us", unix_micros(col("ts")))
-        .as[UserEvt]
-        .groupByKey(_.user_id)
-        .transformWithState(new InactivityProcessor(horizonMs),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_events",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("last_seen_us",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(schema).parquet(out.toString)
+  def inactivityWatch(spark: SparkSession, events: DataFrame,
+      horizonMs: Long = 21600000L, delay: String = "1 hour"): DataFrame =
+    Replay(spark) { r =>
+      import spark.implicits._
+      r.toParquet(r.input(events.select(col("user_id"), col("ts")))
+          .withWatermark("ts", delay)
+          .withColumn("us", unix_micros(col("ts")))
+          .as[UserEvt]
+          .groupByKey(_.user_id)
+          .transformWithState(new InactivityProcessor(horizonMs),
+            TimeMode.EventTime(), OutputMode.Append())
+          .toDF())
         .orderBy(col("user_id"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
-  }
 
   /**
    * kq48 — watermarked streaming SESSION WINDOWS (Append mode), the
@@ -1469,47 +1171,20 @@ object StreamPipeline {
    * aggregation shuffles once on user_id and session merging is a
    * per-key sorted scan inside the state store.
    */
-  def sessionWindowWatermarked(spark: org.apache.spark.sql.SparkSession,
-      events: DataFrame, gap: String = "30 minutes",
-      delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("kq48-sess").toString
-    val ev = events.select(col("user_id"), col("event_id"), col("ts"))
-    ev.write.mode("overwrite").parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq48-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    try {
-      val q = spark.readStream.schema(ev.schema).parquet(s"$work/in")
-        .withWatermark("ts", delay)
-        .groupBy(session_window(col("ts"), gap), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          unix_micros(col("session_window.start")).as("start_us"),
-          unix_micros(col("session_window.end")).as("end_us"),
-          col("n_events"))
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("start_us",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("end_us",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_events",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(schema).parquet(out.toString)
+  def sessionWindowWatermarked(spark: SparkSession, events: DataFrame,
+      gap: String = "30 minutes", delay: String = "1 hour"): DataFrame =
+    Replay(spark) { r =>
+      r.toParquet(r.input(events.select(col("user_id"), col("event_id"),
+            col("ts")))
+          .withWatermark("ts", delay)
+          .groupBy(session_window(col("ts"), gap), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("user_id"),
+            unix_micros(col("session_window.start")).as("start_us"),
+            unix_micros(col("session_window.end")).as("end_us"),
+            col("n_events")))
         .orderBy(col("user_id"), col("start_us"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
-  }
 
   /**
    * kq101 — INCREMENTAL RESTART (checkpoint recovery): the kq44
@@ -1530,51 +1205,26 @@ object StreamPipeline {
    * rule on the FULL input — the oracle is kq44's, proving
    * exactly-once across the restart.
    */
-  def incrementalRestart(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame, delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val work =
-      java.nio.file.Files.createTempDirectory("kq101-restart").toString
-    val out = java.nio.file.Files.createTempDirectory("kq101-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
+  def incrementalRestart(spark: SparkSession, envFlat: DataFrame,
+      delay: String = "1 hour"): DataFrame = Replay(spark) { r =>
     val in = envFlat.where(col("event_type").isNotNull)
       .select(col("timestamp"), col("event_type"))
     val medianUs = in.select(expr(
       "percentile_approx(unix_micros(timestamp), 0.5, 10000)"))
       .head().getLong(0)
-    try {
-      def run(half: DataFrame, tag: String): Unit = {
-        half.write.mode("overwrite").parquet(s"$work/in/$tag")
-        val q = spark.readStream.schema(in.schema)
-          .parquet(s"$work/in/*") // both halves; offsets skip the done one
-          .withWatermark("timestamp", delay)
-          .groupBy(window(col("timestamp"), "6 hours"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("window.start").as("bucket"), col("event_type"),
-            col("n"))
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", s"$work/ckpt") // SHARED
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      run(in.where(unix_micros(col("timestamp")) < medianUs), "half1")
-      run(in.where(unix_micros(col("timestamp")) >= medianUs), "half2")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(schema).parquet(out.toString)
-        .orderBy(col("bucket"), col("event_type"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+    val windows = r.session.readStream.schema(in.schema)
+      .parquet(s"${r.in}/*") // both halves; offsets skip the done one
+      .withWatermark("timestamp", delay)
+      .groupBy(window(col("timestamp"), "6 hours"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("window.start").as("bucket"), col("event_type"), col("n"))
+    def run(half: DataFrame, tag: String): DataFrame = {
+      half.write.mode("overwrite").parquet(s"${r.in}/$tag")
+      r.toParquet(windows) // SHARED checkpoint: run 2 resumes run 1
     }
+    run(in.where(unix_micros(col("timestamp")) < medianUs), "half1")
+    run(in.where(unix_micros(col("timestamp")) >= medianUs), "half2")
+      .orderBy(col("bucket"), col("event_type"))
   }
 
   case class WinEvt(win_ms: Long, event_type: String)
@@ -1654,25 +1304,12 @@ object StreamPipeline {
    * on the window key; the emitted stream is k rows per window however
    * large the input.
    */
-  def windowTopk(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame, windowMs: Long = 21600000L, k: Int = 3,
-      delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
+  def windowTopk(spark: SparkSession, envFlat: DataFrame,
+      windowMs: Long = 21600000L, k: Int = 3,
+      delay: String = "1 hour"): DataFrame = Replay(spark) { r =>
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("kq94-topk").toString
-    val in = envFlat.where(col("event_type").isNotNull)
-      .select(col("timestamp"), col("event_type"))
-    in.write.mode("overwrite").parquet(s"$work/in")
-    val out = java.nio.file.Files.createTempDirectory("kq94-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out)
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream.schema(in.schema).parquet(s"$work/in")
+    r.toParquet(r.input(envFlat.where(col("event_type").isNotNull)
+          .select(col("timestamp"), col("event_type")))
         .withWatermark("timestamp", delay)
         .select(col("timestamp"), // keeps the event-time/watermark column
           expr(s"(unix_micros(timestamp) div ${windowMs * 1000L})" +
@@ -1682,36 +1319,10 @@ object StreamPipeline {
         .groupByKey(_.win_ms)
         .transformWithState(new WindowTopkProcessor(windowMs, k),
           TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("win_ms",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType)))
-      spark.read.schema(schema).parquet(out.toString)
-        .select(expr("timestamp_micros(win_ms * 1000)").as("bucket"),
-          col("rank"), col("event_type"), col("n"))
-        .orderBy(col("bucket"), col("rank"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        .toDF())
+      .select(expr("timestamp_micros(win_ms * 1000)").as("bucket"),
+        col("rank"), col("event_type"), col("n"))
+      .orderBy(col("bucket"), col("rank"))
   }
 
   case class RegEvt(bucket_ms: Long, ts: java.sql.Timestamp, j: Int,
@@ -1767,36 +1378,6 @@ object StreamPipeline {
     }
   }
 
-  /**
-   * kq105 — STREAMING SLIDING-WINDOW UNIQUE USERS, the serving path's
-   * streaming half (round-12 verdict item 7): kq102 rebuilds the
-   * per-bucket HLL registers from a batch events scan; here the
-   * registers accrue INCREMENTALLY as events arrive, via
-   * [[SlidingRegProcessor]] map state, and the trailing-24 h merge
-   * stays the same O(buckets x 64) register-max fold — so the dashboard
-   * estimate is continuously maintainable with per-bucket state bounded
-   * by watermark eviction, and events are never re-scanned.
-   *
-   * Replay contract (the kq46/kq50 pattern): the fixture replays as
-   * FOUR time-ordered files under `maxFilesPerTrigger=1` (state and
-   * eviction genuinely cross micro-batches); the Update-mode emission
-   * fixpoint equals the batch registers (see the processor doc), so the
-   * downstream merge + estimate reproduce kq102's result row-for-row —
-   * the DuckDB oracle is kq102's, unchanged.
-   *
-   * Update-mode-with-fixpoint was chosen over the Append-on-close
-   * alternative (emit final registers from the eviction timer, kq94's
-   * discipline) deliberately: a serving dashboard wants the CURRENT
-   * bucket's estimate refreshed as events arrive, not withheld until
-   * the watermark closes it, and the fixpoint contract covers EVERY
-   * bucket on a finite replay where Append-on-close would drop the open
-   * tail (kq44's tail rule) and weaken the oracle to a boundary-ruled
-   * subset.
-   *
-   * At 100 TB: arrivals shuffle once on the bucket key; state is 64
-   * point-updatable entries per open bucket; the merge reads the tiny
-   * register stream, never events.
-   */
   /**
    * kq106 — STREAMING PERCOLATOR (the ES Watcher / alerting shape):
    * kq55's reverse search run CONTINUOUSLY — every stored KQL query is
@@ -1862,44 +1443,30 @@ object StreamPipeline {
       .toDF("query_id", "emitted_us")
   }
 
-  def percolateStream(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame,
-      stored: Seq[(Int, org.apache.spark.sql.Column)],
-      periodUs: Long = 21600000000L,
+  def percolateStream(spark: SparkSession, envFlat: DataFrame,
+      stored: Seq[(Int, Column)], periodUs: Long = 21600000000L,
       onBatch: (Long, Long) => Unit = (_, _) => (),
       onSync: (Long, Long) => Unit = (_, _) => ()): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    val work = java.nio.file.Files
-      .createTempDirectory("kq106-perc").toString
-    val ev = envFlat.select(col("uid"), col("timestamp"),
-      col("event_type"), col("value"), col("value_json"))
-    // four STRICT time slices -> four consecutive micro-batches; a tie
-    // timestamp always lands in exactly one slice
-    val inDir = writeSlices(spark, ev, unix_micros(col("timestamp")), work)
-    val verdicts = array(stored.map { case (id, p) =>
-      struct(lit(id).as("query_id"), p.as("hit")) }: _*)
-    val lastUs = scala.collection.mutable.Map[Int, Long]()
-    val outDir = java.nio.file.Files
-      .createTempDirectory("kq106-out").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(outDir)
-    try {
-      val q = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
+    Replay(spark) { r =>
+      import spark.implicits._
+      val ev = envFlat.select(col("uid"), col("timestamp"),
+        col("event_type"), col("value"), col("value_json"))
+      val verdicts = array(stored.map { case (id, p) =>
+        struct(lit(id).as("query_id"), p.as("hit")) }: _*)
+      val lastUs = scala.collection.mutable.Map[Int, Long]()
+      // four STRICT time slices -> four consecutive micro-batches; a tie
+      // timestamp always lands in exactly one slice
+      r.run(r.slices(ev, unix_micros(col("timestamp")))
         .select(unix_micros(col("timestamp")).as("us"),
           explode(verdicts).as("m"))
         .where(col("m.hit"))
-        .select(col("m.query_id").as("query_id"), col("us"))
-        .writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
+        .select(col("m.query_id").as("query_id"), col("us")))(
+        _.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
           // seed each query's chain from the carried tail; the chain
           // itself runs distributed, per query
           val seed = lastUs.toMap
           val em = chainEmissions(batch, seed, periodUs).persist()
-          em.coalesce(1).write.mode("append").parquet(outDir.toString)
+          em.coalesce(1).write.mode("append").parquet(r.out)
           // bounded driver sync: one chain-tail row per stored query,
           // computed from THIS batch's emissions only (the persisted
           // `em`, materialized once by the write above) and max-merged
@@ -1914,19 +1481,10 @@ object StreamPipeline {
           tails.foreach { case (k, v) =>
             lastUs(k) = math.max(lastUs.getOrElse(k, Long.MinValue), v)
           }
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      spark.read.schema("query_id INT, emitted_us BIGINT")
-        .parquet(outDir.toString)
+        })
+      r.readBack(StructType.fromDDL("query_id INT, emitted_us BIGINT"))
         .orderBy(col("query_id"), col("emitted_us"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
-  }
 
   /**
    * kq112 — the COMPOSED STREAMING PIPELINE: x60 proves the batch
@@ -1957,21 +1515,15 @@ object StreamPipeline {
    * sees), so the rewrite is byte-identical — the streamed result must
    * equal the batch gate→match→chain replay, which is the oracle.
    */
-  def composedPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String, periodUs: Long = 21600000000L,
+  def composedPipeline(spark: SparkSession, dir: String,
+      periodUs: Long = 21600000000L,
       onBatch: (Long, Long) => Unit = (_, _) => (),
-      onPlan: String => Unit = _ => ()): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
+      onPlan: String => Unit = _ => ()): DataFrame = Replay(spark) { r =>
     import spark.implicits._
-    val work = java.nio.file.Files
-      .createTempDirectory("kq112-pipe").toString
     val raw = graft.ingest.Sources.eventsAsRecords(spark, dir)
-    val inDir = writeSlices(spark, raw, unix_micros(col("timestamp")), work)
-    val stream = spark.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
     val vj = graft.Pipeline.ValueJsonField
-    val flat = graft.transform.Transforms.enrich(vj)(stream)
+    val flat = graft.transform.Transforms.enrich(vj)(
+        r.slices(raw, unix_micros(col("timestamp"))))
       .select(col("uid"), col("key"), col("topic"), col("partition"),
         col("offset"), col("timestamp"),
         col("message.event_type").as("event_type"),
@@ -1987,149 +1539,102 @@ object StreamPipeline {
       .where(col("m.hit"))
       .select(col("m.query_id").as("query_id"), col("us"))
     val lastUs = scala.collection.mutable.Map[Int, Long]()
-    val table = s"$work/alerts"
-    try {
-      val q = matches.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val seed = lastUs.toMap
-          def commit(): Array[(Int, Long)] = {
-            val em = chainEmissions(batch, seed, periodUs).persist()
-            em.withColumn("batch_id", lit(batchId))
-              .coalesce(1)
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(table)
-            val tails = em.groupBy(col("query_id"))
-              .agg(max(col("emitted_us")).as("mx"))
-              .as[(Int, Long)].collect()
-            em.unpersist()
-            tails
-          }
-          val tails = commit()
-          // simulated at-least-once retry: batch 1's full compute +
-          // commit re-runs from the SAME seed (tails merge only after)
-          // — the dynamic overwrite must be byte-identical
-          if (batchId == 1L) commit()
-          onBatch(batchId, tails.length.toLong)
-          tails.foreach { case (k, v) =>
-            lastUs(k) = math.max(lastUs.getOrElse(k, Long.MinValue), v)
-          }
-          ()
+    val table = s"${r.work}/alerts"
+    val q = r.run(matches)(
+      _.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val seed = lastUs.toMap
+        def commit(): Array[(Int, Long)] = {
+          val em = chainEmissions(batch, seed, periodUs).persist()
+          em.withColumn("batch_id", lit(batchId))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(table)
+          val tails = em.groupBy(col("query_id"))
+            .agg(max(col("emitted_us")).as("mx"))
+            .as[(Int, Long)].collect()
+          em.unpersist()
+          tails
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      onPlan(org.apache.spark.sql.GraftColumnBridge.lastStreamingPlan(q))
-      // a corpus whose gated matches are all empty commits NO batch_id
-      // partitions — schema inference over the bare table dir would
-      // fail, so fall back to an explicit-schema empty frame
-      val hasAlerts = Option(new java.io.File(table).listFiles())
-        .exists(_.exists(_.getName.startsWith("batch_id=")))
-      val alerts = if (hasAlerts) spark.read.parquet(table)
-        else spark.range(0).select(col("id").cast("int").as("query_id"),
-          col("id").as("emitted_us"))
-      alerts
-        .select(col("query_id"), col("emitted_us"))
-        .orderBy(col("query_id"), col("emitted_us"))
-        .localCheckpoint() // materialize before the temp dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        val tails = commit()
+        // simulated at-least-once retry: batch 1's full compute +
+        // commit re-runs from the SAME seed (tails merge only after)
+        // — the dynamic overwrite must be byte-identical
+        if (batchId == 1L) commit()
+        onBatch(batchId, tails.length.toLong)
+        tails.foreach { case (k, v) =>
+          lastUs(k) = math.max(lastUs.getOrElse(k, Long.MinValue), v)
+        }
+      })
+    onPlan(org.apache.spark.sql.GraftColumnBridge.lastStreamingPlan(q))
+    // a corpus whose gated matches are all empty commits NO batch_id
+    // partitions — schema inference over the bare table dir would
+    // fail, so fall back to an explicit-schema empty frame
+    val hasAlerts = Option(new java.io.File(table).listFiles())
+      .exists(_.exists(_.getName.startsWith("batch_id=")))
+    val alerts = if (hasAlerts) spark.read.parquet(table)
+      else spark.range(0).select(col("id").cast("int").as("query_id"),
+        col("id").as("emitted_us"))
+    alerts
+      .select(col("query_id"), col("emitted_us"))
+      .orderBy(col("query_id"), col("emitted_us"))
+      .localCheckpoint() // materialize before the work dir is deleted
   }
 
-  def slidingUniquesStream(spark: org.apache.spark.sql.SparkSession,
-      envFlat: DataFrame, delay: String = "1 hour"): DataFrame =
-    withStreamingPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
+  /**
+   * kq105 — STREAMING SLIDING-WINDOW UNIQUE USERS, the serving path's
+   * streaming half (round-12 verdict item 7): kq102 rebuilds the
+   * per-bucket HLL registers from a batch events scan; here the
+   * registers accrue INCREMENTALLY as events arrive, via
+   * [[SlidingRegProcessor]] map state, and the trailing-24 h merge
+   * stays the same O(buckets x 64) register-max fold — so the dashboard
+   * estimate is continuously maintainable with per-bucket state bounded
+   * by watermark eviction, and events are never re-scanned.
+   *
+   * Replay contract (the kq46/kq50 pattern): the fixture replays as
+   * FOUR time-ordered files under `maxFilesPerTrigger=1` (state and
+   * eviction genuinely cross micro-batches); the Update-mode emission
+   * fixpoint equals the batch registers (see the processor doc), so the
+   * downstream merge + estimate reproduce kq102's result row-for-row —
+   * the DuckDB oracle is kq102's, unchanged.
+   *
+   * Update-mode-with-fixpoint was chosen over the Append-on-close
+   * alternative (emit final registers from the eviction timer, kq94's
+   * discipline) deliberately: a serving dashboard wants the CURRENT
+   * bucket's estimate refreshed as events arrive, not withheld until
+   * the watermark closes it, and the fixpoint contract covers EVERY
+   * bucket on a finite replay where Append-on-close would drop the open
+   * tail (kq44's tail rule) and weaken the oracle to a boundary-ruled
+   * subset.
+   *
+   * At 100 TB: arrivals shuffle once on the bucket key; state is 64
+   * point-updatable entries per open bucket; the merge reads the tiny
+   * register stream, never events.
+   */
+  def slidingUniquesStream(spark: SparkSession, envFlat: DataFrame,
+      delay: String = "1 hour"): DataFrame = Replay(spark) { r =>
     import spark.implicits._
-    val work = java.nio.file.Files
-      .createTempDirectory("kq105-uniq").toString
-    val ev = envFlat
-      .select(col("timestamp"),
+    val ev = graft.ext.Sketches
+      .withRegister(envFlat, concat(lit("uu:"), col("key")))
+      .select(col("timestamp").as("ts"),
         expr("(unix_micros(date_trunc('hour', timestamp)) div 1000)")
           .as("bucket_ms"),
-        conv(substring(md5(concat(lit("uu:"), col("key"))), 1, 8), 16, 10)
-          .cast("long").as("h"))
-      .select(col("timestamp").as("ts"), col("bucket_ms"),
-        (col("h") % 64).cast("int").as("j"),
-        expr("CAST(CASE WHEN h div 64 = 0 THEN 27 " +
-          "ELSE 27 - length(bin(h div 64)) END AS INT)").as("rho"))
+        col("j").cast("int").as("j"), col("rho").cast("int").as("rho"))
     // four time-ordered slices -> four consecutive micro-batches
-    val inDir = writeSlices(spark, ev, unix_micros(col("ts")), work)
-    val sinkName = s"kq105_uniq_${System.nanoTime()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
+    val emitted = r.toMemory(r.slices(ev, unix_micros(col("ts")))
         .withWatermark("ts", delay)
         .as[RegEvt]
         .groupByKey(_.bucket_ms)
         .transformWithState(new SlidingRegProcessor,
           TimeMode.EventTime(), OutputMode.Update())
-        .toDF()
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      // emission fixpoint = final registers (values only ever increase)
-      val regsDf = spark.table(sinkName)
-        .groupBy(col("bucket_ms"), col("j")).agg(max(col("m")).as("m"))
-        .select(expr("timestamp_micros(bucket_ms * 1000)").as("bucket"),
-          col("j"), col("m"))
-      val outDir = java.nio.file.Files
-        .createTempDirectory("kq105-out").toFile
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(outDir)
-      regsDf.write.mode("overwrite").parquet(outDir.toString)
-      val regs = spark.read.parquet(outDir.toString)
-      // kq102's serving merge, verbatim: bucket list from the register
-      // table, trailing-24 h register-max, bias-corrected estimate
-      val buckets = regs.select(col("bucket")).distinct()
-        .withColumnRenamed("bucket", "b")
-      // 24-way explode + broadcast equi-join instead of the interval
-      // BroadcastNestedLoopJoin (see kq65/kq102 — identical pairs,
-      // O(rows x 24) instead of O(rows x buckets))
-      val merged = regs
-        .select(col("j"), col("m"), explode(expr(
-          "sequence(bucket, bucket + INTERVAL 23 HOURS, INTERVAL 1 HOUR)"))
-          .as("b"))
-        .join(broadcast(buckets), "b")
-        .groupBy(col("b"), col("j")).agg(max(col("m")).as("m"))
-        .groupBy(col("b"))
-        .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(27 - m AS INT))"))
-          .as("s_present"), count(lit(1)).as("n_present"))
-        .select(col("b"),
-          (col("s_present") + (lit(64) - col("n_present"))
-            * lit(134217728L)).cast("long").as("s_scaled"),
-          (lit(64) - col("n_present")).cast("long").as("v_zero"))
-      merged
-        .withColumn("e_raw",
-          lit(0.709) * lit(4096.0) * lit(134217728.0)
-            / col("s_scaled").cast("double"))
-        .withColumn("hll_est", round(
-          when(col("e_raw") <= lit(160.0) && col("v_zero") > 0,
-            lit(64.0) * log(lit(64.0) / col("v_zero").cast("double")))
-            .otherwise(col("e_raw")), 6))
-        .select(col("b").as("bucket"), col("v_zero"), col("s_scaled"),
-          col("hll_est"))
-        .orderBy(col("bucket"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+        .toDF(),
+      OutputMode.Update())
+    // emission fixpoint = final registers (values only ever increase),
+    // then kq102's serving fold, verbatim
+    graft.ext.Sketches.slidingUniques(r.keep(emitted
+      .groupBy(col("bucket_ms"), col("j")).agg(max(col("m")).as("m"))
+      .select(expr("timestamp_micros(bucket_ms * 1000)").as("bucket"),
+        col("j"), col("m"))))
   }
 }
