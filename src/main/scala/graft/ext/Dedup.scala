@@ -66,7 +66,8 @@ object Dedup {
 
   /** [[ngramJaccardPairs]] over any `(doc_id, text)` frame — the entry a
     * pipeline composes with its own corpus (also what the skewed-corpus
-    * stress spec drives). */
+    * stress spec drives). Building the frame runs Spark jobs: the eager
+    * corpus-wide hash-collision probe ([[shinglesCollide]]). */
   def ngramJaccardPairsOf(docs: DataFrame,
       threshold: Double): DataFrame =
     ngramJaccardPairsOf(docs, threshold, forceStringVerify = false)
@@ -83,7 +84,9 @@ object Dedup {
    * in the pair queries — every exchange of the returned plan moves
    * 8-byte hashes. Expected-never at 2⁻⁶⁴ per pair of distinct shingles;
    * when it fires, verification falls back to the exact string arrays, so
-   * the result is ALWAYS the exact string-set answer.
+   * the result is ALWAYS the exact string-set answer. The probe is an
+   * EAGER Spark job run while the pair query is constructed; callers that
+   * force string verification skip it.
    */
   private def shinglesCollide(docs: DataFrame): Boolean = {
     val agg = docs.select(explode(
@@ -147,7 +150,7 @@ object Dedup {
     // carrying the shingle string through the window shuffle just to
     // break that tie would ~4× the shuffled bytes
     val dfTbl = exploded.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val collided = shinglesCollide(docs)
+    val stringVerify = forceStringVerify || shinglesCollide(docs)
     val wPrefix = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("sh"))
     val prefix = exploded.join(dfTbl, "sh")
@@ -166,7 +169,7 @@ object Dedup {
     // are identical to the naive all-pairs shingle join (the DuckDB oracle
     // runs the naive form); hashed arrays unless the corpus broke
     // injectivity (see shingleDfWithCollisionCheck)
-    val vSh = verifyShingles(docs, collided || forceStringVerify)
+    val vSh = verifyShingles(docs, stringVerify)
     val sA = vSh.select(col("doc_id").as("d1"), col("shingles").as("sh1"))
     val sB = vSh.select(col("doc_id").as("d2"), col("shingles").as("sh2"))
     candidates.join(sA, "d1").join(sB, "d2")
@@ -202,7 +205,8 @@ object Dedup {
       threshold: Double = 0.9): DataFrame =
     containmentPairsOf(Tables.load(spark, dir, "documents"), threshold)
 
-  /** [[containmentPairs]] over any `(doc_id, text)` frame. */
+  /** [[containmentPairs]] over any `(doc_id, text)` frame. Building the
+    * frame runs the eager hash-collision probe ([[shinglesCollide]]). */
   def containmentPairsOf(docs: DataFrame,
       threshold: Double): DataFrame =
     containmentPairsOf(docs, threshold, forceStringVerify = false)
@@ -221,7 +225,7 @@ object Dedup {
     // carrying the shingle string through the window shuffle just to
     // break that tie would ~4× the shuffled bytes
     val dfTbl = exploded.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val collided = shinglesCollide(docs)
+    val stringVerify = forceStringVerify || shinglesCollide(docs)
     val wPrefix = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("sh"))
     // ceil epsilon: see ngramJaccardPairs (an exact-integral t·n must not
@@ -238,7 +242,7 @@ object Dedup {
       .distinct()
     // exact verification on hashed sets unless injectivity broke — see
     // shingleDfWithCollisionCheck / verifyShingles
-    val vSh = verifyShingles(docs, collided || forceStringVerify)
+    val vSh = verifyShingles(docs, stringVerify)
     val sA = vSh.select(col("doc_id").as("d1"), col("shingles").as("sh1"))
     val sB = vSh.select(col("doc_id").as("d2"), col("shingles").as("sh2"))
     candidates.join(sA, "d1").join(sB, "d2")

@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.sink.ChangelogSink
 
@@ -19,16 +20,49 @@ import graft.sink.ChangelogSink
  *   log.latest()                                 // compacted state view
  *   log.asView("changelog"); spark.sql("...")    // full SQL
  * }}}
+ *
+ * Replays are made safe by deduplicating on `uid` (topic+partition+offset,
+ * the reference's ES `_id`), and WHERE the dedup sits is the cost model:
+ *
+ *  - the row filters (`searchKey`, `searchKeyTopic`, `searchField`,
+ *    `searchJson`, `tombstones`, `search`, `matchPhrase`, `fuzzy`,
+ *    `spanNear`) and `discover`'s time window apply to the RAW sink read
+ *    and `dropDuplicates("uid")` runs on the surviving rows only: the
+ *    predicate reaches the scan (`topic` prunes partitions, `key` lands in
+ *    `PushedFilters`) and the shuffle carries only the hits;
+ *  - `latest` ranks the raw read directly: copies of a uid are one Kafka
+ *    record, so they tie on (timestamp, offset) and `row_number` keeps
+ *    exactly one of them;
+ *  - `histogram`, `matchQuery`, [[frame]] and [[asView]] need the whole
+ *    deduplicated collection and dedup first.
+ *
+ * Filter-then-dedup is sound because a uid names ONE Kafka record and
+ * every stored copy came from that record through the same SMT chain, so
+ * a row predicate keeps all of a uid's copies or none of them. Where
+ * copies could differ (a re-ingest under another reader schema), the
+ * filtered result is one that the dedup-first form, which keeps an
+ * arbitrary copy, could also have returned.
  */
 case class Changelog(spark: SparkSession, path: String,
     valueJsonField: String = "value") {
 
-  /** The raw envelope frame (replay-safe: uid-deduplicated). */
-  def frame: DataFrame =
-    ChangelogSink.read(spark, path).dropDuplicates("uid")
+  /** The sink read as stored: replayed records appear once per copy. */
+  private def raw: DataFrame = ChangelogSink.read(spark, path)
+
+  /** The envelope frame, replay-safe: the whole table deduplicated on
+    * `uid` (one shuffle of every row). */
+  def frame: DataFrame = raw.dropDuplicates("uid")
+
+  /** `filter` over the raw sink read, then the uid dedup over its hits. */
+  private def hits(filter: DataFrame => DataFrame): DataFrame =
+    filter(raw).dropDuplicates("uid")
+
+  private def payload: Column =
+    coalesce(col(s"message.`$valueJsonField`").cast("string"), lit(""))
 
   def discover(from: Column, to: Column, n: Int): DataFrame =
-    LogQueries.discoverPage(frame, from, to, n)
+    LogQueries.discoverPage(
+      hits(_.where(col("timestamp").between(from, to))), from, to, n)
 
   def histogram(bucket: String = "hour"): DataFrame =
     LogQueries.discoverHistogram(frame, bucket)
@@ -38,20 +72,21 @@ case class Changelog(spark: SparkSession, path: String,
     * Catalyst predicate ([[Kql]] grammar; free-text terms match the
     * payload's JSON-string view). */
   def search(query: String): DataFrame =
-    frame.where(Kql.parse(query, s"message.$valueJsonField"))
+    hits(_.where(Kql.parse(query, s"message.$valueJsonField")))
 
-  def searchKey(key: String): DataFrame = LogQueries.searchKey(frame, key)
+  def searchKey(key: String): DataFrame = hits(LogQueries.searchKey(_, key))
 
   def searchKeyTopic(key: String, topic: String): DataFrame =
-    LogQueries.searchKeyTopic(frame, key, topic)
+    hits(LogQueries.searchKeyTopic(_, key, topic))
 
   def searchField(fieldPath: String, value: Any): DataFrame =
-    LogQueries.searchField(frame, fieldPath, value)
+    hits(LogQueries.searchField(_, fieldPath, value))
 
   def searchJson(jsonPath: String, value: String): DataFrame =
-    LogQueries.searchJson(frame, valueJsonField, jsonPath, value)
+    hits(LogQueries.searchJson(_, valueJsonField, jsonPath, value))
 
-  def tombstones(): DataFrame = LogQueries.tombstones(frame, valueJsonField)
+  def tombstones(): DataFrame =
+    hits(LogQueries.tombstones(_, valueJsonField))
 
   /**
    * Kibana's search box: a relevance-ranked match query over the record
@@ -63,11 +98,8 @@ case class Changelog(spark: SparkSession, path: String,
    * any scale.
    */
   def matchQuery(terms: Seq[String], k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.functions._
     val searchable = frame.withColumn("_text",
-      trim(regexp_replace(
-        coalesce(col(s"message.`$valueJsonField`").cast("string"), lit("")),
-        "[^a-zA-Z0-9]+", " ")))
+      trim(regexp_replace(payload, "[^a-zA-Z0-9]+", " ")))
     val ranked = graft.ext.TextAnalysis.bm25(
       searchable, "uid", "_text", terms, k)
     ranked.join(frame, "uid")
@@ -79,15 +111,11 @@ case class Changelog(spark: SparkSession, path: String,
    * `phrase` must appear consecutively in the payload's analyzed token
    * stream ([[graft.functions.PhraseMatch]]) — `"Spark streaming"`
    * matches a payload containing `spark, streaming.` the way Kibana's
-   * quoted search does. A plain map-side filter predicate: pushdown-
-   * friendly, zero shuffle, linear at any scale.
+   * quoted search does. A plain map-side filter predicate over the scan,
+   * linear at any scale; only its hits reach the uid dedup's shuffle.
    */
-  def matchPhrase(phrase: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    frame.where(graft.functions.PhraseMatch.phrase(
-      coalesce(col(s"message.`$valueJsonField`").cast("string"), lit("")),
-      phrase))
-  }
+  def matchPhrase(phrase: String): DataFrame =
+    hits(_.where(graft.functions.PhraseMatch.phrase(payload, phrase)))
 
   /** Lucene fuzzy term search (the query-bar `term~` / `term~N` suffix,
     * ES `fuzziness`): rows whose payload's analyzed token stream contains
@@ -95,27 +123,19 @@ case class Changelog(spark: SparkSession, path: String,
     * a typo'd `fuzzy("purchse")` still finds `purchase` records.
     * `maxDist = None` selects the ES AUTO schedule (term length
     * 0-2/3-5/≥6 → 0/1/2); explicit distances outside ES's 0..2 limit
-    * are REJECTED with an IllegalArgumentException at plan time. Like [[matchPhrase]], a plain map-side filter predicate
-    * ([[graft.functions.FuzzyMatch]]): zero shuffle, linear at any
-    * scale. */
-  def fuzzy(term: String, maxDist: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    frame.where(graft.functions.FuzzyMatch.fuzzy(
-      coalesce(col(s"message.`$valueJsonField`").cast("string"), lit("")),
-      term, maxDist))
-  }
+    * are REJECTED with an IllegalArgumentException at plan time. Like
+    * [[matchPhrase]], a plain map-side filter predicate
+    * ([[graft.functions.FuzzyMatch]]), linear at any scale. */
+  def fuzzy(term: String, maxDist: Option[Int] = None): DataFrame =
+    hits(_.where(graft.functions.FuzzyMatch.fuzzy(payload, term, maxDist)))
 
   /** Ordered-proximity search (ES/Lucene `span_near`, `in_order: true`):
     * like [[matchPhrase]] but tolerating up to `slop` interleaved tokens
     * between the phrase tokens — the Lucene `"a b"~N` query. */
-  def spanNear(phrase: String, slop: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    frame.where(graft.functions.PhraseMatch.near(
-      coalesce(col(s"message.`$valueJsonField`").cast("string"), lit("")),
-      phrase, slop))
-  }
+  def spanNear(phrase: String, slop: Int): DataFrame =
+    hits(_.where(graft.functions.PhraseMatch.near(payload, phrase, slop)))
 
-  def latest(): DataFrame = LogQueries.latestStatePerKey(frame)
+  def latest(): DataFrame = LogQueries.latestStatePerKey(raw)
 
   /** Register for `spark.sql` — the strict superset of Kibana's surface. */
   def asView(name: String): Unit = frame.createOrReplaceTempView(name)

@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
  * (topic, date):
  *
  *  - append mode matches the changelog model — no upsert machinery needed,
- *    the `uid` column makes replays idempotent via `dropDuplicates("uid")`
- *    at read time (or in `foreachBatch` for streaming);
+ *    the `uid` column makes replays idempotent: [[streamAppend]] drops
+ *    within-batch copies, and [[graft.query.Changelog]] drops the rest at
+ *    query time, on each query's filtered hits (only its whole-table
+ *    operations dedup every row);
  *  - (topic, date) partitioning replaces both the ES index-per-pattern
  *    layout AND rollover: queries with topic/time predicates partition-prune
  *    (at 100 TB only matching directories are even listed), and retention
@@ -112,9 +114,49 @@ object ChangelogSink {
       .mode("append")
       .parquet(path)
 
-  /** Read the changelog back (partition columns topic/date restored). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /**
+   * Read the changelog back (partition columns topic/date restored),
+   * without a schema-inference Spark job. Spark's own inference reads one
+   * footer too, but in a job, and from the first file in listing order,
+   * which the filesystem decides. Here the driver reads the footer of the
+   * first visible data file in sorted (topic, date, file name) order: one
+   * listing per directory on the way down, `.`/`_` names (staging dirs,
+   * hidden swap originals, `_SUCCESS`) skipped. Every writer of this
+   * table is Spark, so the footer carries the Spark schema under
+   * `org.apache.spark.sql.parquet.row.metadata`; `topic STRING` and
+   * `date DATE` are appended as [[append]] writes them. A table with no
+   * data file fails as `spark.read.parquet` does. The file listing stays
+   * Spark's: driver-side, unless one directory holds more subdirectories
+   * than `spark.sql.sources.parallelPartitionDiscovery.threshold`.
+   */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def firstDataFile(dir: Path): Option[Path] =
+      fs.listStatus(dir)
+        .filterNot(s => s.getPath.getName.startsWith(".") ||
+          s.getPath.getName.startsWith("_"))
+        .sortBy(_.getPath.getName).iterator
+        .map(s => if (s.isFile) Some(s.getPath) else firstDataFile(s.getPath))
+        .collectFirst { case Some(p) => p }
+    val first =
+      if (fs.exists(root) && fs.getFileStatus(root).isDirectory)
+        firstDataFile(root)
+      else None
+    first.fold(spark.read.parquet(path)) { file =>
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+      val json = try footer.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+        finally footer.close()
+      require(json != null, s"$file has no Spark schema in its footer")
+      val data = DataType.fromJson(json).asInstanceOf[StructType]
+      spark.read.schema(data
+        .add("topic", StringType).add("date", DateType)).parquet(path)
+    }
+  }
 
   /**
    * [[append]] with an ingest audit attached via `Dataset.observe` — the
@@ -144,8 +186,9 @@ object ChangelogSink {
    * append-only model this gives the reference's effectively-once story
    * (README.md:11: the topic+partition+offset id makes replays
    * idempotent) without a transactional sink: within-batch replays are
-   * dropped here, historical replays at read time via
-   * `dropDuplicates("uid")`.
+   * dropped here; copies across batches stay in the table and
+   * [[graft.query.Changelog]] drops them at query time, after each
+   * query's filter.
    */
   def streamAppend(env: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -157,43 +200,6 @@ object ChangelogSink {
       }
       .start()
 
-  /**
-   * K3 — retention: drop date partitions strictly older than `cutoff`
-   * (yyyy-MM-dd). The reference's "define some rollover conditions"
-   * (README.md:14) becomes an O(#partitions) filesystem operation — no
-   * records are read or rewritten, which is the only retention strategy
-   * that survives 100 TB.
-   */
-  /**
-   * Small-file compaction for one (topic, date) partition — the nightly
-   * job behind any streaming append sink: `foreachBatch` writes one file
-   * per micro-batch per partition, and a day of 1-minute triggers leaves
-   * 1440 tiny files whose open/footer cost dominates scans. Rewrites the
-   * partition into `ceil(bytes / targetBytes)` files, staged into a
-   * dot-prefixed temp dir (invisible to concurrent readers — Spark's file
-   * listing skips `.`/`_` paths) and swapped in with O(#files) renames.
-   * Only this partition's bytes are rewritten; a whole-table compaction is
-   * this per-partition job fanned out over partitions, so the unit of
-   * work stays bounded no matter how large the table grows. Idempotent:
-   * re-running on a compact partition is a no-op. Returns the resulting
-   * file count.
-   *
-   * Crash/failure safety: the input is pinned to the file SNAPSHOT taken
-   * up front (a file appended after the listing is neither read nor
-   * removed, so it is never duplicated or lost), and the swap runs in
-   * three checked phases — hide every original behind a dot-prefixed
-   * rename (reversible, invisible to readers), move the staged files in,
-   * then delete the hidden originals. Every rename result is checked
-   * (HDFS/local `rename` reports failure by returning false, not by
-   * throwing); any failure before the move completes first un-moves any
-   * staged files already swapped in, then restores the hidden originals,
-   * so the partition returns to exactly its pre-swap state — at no point
-   * can a reader observe missing OR duplicated rows, and a retry
-   * snapshots the original files only. Failures during the final
-   * cleanup leave only dot-prefixed garbage that readers skip. Compaction
-   * must still not run concurrently with another compaction of the SAME
-   * partition (the hide phase would race); appends are safe.
-   */
   /**
    * RIGHT TO ERASURE (GDPR art. 17 / CCPA deletion): remove every record
    * with `key` from the changelog by rewriting ONLY the (topic, date)
@@ -563,6 +569,36 @@ object ChangelogSink {
     (forward, discarded)
   }
 
+  /**
+   * Small-file compaction for one (topic, date) partition — the nightly
+   * job behind any streaming append sink: `foreachBatch` writes one file
+   * per micro-batch per partition, and a day of 1-minute triggers leaves
+   * 1440 tiny files whose open/footer cost dominates scans. Rewrites the
+   * partition into `ceil(bytes / targetBytes)` files, staged into a
+   * dot-prefixed temp dir (invisible to concurrent readers — Spark's file
+   * listing skips `.`/`_` paths) and swapped in with O(#files) renames.
+   * Only this partition's bytes are rewritten; a whole-table compaction is
+   * this per-partition job fanned out over partitions, so the unit of
+   * work stays bounded no matter how large the table grows. Idempotent:
+   * re-running on a compact partition is a no-op. Returns the resulting
+   * file count.
+   *
+   * Crash/failure safety: the input is pinned to the file SNAPSHOT taken
+   * up front (a file appended after the listing is neither read nor
+   * removed, so it is never duplicated or lost), and the swap runs in
+   * three checked phases — hide every original behind a dot-prefixed
+   * rename (reversible, invisible to readers), move the staged files in,
+   * then delete the hidden originals. Every rename result is checked
+   * (HDFS/local `rename` reports failure by returning false, not by
+   * throwing); any failure before the move completes first un-moves any
+   * staged files already swapped in, then restores the hidden originals,
+   * so the partition returns to exactly its pre-swap state — at no point
+   * can a reader observe missing OR duplicated rows, and a retry
+   * snapshots the original files only. Failures during the final
+   * cleanup leave only dot-prefixed garbage that readers skip. Compaction
+   * must still not run concurrently with another compaction of the SAME
+   * partition (the hide phase would race); appends are safe.
+   */
   def compactPartition(spark: SparkSession, path: String, topic: String,
       date: String, targetBytes: Long = 128L * 1024 * 1024): Int = {
     val part = new Path(s"$path/topic=$topic/date=$date")
@@ -723,6 +759,13 @@ object ChangelogSink {
     }
   }
 
+  /**
+   * K3 — retention: drop date partitions strictly older than `cutoff`
+   * (yyyy-MM-dd). The reference's "define some rollover conditions"
+   * (README.md:14) becomes an O(#partitions) filesystem operation — no
+   * records are read or rewritten, which is the only retention strategy
+   * that survives 100 TB.
+   */
   def dropPartitionsBefore(spark: SparkSession, path: String, cutoff: String): Int = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -694,6 +694,25 @@ class ExtSpec extends SparkSpec {
     assert(cH.except(cS).count() == 0 && cS.except(cH).count() == 0)
   }
 
+  test("forced string verification skips the eager shingle-collision " +
+      "probe: no job at construction") {
+    val corpus = graft.ingest.Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("text"))
+    corpus.schema // table open outside the counted blocks
+    for ((name, build) <- Seq[(String, Boolean => Unit)](
+        "ngramJaccardPairsOf" ->
+          (f => Dedup.ngramJaccardPairsOf(corpus, 0.5, forceStringVerify = f)),
+        "containmentPairsOf" ->
+          (f => Dedup.containmentPairsOf(corpus, 0.5, forceStringVerify = f)))) {
+      val (_, probed) = withJobCount(build(false))
+      val (_, forced) = withJobCount(build(true))
+      // the probe is the only construction-time job (two under AQE: its
+      // shuffle stage, then the result)
+      assert(probed > 0 && forced == 0,
+        s"$name: $probed jobs probed, $forced forced")
+    }
+  }
+
   test("MinHashSig native == explode + min(md5) expression reference, " +
       "element-wise, and null exactly on shingle-less docs") {
     val docs = graft.ingest.Tables.load(spark, sf, "documents")

@@ -25,6 +25,39 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf: String = "/root/testdata/sf0.001"
 
+  /** `f`'s result and the Spark jobs it started on this thread. Only jobs
+    * of a job group set for `f` count; a sentinel job run after `f`
+    * flushes the asynchronous listener bus, so the count is complete on
+    * return. */
+  protected def withJobCount[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-during-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => flushed.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val result = try f finally sc.setJobGroup(sentinel, sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job")
+      (result, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Run `f` with session confs temporarily set, restoring after. */
   protected def withSQLConf(kv: (String, String)*)(f: => Unit): Unit = {
     val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
