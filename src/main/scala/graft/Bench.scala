@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main. Runs the headline queries against
  * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line:
@@ -156,26 +154,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional arg: comma-separated entry names to bench instead of the
     // headline list (scaling probes over subsets, e.g. the sf1 probe)
     val picked = args.headOption.map(_.split(",").toSeq.map(_.trim)
       .filter(_.nonEmpty)).getOrElse(headline)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fixtures are single parquet files: with the default 128 MB split
-      // size every scan is ONE task; smaller splits parallelize the scan
-      // across the local cores (on a real cluster the same knob balances
-      // split count against task overhead)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder().getOrCreate()
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()

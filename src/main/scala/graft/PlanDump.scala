@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named entries to per-entry files —
@@ -17,17 +16,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder(8).getOrCreate()
     Files.createDirectories(Paths.get(outDir))
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
       val txt =

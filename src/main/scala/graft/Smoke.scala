@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's smoke check: run [[SparkEntry.entry]] on sf0.001
   * and print the row count (must be > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder().getOrCreate()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

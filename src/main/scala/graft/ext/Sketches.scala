@@ -153,14 +153,25 @@ object Sketches {
    * each row's 24 target buckets and hash-joining the bucket list gives
    * identical (b, row) pairs (bucket in [b-23h, b] <=> b in [bucket,
    * bucket+23h], and b must exist in the list), O(rows x 24) and
-   * skew-free.
+   * skew-free. The 24 targets are whole UTC hours apart, so the session
+   * time zone, in which the buckets were hour-truncated, must be a fixed
+   * whole-hour offset from UTC (a DST or half-hour zone would misalign
+   * or skip buckets); any other zone is refused.
    */
   private[graft] def trailingDay(df: DataFrame, buckets: DataFrame,
-      keep: String*): DataFrame =
+      keep: String*): DataFrame = {
+    val tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    val rules = java.time.ZoneId.of(tz, java.time.ZoneId.SHORT_IDS).getRules
+    require(rules.isFixedOffset &&
+        rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds % 3600 == 0,
+      "trailingDay assumes hour buckets on whole UTC hours: the session " +
+        s"time zone must be a fixed whole-hour offset from UTC, and '$tz' " +
+        "is not")
     df.select(keep.map(col) :+ explode(expr(
         "sequence(bucket, bucket + INTERVAL 23 HOURS, INTERVAL 1 HOUR)"))
         .as("b"): _*)
       .join(broadcast(buckets), "b")
+  }
 
   /** Per bucket `b` of `buckets`: the register-max merge of the hourly
     * registers `regs` over its trailing 24 h, as (`b`, `s_scaled`,

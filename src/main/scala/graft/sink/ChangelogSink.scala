@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -328,8 +328,7 @@ object ChangelogSink {
     // read). Its rows are simply NOT erased — concurrent appends during
     // erasure remain unsupported, but the failure mode is now visible
     // non-erasure (a retry re-discovers the key), never silent loss.
-    val snapshot: Map[(String, String),
-        Seq[org.apache.hadoop.fs.FileStatus]] =
+    val snapshot: Map[(String, String), Seq[FileStatus]] =
       hits.map { case (t, d, _) =>
         (t, d) -> fs.listStatus(new Path(path, s"topic=$t/date=$d"))
           // dot-files are NOT data: a crash mid-swap leaves hidden
@@ -337,9 +336,7 @@ object ChangelogSink {
           // one to spark.read as an EXPLICIT path (hidden-file filtering
           // of explicit roots is version-dependent) while the swap later
           // hides/deletes it could drop rows that were never rewritten
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")
-            && !f.getPath.getName.startsWith("."))
-          .toSeq
+          .filter(isDataFile).toSeq
       }.toMap
     val snapshotFiles = hits.flatMap { case (t, d, _) =>
       snapshot((t, d)).map(_.getPath.toString) }
@@ -361,22 +358,16 @@ object ChangelogSink {
     // deterministically from this manifest. Its presence also marks the
     // staged write as COMPLETE (it is written strictly after the write
     // job returns) — a staging dir without one is discardable debris.
-    writeManifest(fs, staging, nested = true,
-      hits.map { case (t, d, _) =>
-        val rel = s"topic=$t/date=$d"
-        val sp = new Path(staging, rel)
-        val stagedNames =
-          if (!fs.exists(sp)) Nil
-          else fs.listStatus(sp)
-            .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-            .map(_.getPath.getName).toSeq
-        (rel, snapshot((t, d)).map(_.getPath.getName), stagedNames)
-      })
-    def renameOrThrow(src: Path, dst: Path, what: String): Unit =
-      CommitOps.renameOrThrow(fs, src, dst, what, "forgetKeys")
+    val staged = hits.map { case (t, d, _) =>
+      (t, d) -> stagedFiles(fs, new Path(staging, s"topic=$t/date=$d"))
+    }.toMap
+    writeManifest(fs, staging, nested = true, hits.map { case (t, d, _) =>
+      (s"topic=$t/date=$d", snapshot((t, d)).map(_.getPath.getName),
+        staged((t, d)).map(_.getPath.getName))
+    })
     // parquet footers carry exact record counts — the audit's rows_after
     // is a metadata read per staged file, never a third data pass
-    def footerRows(f: org.apache.hadoop.fs.FileStatus): Long = {
+    def footerRows(f: FileStatus): Long = {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromStatus(f, spark.sparkContext.hadoopConfiguration)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -384,42 +375,77 @@ object ChangelogSink {
     }
     val audit = hits.map { case (topic, date, nDel) =>
       val part = new Path(s"$path/topic=$topic/date=$date")
-      val originals = snapshot((topic, date))
-      val stagedPart = new Path(staging, s"topic=$topic/date=$date")
-      val staged =
-        if (!fs.exists(stagedPart)) Array.empty[org.apache.hadoop.fs.FileStatus]
-        else fs.listStatus(stagedPart)
-          .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      val after = staged.map(footerRows).sum
-      val b = after + nDel
-      val hidden = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
-      val moved = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
-      try {
-        originals.foreach { f =>
-          val h = new Path(part, s".forgetting-${f.getPath.getName}")
-          renameOrThrow(f.getPath, h, "hide-original")
-          hidden += ((f.getPath, h))
-        }
-        staged.foreach { f =>
-          val dst = new Path(part, f.getPath.getName)
-          renameOrThrow(f.getPath, dst, "move-staged")
-          moved += ((f.getPath, dst))
-        }
-        hidden.foreach { case (_, h) => fs.delete(h, false) }
-        // fully erased AND nothing landed after the snapshot: drop the
-        // dir (a post-snapshot append keeps the partition alive)
-        if (b == nDel && fs.listStatus(part).isEmpty)
-          fs.delete(part, true)
-      } catch {
-        case e: Throwable =>
-          moved.foreach { case (src, dst) => fs.rename(dst, src) }
-          hidden.foreach { case (orig, h) => fs.rename(h, orig) }
-          throw e
-      }
+      val moveIn = staged((topic, date))
+      val b = moveIn.map(footerRows).sum + nDel
+      swap(fs, part, snapshot((topic, date)), moveIn, ".forgetting-",
+        "forgetKeys").foreach(fs.delete(_, false))
+      // fully erased AND nothing landed after the snapshot: drop the
+      // dir (a post-snapshot append keeps the partition alive)
+      if (b == nDel && fs.listStatus(part).isEmpty)
+        fs.delete(part, true)
       (topic, date, b, nDel, b - nDel)
     }
     fs.delete(staging, true)
     (audit, keyHits.toIndexedSeq)
+  }
+
+  /** A visible parquet data file: not a dot-hidden swap leftover. */
+  private def isDataFile(f: FileStatus): Boolean =
+    f.isFile && f.getPath.getName.endsWith(".parquet") &&
+      !f.getPath.getName.startsWith(".")
+
+  /** The `part-` files a staged write left in `dir` (none if absent). */
+  private def stagedFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: Path): Seq[FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir)
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-")).toSeq
+
+  /** Phases 1 and 2 of the staged swap shared by erasure and compaction
+    * (protocol on [[compactPartition]]): hide every original behind
+    * `hidePrefix`, then move every staged file into `part`. Any failure
+    * un-moves (else deletes) the staged files already moved in BEFORE it
+    * restores the originals, so a partial staged copy never stays
+    * visible beside them. Returns the hidden originals for the caller's
+    * phase 3 delete; `note` is appended to rename failure messages. */
+  private def swap(fs: org.apache.hadoop.fs.FileSystem, part: Path,
+      originals: Seq[FileStatus], staged: Seq[FileStatus],
+      hidePrefix: String, op: String, note: String = ""): Seq[Path] = {
+    def renameOrThrow(src: Path, dst: Path, what: String): Unit =
+      CommitOps.renameOrThrow(fs, src, dst, what + note, op)
+    val hidden = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
+    val moved = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
+    try {
+      originals.foreach { f =>
+        val h = new Path(part, hidePrefix + f.getPath.getName)
+        renameOrThrow(f.getPath, h, "hide-original")
+        hidden += ((f.getPath, h))
+      }
+      staged.foreach { f =>
+        val dst = new Path(part, f.getPath.getName)
+        renameOrThrow(f.getPath, dst, "move-staged")
+        moved += ((f.getPath, dst))
+      }
+    } catch {
+      case e: Throwable =>
+        moved.foreach { case (src, dst) => // un-move, else drop the copy
+          if (!fs.rename(dst, src) && !fs.delete(dst, false)) {
+            // both rollback paths failed: the staged file stays VISIBLE
+            // next to the restored originals, duplicating its rows — an
+            // operator must remove it before any retry snapshots the
+            // partition
+            val warn = new IllegalStateException(
+              s"$op rollback: staged file $dst could be " +
+                "neither moved back nor deleted; partition holds " +
+                "DUPLICATE rows until it is removed")
+            e.addSuppressed(warn)
+            ChangelogSink.log.warn(warn.getMessage)
+          }
+        }
+        hidden.foreach { case (orig, h) => fs.rename(h, orig) } // best effort
+        throw e
+    }
+    hidden.map(_._2).toSeq
   }
 
   private val ManifestName = "_MANIFEST"
@@ -469,6 +495,10 @@ object ChangelogSink {
    *    visible or hidden, no staged file landed) was REWRITTEN by a
    *    later operation — rolling forward would resurrect stale rows, so
    *    it is skipped;
+   *  - a partition with a staged file in NEITHER place was rolled back
+   *    in process by deleting a copy it could not un-move: rolling
+   *    forward without that file would drop its rows, so it is skipped
+   *    (it keeps its pre-swap originals);
    *  - a staging dir WITHOUT a manifest means the staged write itself
    *    died: nothing was ever hidden or moved, delete it outright.
    *
@@ -531,12 +561,17 @@ object ChangelogSink {
           if (fs.exists(part)) {
             val names = fs.listStatus(part).filter(_.isFile)
               .map(_.getPath.getName).toSet
+            def stagedSrc(name: String): Path =
+              if (nested) new Path(staging, s"$rel/$name")
+              else new Path(staging, name)
             val evidence =
               names.exists(n => origNames.contains(n) ||
                 origNames.contains(n.stripPrefix(hidePrefix)) &&
                   n.startsWith(hidePrefix)) ||
               names.exists(stagedNames.contains)
-            if (evidence) {
+            val lost = stagedNames.exists(n =>
+              !names.contains(n) && !fs.exists(stagedSrc(n)))
+            if (evidence && !lost) {
               // visible manifest originals = move phase never started
               // here: finish hiding them (post-snapshot appends are NOT
               // in the manifest and are never touched)
@@ -546,9 +581,7 @@ object ChangelogSink {
               }
               // move in whatever staged files have not landed yet
               stagedNames.foreach { name =>
-                val src =
-                  if (nested) new Path(staging, s"$rel/$name")
-                  else new Path(staging, name)
+                val src = stagedSrc(name)
                 val dst = new Path(part, name)
                 if (fs.exists(src) && !fs.exists(dst))
                   renameOrThrow(src, dst, "move-staged")
@@ -609,8 +642,7 @@ object ChangelogSink {
       // they are pre-swap originals, not data to re-compact — run
       // recoverStaging first; reading one explicitly here would
       // duplicate its rows into the compacted output
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")
-        && !f.getPath.getName.startsWith("."))
+      .filter(isDataFile)
     if (files.length <= 1) return files.length
     val nOut = math.max(1,
       math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
@@ -624,60 +656,16 @@ object ChangelogSink {
     val tmp = new Path(path,
       s".compact-$topic-$date-${System.nanoTime()}")
     df.repartition(nOut).write.mode("overwrite").parquet(tmp.toString)
-    val staged = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+    val staged = stagedFiles(fs, tmp)
     // manifest before any swap — [[recoverStaging]] can replay this
     // commit after a hard crash; O = the snapshot only, so files
     // appended after the listing stay untouched even through recovery
     writeManifest(fs, tmp, nested = false, Seq((s"topic=$topic/date=$date",
-      files.map(_.getPath.getName).toSeq,
-      staged.map(_.getPath.getName).toSeq)))
-    def renameOrThrow(src: Path, dst: Path, what: String): Unit =
-      CommitOps.renameOrThrow(fs, src, dst,
-        s"$what (staged output left intact at $tmp)", "compactPartition")
-    // phase 1: hide originals (reversible, readers skip dot-files);
-    // phase 2: move staged files in. Any failure rolls the partition back
-    // to EXACTLY its pre-swap state — staged files already moved in are
-    // moved back out (or deleted: they only duplicate rows the hidden
-    // originals still hold) BEFORE the originals are restored, so a
-    // partial swap can never leave originals + a partial compacted copy
-    // visible together (duplicate rows a retry would then snapshot and
-    // bake in). tmp is left for inspection/retry.
-    val hidden = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
-    val moved = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
-    try {
-      files.foreach { f =>
-        val h = new Path(part, s".compacting-${f.getPath.getName}")
-        renameOrThrow(f.getPath, h, "hide-original")
-        hidden += ((f.getPath, h))
-      }
-      staged.foreach { f =>
-        val dst = new Path(part, f.getPath.getName)
-        renameOrThrow(f.getPath, dst, "move-staged")
-        moved += ((f.getPath, dst))
-      }
-    } catch {
-      case e: Throwable =>
-        moved.foreach { case (src, dst) => // un-move, else drop the copy
-          if (!fs.rename(dst, src) && !fs.delete(dst, false)) {
-            // both rollback paths failed: the staged file stays VISIBLE
-            // next to the restored originals, duplicating its rows — an
-            // operator must remove it before any retry snapshots the
-            // partition
-            val warn = new IllegalStateException(
-              s"compactPartition rollback: staged file $dst could be " +
-                "neither moved back nor deleted; partition holds " +
-                "DUPLICATE rows until it is removed")
-            e.addSuppressed(warn)
-            ChangelogSink.log.warn(warn.getMessage)
-          }
-        }
-        hidden.foreach { case (orig, h) => fs.rename(h, orig) } // best effort
-        throw e
-    }
-    // phase 3: the partition is consistent from here — cleanup failures
-    // can only leave dot-prefixed garbage that readers never list
-    hidden.foreach { case (_, h) => fs.delete(h, false) }
+      files.map(_.getPath.getName).toSeq, staged.map(_.getPath.getName))))
+    // tmp is left for inspection/retry if the swap rolls back
+    swap(fs, part, files.toSeq, staged, ".compacting-",
+      "compactPartition", s" (staged output left intact at $tmp)")
+      .foreach(fs.delete(_, false))
     fs.delete(tmp, true)
     nOut
   }
@@ -721,9 +709,7 @@ object ChangelogSink {
       if topicDir.isDirectory && topicDir.getPath.getName.startsWith("topic=")
       dateDir <- fs.listStatus(topicDir.getPath).toSeq
       if dateDir.isDirectory && dateDir.getPath.getName.startsWith("date=")
-      files = fs.listStatus(dateDir.getPath)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")
-          && !f.getPath.getName.startsWith("."))
+      files = fs.listStatus(dateDir.getPath).filter(isDataFile)
       nOut = math.max(1,
         math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
       if files.length > 1 && nOut < files.length

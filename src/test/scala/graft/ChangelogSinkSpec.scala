@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
 import graft.sink.ChangelogSink
 
 /** A local filesystem whose renames can be made to FAIL (return false,
-  * as HDFS does) in either of compaction's swap phases — hide-original,
+  * as HDFS does) in either of the staged swap's phases — hide-original,
   * or move-staged AFTER some moves already landed (the partial-swap
-  * window where a bad rollback would leave duplicates). Instantiated by
-  * Hadoop via reflection (`fs.flaky.impl`). */
+  * window where a bad rollback would leave duplicates) — and in the
+  * rollback's un-move of a staged file back into its staging dir.
+  * Instantiated by Hadoop via reflection (`fs.flaky.impl`). */
 class FlakyRenameFs extends RawLocalFileSystem {
   override def getScheme: String = "flaky"
   override def getUri: java.net.URI = java.net.URI.create("flaky:///")
@@ -42,7 +43,12 @@ class FlakyRenameFs extends RawLocalFileSystem {
         (dst.getName.startsWith(".compacting-") ||
           dst.getName.startsWith(".forgetting-")))
       false
-    else if (FlakyRenameFs.failMovesAfter >= 0 &&
+    else if (FlakyRenameFs.failUnmoves && src.getName.startsWith("part-") &&
+        !src.toUri.getPath.contains("/_temporary/") && !underStaging(src) &&
+        underStaging(dst)) {
+      FlakyRenameFs.unmovesFailed.incrementAndGet()
+      false
+    } else if (FlakyRenameFs.failMovesAfter >= 0 &&
         dst.getName.startsWith("part-") && underStaging(src) &&
         FlakyRenameFs.movesSeen.getAndIncrement() >=
           FlakyRenameFs.failMovesAfter)
@@ -82,6 +88,11 @@ object FlakyRenameFs {
   @volatile var failHides = false
   @volatile var failMovesAfter = -1 // -1 = off; N = fail the (N+1)th move
   val movesSeen = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Fail every rename of a partition file back into a staging dir (a
+    * rollback's un-move), counting them in `unmovesFailed`; Spark's own
+    * committer renames (`_temporary` sources) are exempt. */
+  @volatile var failUnmoves = false
+  val unmovesFailed = new java.util.concurrent.atomic.AtomicInteger(0)
   /** Runs once, just before the first hide-original rename of an
     * erasure swap — the window where a concurrent append can land
     * between the snapshot listing and the swap. Receives (fs, src of
@@ -454,6 +465,64 @@ class ChangelogSinkSpec extends SparkSpec {
     assert(retryAudit.nonEmpty)
     val fin = ChangelogSink.read(spark, dir).drop("date").collect().toSet
     assert(fin == original -- subjectRows)
+  }
+
+  test("a rollback whose un-move fails deletes the staged copy: erasure " +
+      "and compaction leave the failed partition's pre-swap rows, no " +
+      "duplicates, and recovery does not roll it forward without the copy") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.flaky.impl", classOf[FlakyRenameFs].getName)
+    val local = Files.createTempDirectory("unmove").toString
+    val dir = "flaky:" + local
+    // four disjoint appends: every date partition holds distinct rows in
+    // four files, so each swap stages several files
+    val env = Pipeline.envelopeFlat(spark, sf)
+    (0 until 4).foreach(i =>
+      ChangelogSink.append(env.where(pmod($"offset", lit(4)) === i), dir))
+    // partition content through plain file: paths (parquet data is never
+    // read through the test scheme)
+    def rows(date: String): Seq[String] =
+      spark.read.parquet(s"file:$local/topic=events/date=$date")
+        .collect().map(_.toString).toSeq.sorted
+    def failingMove(date: String)(swap: => Any): Seq[String] = {
+      val before = rows(date)
+      assert(before.distinct == before)
+      FlakyRenameFs.movesSeen.set(0)
+      FlakyRenameFs.unmovesFailed.set(0)
+      // the second staged move fails, so the rollback un-moves the first
+      FlakyRenameFs.failMovesAfter = 1
+      FlakyRenameFs.failUnmoves = true
+      try {
+        val e = intercept[IllegalStateException](swap)
+        assert(e.getMessage.contains("move-staged"), e.getMessage)
+      } finally {
+        FlakyRenameFs.failMovesAfter = -1
+        FlakyRenameFs.failUnmoves = false
+      }
+      assert(FlakyRenameFs.unmovesFailed.get() >= 1,
+        "the swap failed before any staged file moved in")
+      val after = rows(date)
+      val dups = after.diff(after.distinct)
+      assert(dups.isEmpty, s"${dups.size} duplicate rows in date=$date")
+      assert(after == before)
+      after
+    }
+    // erasure swaps hit partitions in date order: the first one fails
+    val firstHit = ChangelogSink.read(spark, dir).where($"key" === "13")
+      .agg(min($"date").cast("string")).as[String].head()
+    def recovered(date: String, kept: Seq[String]): Unit = {
+      ChangelogSink.recoverStaging(spark, dir)
+      assert(rows(date) == kept,
+        s"recovery rolled date=$date forward without the deleted copy")
+    }
+    recovered(firstHit,
+      failingMove(firstHit)(ChangelogSink.forgetKey(spark, dir, "13")))
+    val date = ChangelogSink.read(spark, dir)
+      .agg(max($"date").cast("string")).as[String].head()
+    val partBytes = new java.io.File(s"$local/topic=events/date=$date")
+      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    recovered(date, failingMove(date)(ChangelogSink.compactPartition(
+      spark, dir, "events", date, partBytes / 2 + 1)))
   }
 
   test("erasure pins the file snapshot: a file appended to a hit " +

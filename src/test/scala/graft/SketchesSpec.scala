@@ -81,6 +81,24 @@ class SketchesSpec extends SparkSpec {
     }
   }
 
+  test("trailingDay refuses a session time zone that is not a fixed " +
+      "whole-hour offset from UTC") {
+    val rows = Seq("2024-01-01 05:00:00").toDF("t")
+      .select(to_timestamp($"t").as("bucket"), lit("u").as("key"))
+    val buckets = rows.select($"bucket".as("b"))
+    for (tz <- Seq("UTC", "+02:00")) withSQLConf(
+        "spark.sql.session.timeZone" -> tz) {
+      assert(Sketches.trailingDay(rows, buckets, "key").count() == 1, tz)
+    }
+    for (tz <- Seq("+05:30", "Australia/Lord_Howe")) withSQLConf(
+        "spark.sql.session.timeZone" -> tz) {
+      val e = intercept[IllegalArgumentException](
+        Sketches.trailingDay(rows, buckets, "key"))
+      assert(e.getMessage.contains("whole-hour offset") &&
+        e.getMessage.contains(tz), e.getMessage)
+    }
+  }
+
   test("cms: estimates never undercount, collisions genuinely occur, and " +
       "one probe's four cells replay driver-side") {
     val out = Sketches.cmsHeavyHitters(spark, sf)

@@ -6,18 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared SparkSession for all suites (one JVM-wide session; suites run
   * sequentially under sbt's forked test JVM). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Session.builder(4)
     .appName("graft-test")
-    // the cluster-deployment path for graft's native SQL functions: every
-    // session state built from this context resolves them (tested via
-    // newSession() in ExtSpec, which temp-function registration can't reach)
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 
