@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
+import graft.sink.BucketedTables
 
 /**
  * Deduplication operators over the `documents` corpus — the core
@@ -414,6 +415,75 @@ object Dedup {
     sig.select(col("doc_id"), col("sig"), explode(keys).as("bkey"))
   }
 
+  /** The minhash verify of every band join (x3's self-join and
+    * [[probeStored]]'s new×corpus join), over candidates aliased `l`/`r`:
+    * deduped by the (`id1`, `id2`) pair aggregation — the carried
+    * signatures are functionally dependent on the ids, so first() is
+    * deterministic — and kept at ≥ 0.5 agreeing minhashes (6dp). */
+  private def verifyBandPairs(candidates: DataFrame, numHashes: Int,
+      id1: String, id2: String): DataFrame = {
+    val agree = (0 until numHashes).map(k =>
+      when(element_at(col("sig1"), k + 1) === element_at(col("sig2"), k + 1),
+        1).otherwise(0)).reduce(_ + _)
+    candidates
+      .groupBy(col("l.doc_id").as(id1), col("r.doc_id").as(id2))
+      .agg(first(col("l.sig")).as("sig1"), first(col("r.sig")).as("sig2"))
+      .withColumn("est_jaccard",
+        round(agree.cast("double") / numHashes, 6))
+      .where(col("est_jaccard") >= 0.5)
+      .select(col(id1), col(id2), col("est_jaccard"))
+  }
+
+  /** The one MinHash-LSH probe, run by x57 (on inline corpus bands) and
+    * by x59/x62/x64/x88/x93 (on stored segments): the probe's band rows
+    * join each segment on the band key, and the verified per-segment
+    * results union (segment corpus_id spaces are disjoint), sorted. */
+  private def probeStored(probe: DataFrame, numHashes: Int,
+      segments: DataFrame*): DataFrame =
+    segments.map(s => verifyBandPairs(
+        probe.as("l").join(s.as("r"), col("l.bkey") === col("r.bkey")),
+        numHashes, "new_id", "corpus_id"))
+      .reduce(_.unionByName(_))
+      .orderBy(col("new_id"), col("corpus_id"))
+
+  /** A planted new batch: every `modulo`-th doc re-ingested verbatim
+    * under id + `idOffset`. */
+  private def planted(docs: DataFrame, idOffset: Long,
+      modulo: Int = 5): DataFrame =
+    docs.where(col("doc_id") % modulo === 0)
+      .select((col("doc_id") + idOffset).as("doc_id"), col("text"))
+
+  /** The planted new batch exploded to its band keys — the probe side
+    * (and x64/x88's appended segment) of the stored-index entries. */
+  private def plantedProbe(spark: SparkSession, dir: String,
+      numHashes: Int, rowsPerBand: Int, idOffset: Long,
+      modulo: Int = 5): DataFrame =
+    explodeBandKeys(minhashSignatures(
+        planted(Tables.load(spark, dir, "documents"), idOffset, modulo),
+        numHashes), numHashes, rowsPerBand)
+
+  /** Builds + persists the corpus minhash signature index (band-key-
+    * bucketed parquet table); returns the table name. Ingest-time cost:
+    * one `documents` scan + shingle/signature pass + the bucket write. */
+  private def buildDedupIndex(spark: SparkSession, dir: String,
+      numHashes: Int, rowsPerBand: Int): String = {
+    val table = dedupIndexTable(dir)
+    BucketedTables.writeIndex(explodeBandKeys(minhashSignatures(
+        Tables.load(spark, dir, "documents"), numHashes), numHashes,
+      rowsPerBand), table, "bkey")
+    table
+  }
+
+  private def dedupIndexTable(dir: String): String =
+    "graft_minhash_index_" + BucketedTables.indexSuffix(dir)
+
+  /** The corpus index, built once: the stored table if this session has
+    * it, else [[buildDedupIndex]]. */
+  private def corpusIndex(spark: SparkSession, dir: String,
+      numHashes: Int, rowsPerBand: Int): String =
+    BucketedTables.ensureIndex(spark, dedupIndexTable(dir))(
+      buildDedupIndex(spark, dir, numHashes, rowsPerBand))
+
   /**
    * x59 — "index once, query many" made literal: the corpus-side minhash
    * signatures of [[incrementalDedup]] are built ONCE and PERSISTED as a
@@ -427,71 +497,19 @@ object Dedup {
    * appended per ingest batch, so each day's batch pays only its own
    * shingling plus a band join whose corpus side arrives PRE-BUCKETED on
    * the join key — no corpus-side shuffle either; only the (small) batch
-   * side is exchanged to the bucket layout. Results are identical to
-   * [[incrementalDedup]] for the same planted batch, so the oracle is
+   * side is exchanged to the bucket layout. The probe is x57's own
+   * ([[probeStored]]) over the stored table, so results are identical to
+   * [[incrementalDedup]] for the same planted batch and the oracle is
    * shared.
    */
-  /** Index-table name suffix for a corpus dir: the SANITIZED FULL PATH
-    * (not a 32-bit hash — `dir.hashCode` could silently collide two
-    * corpora into one table). Shared by the dedup and ANN indexes. */
-  private[ext] def indexSuffix(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
-
-  /** Builds + persists the corpus minhash signature index (band-key-
-    * bucketed parquet table); returns the table name. Ingest-time cost:
-    * one `documents` scan + shingle/signature pass + the bucket write. */
-  private def buildDedupIndex(spark: SparkSession, dir: String,
-      numHashes: Int, rowsPerBand: Int): String = {
-    val table = "graft_minhash_index_" + indexSuffix(dir)
-    val base = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    graft.sink.BucketedTables.writeBucketed(
-      explodeBandKeys(minhashSignatures(base, numHashes), numHashes,
-        rowsPerBand),
-      table, "bkey", 8,
-      path = Some(s"${sys.props("java.io.tmpdir")}/graft_index/$table"))
-    table
-  }
-
-  /** Query-time verify join shared by the index-reuse entries: band join
-    * of the probe signatures against a stored segment, then the
-    * signature-agreement estimate over the candidate pairs. UNSORTED. */
-  private def probeStored(probe: DataFrame, stored: DataFrame,
-      numHashes: Int): DataFrame = {
-    val agree = (0 until numHashes).map(k =>
-      when(element_at(col("sig1"), k + 1) === element_at(col("sig2"), k + 1),
-        1).otherwise(0)).reduce(_ + _)
-    probe.as("l").join(stored.as("r"), col("l.bkey") === col("r.bkey"))
-      .groupBy(col("l.doc_id").as("new_id"), col("r.doc_id").as("corpus_id"))
-      .agg(first(col("l.sig")).as("sig1"), first(col("r.sig")).as("sig2"))
-      .withColumn("est_jaccard",
-        round(agree.cast("double") / numHashes, 6))
-      .where(col("est_jaccard") >= 0.5)
-      .select(col("new_id"), col("corpus_id"), col("est_jaccard"))
-  }
-
-  /** The planted new batch (every 5th doc re-ingested under a shifted id)
-    * exploded to its band keys — the probe side of x59/x62. */
-  private def plantedProbe(spark: SparkSession, dir: String,
-      numHashes: Int, rowsPerBand: Int, idOffset: Long,
-      modulo: Int = 5): DataFrame = {
-    val newBatch = Tables.load(spark, dir, "documents")
-      .where(col("doc_id") % modulo === 0)
-      .select((col("doc_id") + idOffset).as("doc_id"), col("text"))
-    explodeBandKeys(minhashSignatures(newBatch, numHashes), numHashes,
-      rowsPerBand)
-  }
-
   def dedupIndexReuse(spark: SparkSession, dir: String,
       numHashes: Int = 12, rowsPerBand: Int = 3,
       idOffset: Long = 1000000L): DataFrame = {
     // ingest-time: build + persist; query-time: only the new batch
     // touches `documents`
-    val table = buildDedupIndex(spark, dir, numHashes, rowsPerBand)
-    probeStored(
-      plantedProbe(spark, dir, numHashes, rowsPerBand, idOffset),
-      spark.table(table), numHashes)
-      .orderBy(col("new_id"), col("corpus_id"))
+    probeStored(plantedProbe(spark, dir, numHashes, rowsPerBand, idOffset),
+      numHashes, spark.table(buildDedupIndex(spark, dir, numHashes,
+        rowsPerBand)))
   }
 
   /**
@@ -505,15 +523,10 @@ object Dedup {
    */
   def dedupIndexProbe(spark: SparkSession, dir: String,
       numHashes: Int = 12, rowsPerBand: Int = 3,
-      idOffset: Long = 1000000L): DataFrame = {
-    val table = "graft_minhash_index_" + indexSuffix(dir)
-    if (!spark.catalog.tableExists(table))
-      buildDedupIndex(spark, dir, numHashes, rowsPerBand)
-    probeStored(
-      plantedProbe(spark, dir, numHashes, rowsPerBand, idOffset),
-      spark.table(table), numHashes)
-      .orderBy(col("new_id"), col("corpus_id"))
-  }
+      idOffset: Long = 1000000L): DataFrame =
+    probeStored(plantedProbe(spark, dir, numHashes, rowsPerBand, idOffset),
+      numHashes, spark.table(corpusIndex(spark, dir, numHashes,
+        rowsPerBand)))
 
   /**
    * x64 — INDEX APPEND: the index is maintained INCREMENTALLY as
@@ -529,21 +542,16 @@ object Dedup {
    */
   def dedupIndexAppend(spark: SparkSession, dir: String,
       numHashes: Int = 12, rowsPerBand: Int = 3): DataFrame = {
-    val table = "graft_minhash_index_" + indexSuffix(dir)
-    if (!spark.catalog.tableExists(table))
-      buildDedupIndex(spark, dir, numHashes, rowsPerBand)
+    val table = corpusIndex(spark, dir, numHashes, rowsPerBand)
     // append batch-1 (ids +1e6) as its own segment — idempotent overwrite
     val segTable = table + "_seg1"
-    graft.sink.BucketedTables.writeBucketed(
+    BucketedTables.writeIndex(
       plantedProbe(spark, dir, numHashes, rowsPerBand, 1000000L),
-      segTable, "bkey", 8,
-      path = Some(s"${sys.props("java.io.tmpdir")}/graft_index/$segTable"))
+      segTable, "bkey")
     // today's batch probes corpus segment + appended segment
-    val probe = plantedProbe(spark, dir, numHashes, rowsPerBand, 2000000L,
-      modulo = 7)
-    probeStored(probe, spark.table(table), numHashes)
-      .unionByName(probeStored(probe, spark.table(segTable), numHashes))
-      .orderBy(col("new_id"), col("corpus_id"))
+    probeStored(
+      plantedProbe(spark, dir, numHashes, rowsPerBand, 2000000L, 7),
+      numHashes, spark.table(table), spark.table(segTable))
   }
 
   /**
@@ -563,25 +571,18 @@ object Dedup {
    */
   def dedupIndexMerge(spark: SparkSession, dir: String,
       numHashes: Int = 12, rowsPerBand: Int = 3): DataFrame = {
-    val table = "graft_minhash_index_" + indexSuffix(dir)
-    if (!spark.catalog.tableExists(table))
-      buildDedupIndex(spark, dir, numHashes, rowsPerBand)
-    val segTable = table + "_seg1"
-    if (!spark.catalog.tableExists(segTable))
-      graft.sink.BucketedTables.writeBucketed(
+    val table = corpusIndex(spark, dir, numHashes, rowsPerBand)
+    val segTable = BucketedTables.ensureIndex(spark, table + "_seg1")(
+      BucketedTables.writeIndex(
         plantedProbe(spark, dir, numHashes, rowsPerBand, 1000000L),
-        segTable, "bkey", 8,
-        path = Some(s"${sys.props("java.io.tmpdir")}/graft_index/$segTable"))
+        table + "_seg1", "bkey"))
     val mergedTable = table + "_merged1"
-    graft.sink.BucketedTables.writeBucketed(
+    BucketedTables.writeIndex(
       spark.table(table).unionByName(spark.table(segTable)),
-      mergedTable, "bkey", 8,
-      path = Some(
-        s"${sys.props("java.io.tmpdir")}/graft_index/$mergedTable"))
-    val probe = plantedProbe(spark, dir, numHashes, rowsPerBand, 2000000L,
-      modulo = 7)
-    probeStored(probe, spark.table(mergedTable), numHashes)
-      .orderBy(col("new_id"), col("corpus_id"))
+      mergedTable, "bkey")
+    probeStored(
+      plantedProbe(spark, dir, numHashes, rowsPerBand, 2000000L, 7),
+      numHashes, spark.table(mergedTable))
   }
 
   /**
@@ -602,12 +603,8 @@ object Dedup {
    */
   def streamingIndexAppend(spark: SparkSession, dir: String,
       numHashes: Int = 12, rowsPerBand: Int = 3): DataFrame = {
-    val table = "graft_minhash_index_" + indexSuffix(dir)
-    if (!spark.catalog.tableExists(table))
-      buildDedupIndex(spark, dir, numHashes, rowsPerBand)
-    val newBatch = Tables.load(spark, dir, "documents")
-      .where(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    val table = corpusIndex(spark, dir, numHashes, rowsPerBand)
+    val newBatch = planted(Tables.load(spark, dir, "documents"), 1000000L)
     val streamSegs = graft.streaming.StreamPipeline.Replay(spark) { r =>
       val segPath = s"${r.work}/segments"
       def commit(batch: DataFrame, batchId: Long): Unit =
@@ -629,11 +626,9 @@ object Dedup {
         .select(col("doc_id"), col("sig"), col("bkey"))
         .localCheckpoint() // the probe result must outlive the work dir
     }
-    val probe = plantedProbe(spark, dir, numHashes, rowsPerBand,
-      2000000L, modulo = 7)
-    probeStored(probe, spark.table(table), numHashes)
-      .unionByName(probeStored(probe, streamSegs, numHashes))
-      .orderBy(col("new_id"), col("corpus_id"))
+    probeStored(
+      plantedProbe(spark, dir, numHashes, rowsPerBand, 2000000L, 7),
+      numHashes, spark.table(table), streamSegs)
   }
 
   /**
@@ -647,17 +642,17 @@ object Dedup {
    * index you append to, and each day's batch pays only its own
    * candidates. The batch is planted deterministically (every 5th doc
    * re-ingested verbatim under a shifted id), so every planted doc must
-   * rediscover its source at signature agreement 1.0.
+   * rediscover its source at signature agreement 1.0. It runs the same
+   * probe ([[probeStored]]) as the stored-index entries x59–x93, over
+   * corpus bands computed inline instead of read from the stored index.
    */
   def incrementalDedup(spark: SparkSession, dir: String,
       numHashes: Int = 12, rowsPerBand: Int = 3,
       idOffset: Long = 1000000L): DataFrame = {
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val newBatch = base.where(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + idOffset).as("doc_id"), col("text"))
     val all = base.withColumn("is_new", lit(false))
-      .unionByName(newBatch.withColumn("is_new", lit(true)))
+      .unionByName(planted(base, idOffset).withColumn("is_new", lit(true)))
     // fused one-pass native signature — see minhashSignatures; persisted
     // so the new-vs-corpus band join's two sides share one signature pass
     // (see minhashPairsOf)
@@ -665,27 +660,9 @@ object Dedup {
       graft.functions.MinHashSig.sig(col("text"), numHashes, 3).as("sig"))
       .where(col("sig").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val bandKeys = array((0 until numHashes / rowsPerBand).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(k => element_at(col("sig"), k + 1))
-      xxhash64(lit(b) +: cols: _*)
-    }: _*)
-    val bands = sig.select(col("doc_id"), col("is_new"), col("sig"),
-      explode(bandKeys).as("bkey"))
-    val l = bands.where(col("is_new")).as("l")
-    val r = bands.where(!col("is_new")).as("r")
-    val agree = (0 until numHashes).map(k =>
-      when(element_at(col("sig1"), k + 1) === element_at(col("sig2"), k + 1),
-        1).otherwise(0))
-      .reduce(_ + _)
-    l.join(r, col("l.bkey") === col("r.bkey"))
-      .groupBy(col("l.doc_id").as("new_id"), col("r.doc_id").as("corpus_id"))
-      .agg(first(col("l.sig")).as("sig1"), first(col("r.sig")).as("sig2"))
-      .withColumn("est_jaccard",
-        round(agree.cast("double") / numHashes, 6))
-      .where(col("est_jaccard") >= 0.5)
-      .select(col("new_id"), col("corpus_id"), col("est_jaccard"))
-      .orderBy(col("new_id"), col("corpus_id"))
+    def bands(side: Column): DataFrame =
+      explodeBandKeys(sig.where(side), numHashes, rowsPerBand)
+    probeStored(bands(col("is_new")), numHashes, bands(!col("is_new")))
   }
 
   /**
@@ -706,7 +683,9 @@ object Dedup {
 
   /** [[minhashLshPairs]] over any `(doc_id, text)` frame, UNSORTED — the
     * form a composed pipeline (x60) embeds mid-plan, where an interior
-    * ORDER BY would only add a pointless exchange. */
+    * ORDER BY would only add a pointless exchange. Its verify is the one
+    * [[probeStored]] runs ([[verifyBandPairs]]), over the band SELF-join
+    * (`l.doc_id < r.doc_id`) instead of a new×corpus join. */
   private[graft] def minhashPairsOf(docs: DataFrame,
       numHashes: Int, rowsPerBand: Int): DataFrame = {
     // the signature is computed ONCE: one aggregation produces the full
@@ -720,7 +699,7 @@ object Dedup {
     // band index inside the hash keeps different bands from colliding).
     // Near-identical grouping to the oracle's string banding: a 2⁻⁶⁴
     // cross-band hash collision could only ADD a candidate, which the
-    // signature-agreement verify below then scores on the REAL signatures
+    // signature-agreement verify then scores on the REAL signatures
     // — a spurious candidate whose overall signature agreement ALSO clears
     // the 0.5 threshold would be a pair the string-banded oracle lacks
     // (accepted: ~2⁻⁶⁴ per pair and further gated by the agreement test;
@@ -735,23 +714,10 @@ object Dedup {
     val sig = minhashSignatures(docs, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val bands = explodeBandKeys(sig, numHashes, rowsPerBand)
-    val l = bands.as("l"); val r = bands.as("r")
-    // candidates deduped by the pair-key aggregation; the carried
-    // signatures are functionally dependent on the doc ids, so first() is
-    // deterministic. Verify: fraction of agreeing minhashes.
-    val agree = (0 until numHashes).map(k =>
-      when(element_at(col("sig1"), k + 1) === element_at(col("sig2"), k + 1),
-        1).otherwise(0))
-      .reduce(_ + _)
-    l.join(r,
+    verifyBandPairs(bands.as("l").join(bands.as("r"),
         col("l.bkey") === col("r.bkey") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .groupBy(col("l.doc_id").as("d1"), col("r.doc_id").as("d2"))
-      .agg(first(col("l.sig")).as("sig1"), first(col("r.sig")).as("sig2"))
-      .withColumn("est_jaccard",
-        round(agree.cast("double") / numHashes, 6))
-      .where(col("est_jaccard") >= 0.5)
-      .select(col("d1"), col("d2"), col("est_jaccard"))
+          col("l.doc_id") < col("r.doc_id")),
+      numHashes, "d1", "d2")
   }
 
   /**

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
+import graft.sink.BucketedTables
 
 /**
  * Similarity search over the `embeddings` table (Array[Float] vectors).
@@ -32,6 +33,24 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimilarity.cosine(a, b)
 
+  /** The IVF bucket of a vector: the index of its nearest centroid
+    * ([[graft.functions.NearestCentroid]]), as a long. */
+  private def bucketOf(vec: Column, centroids: Seq[Seq[Double]]): Column =
+    graft.functions.NearestCentroid.nearest(vec, centroids)
+      .getField("bucket").cast("long").as("bucket")
+
+  /** Per-query top-k of a scored `(query_id, cand_id, sim, ...)` frame:
+    * ranked by `sim` DESC then `cand_id`, the first `k` kept as
+    * (`cols`, rn), sorted by (query_id, rn). */
+  private def topK(scored: DataFrame, k: Int, cols: String*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("cand_id"))
+    scored.withColumn("rn", row_number().over(w))
+      .where(col("rn") <= k)
+      .select((cols :+ "rn").map(col): _*)
+      .orderBy(col("query_id"), col("rn"))
+  }
+
   /** Exact top-k neighbors for the query vectors (vec_id < nQueries). */
   def knnBrute(spark: SparkSession, dir: String,
       nQueries: Int = 10, k: Int = 5): DataFrame = {
@@ -43,12 +62,7 @@ object Similarity {
     val scored = cands.crossJoin(broadcast(queries))
       .where(col("cand_id") =!= col("query_id"))
       .withColumn("sim", round(cosine(col("q"), col("c")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("cand_id"), col("sim"), col("rn"))
-      .orderBy(col("query_id"), col("rn"))
+    topK(scored, k, "query_id", "cand_id", "sim")
   }
 
   /**
@@ -74,13 +88,7 @@ object Similarity {
     val scored = cands.crossJoin(broadcast(queries))
       .where(col("c_label") =!= col("q_label"))
       .withColumn("sim", round(cosine(col("q"), col("c")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("q_label"), col("cand_id"),
-        col("c_label"), col("sim"), col("rn"))
-      .orderBy(col("query_id"), col("rn"))
+    topK(scored, k, "query_id", "q_label", "cand_id", "c_label", "sim")
   }
 
   /**
@@ -247,9 +255,6 @@ object Similarity {
       nProbe: Int = 2, iterations: Int = 2): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = kmeansCentroids(emb, nCentroids, iterations)
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"), centroids)
-    val assigned = emb.select(col("vec_id"), col("embedding"),
-      nc.getField("bucket").cast("long").as("bucket"))
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("csim").desc, col("centroid_id"))
     val probes = emb.where(col("vec_id") < nQueries).limit(nQueries)
@@ -262,18 +267,13 @@ object Similarity {
       .where(col("prn") <= nProbe)
       .select(col("query_id"), col("q"),
         col("centroid_id").cast("long").as("bucket"))
-    val scored = assigned
+    val scored = emb
       .select(col("vec_id").as("cand_id"), col("embedding").as("c"),
-        col("bucket"))
+        bucketOf(col("embedding"), centroids))
       .join(broadcast(probes), "bucket")
       .where(col("cand_id") =!= col("query_id"))
       .withColumn("sim", round(cosine(col("q"), col("c")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("cand_id"), col("sim"), col("rn"))
-      .orderBy(col("query_id"), col("rn"))
+    topK(scored, k, "query_id", "cand_id", "sim")
   }
 
   /**
@@ -307,7 +307,7 @@ object Similarity {
     val nc = graft.functions.NearestCentroid.nearest(col("embedding"),
       centroids)
     val asg = emb.select(col("vec_id"), col("embedding"),
-      nc.getField("bucket").cast("long").as("bucket"),
+      bucketOf(col("embedding"), centroids),
       nc.getField("csim").as("csim"))
     val l = asg.select(col("bucket"), col("vec_id"), col("embedding"),
       col("csim"))
@@ -360,10 +360,8 @@ object Similarity {
       nCentroids: Int, iterations: Int, k: Int): (DataFrame, DataFrame) = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = kmeansCentroids(emb, nCentroids, iterations)
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"),
-      centroids)
     val asg = emb.select(col("vec_id"), col("embedding"),
-      nc.getField("bucket").cast("long").as("bucket"))
+      bucketOf(col("embedding"), centroids))
     val other = asg.select(col("bucket").as("o_bucket"),
       col("vec_id").as("o_id"), col("embedding").as("o_emb"))
     val wk = Window.partitionBy(col("vec_id"))
@@ -633,6 +631,58 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
+  /** Builds + persists the IVF index (k-means centroids parquet +
+    * bucketed assignment table); returns the assignment-table name. */
+  private def buildAnnIndex(spark: SparkSession, dir: String,
+      nCentroids: Int, iterations: Int): String = {
+    val (idxTable, centName) = annIndexNames(dir)
+    val emb = Tables.load(spark, dir, "embeddings")
+    val centroids = kmeansCentroids(emb, nCentroids, iterations)
+    BucketedTables.writeIndex(
+      emb.select(col("vec_id"), col("embedding"),
+        bucketOf(col("embedding"), centroids)),
+      idxTable, "bucket")
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+      .toDF("centroid_id", "centroid")
+      .write.mode("overwrite")
+      .parquet(BucketedTables.indexPath(centName))
+    idxTable
+  }
+
+  /** The stored IVF index's (assignment table, centroids parquet) names. */
+  private def annIndexNames(dir: String): (String, String) = {
+    val suffix = BucketedTables.indexSuffix(dir)
+    (s"graft_ivf_index_$suffix", s"graft_ivf_centroids_$suffix")
+  }
+
+  /** The stored IVF index, built once: its assignment table if the table
+    * and its centroids are ready, else [[buildAnnIndex]]. */
+  private def annIndex(spark: SparkSession, dir: String,
+      nCentroids: Int, iterations: Int): String = {
+    val (idxTable, centName) = annIndexNames(dir)
+    BucketedTables.ensureIndex(spark, idxTable, centName)(
+      buildAnnIndex(spark, dir, nCentroids, iterations))
+  }
+
+  /** The one IVF probe over a `(vec_id, embedding, bucket)` assignment
+    * frame — x6's inline one ([[annIvf]]) or x61/x63's stored table: the
+    * first `nQueries` vectors probe only their own bucket (the broadcast
+    * equi-join that makes the search sublinear per query), top-k each. */
+  private def probeAnnIndex(assigned: DataFrame, nQueries: Int,
+      k: Int): DataFrame = {
+    val queries = assigned.where(col("vec_id") < nQueries).limit(nQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
+        col("bucket"))
+    val scored = assigned
+      .select(col("vec_id").as("cand_id"), col("embedding").as("c"),
+        col("bucket"))
+      .join(broadcast(queries), "bucket")
+      .where(col("cand_id") =!= col("query_id"))
+      .withColumn("sim", round(cosine(col("q"), col("c")), 6))
+    topK(scored, k, "query_id", "bucket", "cand_id", "sim")
+  }
+
   /**
    * x61 — "index once, query many" for ANN (the IVF counterpart of
    * [[graft.ext.Dedup.dedupIndexReuse]]): the expensive build — Lloyd
@@ -644,60 +694,15 @@ object Similarity {
    * query time NOTHING rescans `embeddings` or reruns k-means: queries
    * probe the STORED assignment table (their bucket is already in the
    * index; a brand-new out-of-corpus query would assign itself against
-   * the stored centroid table — k×dim, a broadcast scalar). Identical
-   * result contract to [[annIvf]] — the oracle is shared.
+   * the stored centroid table — k×dim, a broadcast scalar). The probe is
+   * x6's own ([[probeAnnIndex]]), so the result contract is [[annIvf]]'s
+   * and the oracle is shared.
    */
-  /** Builds + persists the IVF index (k-means centroids table + bucketed
-    * assignment table); returns the assignment-table name. */
-  private def buildAnnIndex(spark: SparkSession, dir: String,
-      nCentroids: Int, iterations: Int): String = {
-    val suffix = Dedup.indexSuffix(dir)
-    val idxTable = s"graft_ivf_index_$suffix"
-    val centTable = s"graft_ivf_centroids_$suffix"
-    val tmp = sys.props("java.io.tmpdir")
-    val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = kmeansCentroids(emb, nCentroids, iterations)
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"), centroids)
-    graft.sink.BucketedTables.writeBucketed(
-      emb.select(col("vec_id"), col("embedding"),
-        nc.getField("bucket").cast("long").as("bucket")),
-      idxTable, "bucket", 8, path = Some(s"$tmp/graft_index/$idxTable"))
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-      .toDF("centroid_id", "centroid")
-      .write.mode("overwrite")
-      .parquet(s"$tmp/graft_index/$centTable")
-    idxTable
-  }
-
-  /** Query-time probe of the stored assignment table — no embeddings
-    * scan, no k-means rerun. */
-  private def probeAnnIndex(spark: SparkSession, idxTable: String,
-      nQueries: Int, k: Int): DataFrame = {
-    val assigned = spark.table(idxTable)
-    val queries = assigned.where(col("vec_id") < nQueries).limit(nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        col("bucket"))
-    val scored = assigned
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c"),
-        col("bucket"))
-      .join(broadcast(queries), "bucket")
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", round(cosine(col("q"), col("c")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("bucket"), col("cand_id"), col("sim"),
-        col("rn"))
-      .orderBy(col("query_id"), col("rn"))
-  }
-
   def annIndexReuse(spark: SparkSession, dir: String,
       nCentroids: Int = 8, nQueries: Int = 10, k: Int = 3,
       iterations: Int = 2): DataFrame =
-    probeAnnIndex(spark,
-      buildAnnIndex(spark, dir, nCentroids, iterations), nQueries, k)
+    probeAnnIndex(spark.table(
+      buildAnnIndex(spark, dir, nCentroids, iterations)), nQueries, k)
 
   /**
    * x63 — the PROBE-ONLY side of x61: reuses the stored IVF index if
@@ -709,12 +714,9 @@ object Similarity {
    */
   def annIndexProbe(spark: SparkSession, dir: String,
       nCentroids: Int = 8, nQueries: Int = 10, k: Int = 3,
-      iterations: Int = 2): DataFrame = {
-    val idxTable = s"graft_ivf_index_${Dedup.indexSuffix(dir)}"
-    if (!spark.catalog.tableExists(idxTable))
-      buildAnnIndex(spark, dir, nCentroids, iterations)
-    probeAnnIndex(spark, idxTable, nQueries, k)
-  }
+      iterations: Int = 2): DataFrame =
+    probeAnnIndex(spark.table(annIndex(spark, dir, nCentroids, iterations)),
+      nQueries, k)
 
   /**
    * x68 — IVF SEGMENT-APPEND maintenance (the ANN counterpart of
@@ -736,40 +738,28 @@ object Similarity {
    */
   def annIndexAppend(spark: SparkSession, dir: String,
       nCentroids: Int = 8, k: Int = 3, iterations: Int = 2): DataFrame = {
-    val suffix = Dedup.indexSuffix(dir)
-    val idxTable = s"graft_ivf_index_$suffix"
-    if (!spark.catalog.tableExists(idxTable))
-      buildAnnIndex(spark, dir, nCentroids, iterations)
-    val tmp = sys.props("java.io.tmpdir")
+    val idxTable = annIndex(spark, dir, nCentroids, iterations)
     // stored centroids: k×dim, the bounded broadcast-scalar collect
-    val stored = spark.read.parquet(s"$tmp/graft_index/graft_ivf_centroids_$suffix")
+    val stored = spark.read
+      .parquet(BucketedTables.indexPath(annIndexNames(dir)._2))
       .orderBy(col("centroid_id")).collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
-    def bucketOf(c: Column): Column = graft.functions.NearestCentroid
-      .nearest(c, stored).getField("bucket").cast("long")
     val emb = Tables.load(spark, dir, "embeddings")
     val segTable = idxTable + "_seg1"
-    graft.sink.BucketedTables.writeBucketed(
+    BucketedTables.writeIndex(
       emb.where(col("vec_id") % 5 === 0)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"),
-          bucketOf(col("embedding")).as("bucket")),
-      segTable, "bucket", 8, path = Some(s"$tmp/graft_index/$segTable"))
+          bucketOf(col("embedding"), stored)),
+      segTable, "bucket")
     val queries = emb.where(col("vec_id") % 7 === 0)
       .select((col("vec_id") + 2000000L).as("query_id"),
-        col("embedding").as("q"), bucketOf(col("embedding")).as("bucket"))
-    val assigned = spark.table(idxTable).unionByName(spark.table(segTable))
-    val scored = assigned
+        col("embedding").as("q"), bucketOf(col("embedding"), stored))
+    val scored = spark.table(idxTable).unionByName(spark.table(segTable))
       .select(col("vec_id").as("cand_id"), col("embedding").as("c"),
         col("bucket"))
       .join(broadcast(queries), "bucket")
       .withColumn("sim", round(cosine(col("q"), col("c")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("bucket"), col("cand_id"), col("sim"),
-        col("rn"))
-      .orderBy(col("query_id"), col("rn"))
+    topK(scored, k, "query_id", "bucket", "cand_id", "sim")
   }
 
   /**
@@ -998,37 +988,18 @@ object Similarity {
 
   /** IVF-bucketed ANN: k-means centroids ([[kmeansCentroids]], 2 Lloyd
     * iterations seeded from `vec_id < nCentroids`), zero-shuffle
-    * per-row assignment, probe only the query's bucket. */
+    * per-row assignment, probe only the query's bucket. The probe is the
+    * stored-index entries' own ([[probeAnnIndex]], x61/x63), run on the
+    * inline assignment instead of the stored table. */
   def annIvf(spark: SparkSession, dir: String,
       nCentroids: Int = 8, nQueries: Int = 10, k: Int = 3,
       iterations: Int = 2): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = kmeansCentroids(emb, nCentroids, iterations)
-
     // nearest-centroid assignment: one map-only pass over the broadcast
     // centroid matrix — no crossJoin, no window sort, no shuffle
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"), centroids)
-    val assigned = emb.select(col("vec_id"), col("embedding"),
-      nc.getField("bucket").cast("long").as("bucket"))
-
-    val queries = assigned.where(col("vec_id") < nQueries).limit(nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        col("bucket"))
-    // probe ONLY the query's bucket — this equi-join on bucket is the
-    // pruning step that makes the search sublinear per query
-    val scored = assigned
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c"),
-        col("bucket"))
-      .join(broadcast(queries), "bucket")
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", round(cosine(col("q"), col("c")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("bucket"), col("cand_id"), col("sim"),
-        col("rn"))
-      .orderBy(col("query_id"), col("rn"))
+    probeAnnIndex(emb.select(col("vec_id"), col("embedding"),
+      bucketOf(col("embedding"), centroids)), nQueries, k)
   }
 
   /**
@@ -1054,9 +1025,7 @@ object Similarity {
       nQueries: Int = 10, k: Int = 3, iterations: Int = 2): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = kmeansCentroids(emb, nCentroids, iterations)
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"),
-      centroids)
-    val bucket = nc.getField("bucket").cast("long").as("bucket")
+    val bucket = bucketOf(col("embedding"), centroids)
     // PRE-filter: the predicate lands on the candidate scan itself
     // (parquet-pushed), before any assignment or scoring work
     val cands = emb.where(col("label").isin(labels: _*))
@@ -1068,13 +1037,7 @@ object Similarity {
     val scored = cands.join(broadcast(queries), "bucket")
       .where(col("cand_id") =!= col("query_id"))
       .withColumn("sim", round(cosine(col("q"), col("c")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("bucket"), col("cand_id"),
-        col("label"), col("sim"), col("rn"))
-      .orderBy(col("query_id"), col("rn"))
+    topK(scored, k, "query_id", "bucket", "cand_id", "label", "sim")
   }
 
   /**
@@ -1502,10 +1465,8 @@ object Similarity {
     val subDim = 64 / subspaces
     val (centroids, books) =
       trainCoarseAndPq(emb, nCentroids, subspaces, k, subDim, iterations)
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"),
-      centroids)
     val cands = emb.select(col("vec_id").as("cand_id"),
-        nc.getField("bucket").cast("long").as("bucket"),
+        bucketOf(col("embedding"), centroids),
         graft.functions.PqAssign.assign(col("embedding"), books)
           .getField("codes").as("cs"))
       .select(Seq(col("cand_id"), col("bucket")) ++
@@ -1513,60 +1474,66 @@ object Similarity {
           element_at(col("cs"), s + 1).cast("long").as(s"c$s")): _*)
     val queries = emb.where(col("vec_id") < nQueries).limit(nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        nc.getField("bucket").cast("long").as("bucket"))
+        bucketOf(col("embedding"), centroids))
     adcTopK(cands, queries, books, subDim, topK)
   }
 
   /** Builds + persists the IVF+PQ index: the (vec_id, embedding,
     * bucket, c0..cS) table bucketed on the IVF key, the flattened
     * codebook table, AND the coarse centroids — the piece a serving
-    * deployment needs to assign vectors it has never seen (x131).
-    * Returns (indexTable, codebookPath). */
+    * deployment needs to assign vectors it has never seen (x131). */
   private def buildIvfPqIndex(spark: SparkSession, dir: String,
-      nCentroids: Int, iterations: Int, subspaces: Int,
-      k: Int): (String, String) = {
-    val suffix = Dedup.indexSuffix(dir)
-    val idxTable = s"graft_ivfpq_index_$suffix"
-    val cbPath =
-      s"${sys.props("java.io.tmpdir")}/graft_index/graft_ivfpq_cb_$suffix"
-    val ctPath =
-      s"${sys.props("java.io.tmpdir")}/graft_index/graft_ivfpq_ct_$suffix"
+      nCentroids: Int, iterations: Int, subspaces: Int, k: Int): Unit = {
+    val (idxTable, cbName, ctName) = ivfPqNames(dir)
     val emb = Tables.load(spark, dir, "embeddings")
     val subDim = 64 / subspaces
     val (centroids, books) =
       trainCoarseAndPq(emb, nCentroids, subspaces, k, subDim, iterations)
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"),
-      centroids)
-    graft.sink.BucketedTables.writeBucketed(
+    BucketedTables.writeIndex(
       emb.select(col("vec_id"), col("embedding"),
-          nc.getField("bucket").cast("long").as("bucket"),
+          bucketOf(col("embedding"), centroids),
           graft.functions.PqAssign.assign(col("embedding"), books)
             .getField("codes").as("cs"))
         .select(Seq(col("vec_id"), col("embedding"), col("bucket")) ++
           (0 until subspaces).map(s =>
             element_at(col("cs"), s + 1).cast("long").as(s"c$s")): _*),
-      idxTable, "bucket", 8,
-      path = Some(s"${sys.props("java.io.tmpdir")}/graft_index/$idxTable"))
+      idxTable, "bucket")
     import spark.implicits._
     books.zipWithIndex.flatMap { case (cs, s) =>
       cs.zipWithIndex.flatMap { case (cv, c) =>
         cv.zipWithIndex.map { case (v, pos) => (s, c, pos, v) } } }
       .toDF("s", "c", "pos", "v")
-      .write.mode("overwrite").parquet(cbPath)
+      .write.mode("overwrite").parquet(BucketedTables.indexPath(cbName))
     centroids.zipWithIndex.flatMap { case (cv, b) =>
       cv.zipWithIndex.map { case (v, pos) => (b, pos, v) } }
       .toDF("centroid_id", "pos", "v")
-      .write.mode("overwrite").parquet(ctPath)
-    (idxTable, cbPath)
+      .write.mode("overwrite").parquet(BucketedTables.indexPath(ctName))
   }
 
-  /** A persisted index artifact counts only when its parquet COMMITTED
-    * (`_SUCCESS` present): a pre-round-14 build that never wrote the
-    * centroids, or a crash mid-write, must trigger a rebuild instead of
-    * a raw path-does-not-exist failure downstream (the stored table and
-    * the side parquets are one atomic artifact set or nothing). */
-  private def parquetCommitted(path: String): Boolean =
-    new java.io.File(path, "_SUCCESS").exists()
+  /** The stored IVF+PQ artifacts' (index table, codebook parquet,
+    * centroids parquet) names. */
+  private def ivfPqNames(dir: String): (String, String, String) = {
+    val suffix = BucketedTables.indexSuffix(dir)
+    (s"graft_ivfpq_index_$suffix", s"graft_ivfpq_cb_$suffix",
+      s"graft_ivfpq_ct_$suffix")
+  }
+
+  /** The stored IVF+PQ index of x102/x131, built once
+    * ([[buildIvfPqIndex]] unless the table, codebooks and centroids are
+    * all ready): the stored (vec_id, embedding, bucket, c0..cS) frame, its
+    * ADC candidate projection and the reloaded codebooks. */
+  private def ivfPqIndex(spark: SparkSession, dir: String, nCentroids: Int,
+      iterations: Int, subspaces: Int, k: Int)
+      : (DataFrame, DataFrame, Seq[Seq[Seq[Double]]]) = {
+    val (idxTable, cbName, ctName) = ivfPqNames(dir)
+    BucketedTables.ensureIndex(spark, idxTable, cbName, ctName)(
+      buildIvfPqIndex(spark, dir, nCentroids, iterations, subspaces, k))
+    val assigned = spark.table(idxTable)
+    val cands = assigned.select(Seq(col("vec_id").as("cand_id"),
+      col("bucket")) ++ (0 until subspaces).map(s => col(s"c$s")): _*)
+    (assigned, cands,
+      loadCodebooks(spark, BucketedTables.indexPath(cbName), subspaces, k))
+  }
 
   /**
    * x102 — the PROBE-ONLY side of x97's IVF+PQ (the x62/x63 lifecycle
@@ -1583,24 +1550,12 @@ object Similarity {
   def ivfPqProbe(spark: SparkSession, dir: String, nCentroids: Int = 8,
       iterations: Int = 2, subspaces: Int = 4, k: Int = 4,
       nQueries: Int = 10, topK: Int = 5): DataFrame = {
-    val suffix = Dedup.indexSuffix(dir)
-    val idxTable = s"graft_ivfpq_index_$suffix"
-    val cbPath =
-      s"${sys.props("java.io.tmpdir")}/graft_index/graft_ivfpq_cb_$suffix"
-    val ctPath =
-      s"${sys.props("java.io.tmpdir")}/graft_index/graft_ivfpq_ct_$suffix"
-    if (!spark.catalog.tableExists(idxTable) ||
-        !parquetCommitted(cbPath) || !parquetCommitted(ctPath))
-      buildIvfPqIndex(spark, dir, nCentroids, iterations, subspaces, k)
-    val subDim = 64 / subspaces
-    val books = loadCodebooks(spark, cbPath, subspaces, k)
-    val assigned = spark.table(idxTable)
-    val cands = assigned.select(Seq(col("vec_id").as("cand_id"),
-      col("bucket")) ++ (0 until subspaces).map(s => col(s"c$s")): _*)
+    val (assigned, cands, books) =
+      ivfPqIndex(spark, dir, nCentroids, iterations, subspaces, k)
     val queries = assigned.where(col("vec_id") < nQueries).limit(nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"),
         col("bucket"))
-    adcTopK(cands, queries, books, subDim, topK)
+    adcTopK(cands, queries, books, 64 / subspaces, topK)
   }
 
   /** Reads the flattened PQ codebook parquet back into the in-memory
@@ -1643,25 +1598,14 @@ object Similarity {
   def ivfPqServe(spark: SparkSession, dir: String, nCentroids: Int = 8,
       iterations: Int = 2, subspaces: Int = 4, k: Int = 4,
       nQueries: Int = 10, topK: Int = 5): DataFrame = {
-    val suffix = Dedup.indexSuffix(dir)
-    val idxTable = s"graft_ivfpq_index_$suffix"
-    val cbPath =
-      s"${sys.props("java.io.tmpdir")}/graft_index/graft_ivfpq_cb_$suffix"
-    val ctPath =
-      s"${sys.props("java.io.tmpdir")}/graft_index/graft_ivfpq_ct_$suffix"
-    if (!spark.catalog.tableExists(idxTable) ||
-        !parquetCommitted(cbPath) || !parquetCommitted(ctPath))
-      buildIvfPqIndex(spark, dir, nCentroids, iterations, subspaces, k)
-    val subDim = 64 / subspaces
-    val books = loadCodebooks(spark, cbPath, subspaces, k)
-    val centroids: Seq[Seq[Double]] = spark.read.parquet(ctPath)
+    val (assigned, cands, books) =
+      ivfPqIndex(spark, dir, nCentroids, iterations, subspaces, k)
+    val centroids: Seq[Seq[Double]] = spark.read
+      .parquet(BucketedTables.indexPath(ivfPqNames(dir)._3))
       .select(col("centroid_id"), col("pos"), col("v"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toSeq)
-    val assigned = spark.table(idxTable)
-    val cands = assigned.select(Seq(col("vec_id").as("cand_id"),
-      col("bucket")) ++ (0 until subspaces).map(s => col(s"c$s")): _*)
     // unseen query vectors: mean of stored pairs (2i, 2i+1), i < nQueries
     val a = assigned.where(col("vec_id") < 2 * nQueries &&
         col("vec_id") % 2 === 0)
@@ -1672,10 +1616,9 @@ object Similarity {
     val queries = a.join(b, "query_id")
       .withColumn("q", zip_with(col("ea"), col("eb"),
         (x, y) => (x.cast("double") + y.cast("double")) / lit(2)))
-      .withColumn("bucket", graft.functions.NearestCentroid
-        .nearest(col("q"), centroids).getField("bucket").cast("long"))
-      .select(col("query_id"), col("q"), col("bucket"))
-    adcTopK(cands, queries, books, subDim, topK, excludeSelf = false)
+      .select(col("query_id"), col("q"), bucketOf(col("q"), centroids))
+    adcTopK(cands, queries, books, 64 / subspaces, topK,
+      excludeSelf = false)
   }
 
   /**
@@ -2027,10 +1970,7 @@ object Similarity {
       iterations: Int = 2, threshold: Double = 0.35): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = kmeansCentroids(emb, nCentroids, iterations)
-    val nc = graft.functions.NearestCentroid.nearest(col("embedding"),
-      centroids)
-    val asg = emb.select(col("vec_id"),
-      nc.getField("bucket").cast("long").as("bucket"))
+    val asg = emb.select(col("vec_id"), bucketOf(col("embedding"), centroids))
     val pairs = embedNearDupPairs(spark, dir, threshold)
       .select(col("d1"), col("d2"))
     pairs

@@ -10,6 +10,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  * files from both tables. This is the batch analog of Kafka's
  * partition-aligned consumption the reference relies on
  * (docker-compose.yml:45-69 — one Connect task per topic partition).
+ *
+ * It also owns the stored-index artifacts of both index families (the
+ * MinHash-LSH index of x59–x93, the IVF and IVF-PQ indexes of x61–x68,
+ * x102, x131): their name suffix, their location and their readiness.
  */
 object BucketedTables {
 
@@ -31,6 +35,35 @@ object BucketedTables {
     // FILE_NOT_EXIST on the replaced files. Refresh both keys.
     df.sparkSession.catalog.refreshTable(table)
     path.foreach(df.sparkSession.catalog.refreshByPath)
+  }
+
+  /** Stored-index name suffix for a corpus dir: the SANITIZED FULL PATH
+    * (not a 32-bit hash — `dir.hashCode` could silently collide two
+    * corpora into one table). */
+  private[graft] def indexSuffix(dir: String): String =
+    dir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
+
+  /** Where the stored-index artifact `name` (a bucketed table or a side
+    * parquet) lives. */
+  private[graft] def indexPath(name: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_index/$name"
+
+  /** Persists `df` as the stored-index table (or segment) `table` at
+    * [[indexPath]], bucketed 8 ways on `bucketCol`. */
+  private[graft] def writeIndex(df: DataFrame, table: String,
+      bucketCol: String): Unit =
+    writeBucketed(df, table, bucketCol, 8, path = Some(indexPath(table)))
+
+  /** Runs `build` unless the stored index `table` is ready — registered,
+    * with every side parquet in `sides` COMMITTED (`_SUCCESS` present), so
+    * a missing or half-written side artifact means a rebuild, not a raw
+    * path failure downstream — and returns `table`. */
+  private[graft] def ensureIndex(spark: SparkSession, table: String,
+      sides: String*)(build: => Any): String = {
+    if (!spark.catalog.tableExists(table) ||
+        !sides.forall(s => new java.io.File(indexPath(s), "_SUCCESS").exists()))
+      build
+    table
   }
 
   /** Join two same-bucketed tables on their bucket key. */

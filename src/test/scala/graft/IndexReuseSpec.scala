@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.{Dedup, Similarity}
+import graft.sink.BucketedTables
 
 /** x59's done-bar: the persisted signature index gives the SAME answer as
   * x57's inline recompute, and the query-time plan provably reads the
@@ -114,10 +115,8 @@ class IndexReuseSpec extends SparkSpec {
     val before = Similarity.ivfPqServe(spark, sf).collect().toSeq
     // THIS corpus dir's centroids only (the cache also holds other SFs'
     // artifacts; serving sf rebuilds just sf's suffix)
-    val suffix = sf.replaceAll("[^A-Za-z0-9]+", "_")
-      .replaceAll("^_|_$", "")
-    val cts = Seq(new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_index/graft_ivfpq_ct_$suffix"))
+    val cts = Seq(new java.io.File(BucketedTables.indexPath(
+      s"graft_ivfpq_ct_${BucketedTables.indexSuffix(sf)}")))
     assert(cts.forall(_.exists()),
       "expected a persisted centroids dir after serve")
     // simulate the pre-round-14 / crashed-write states: centroids gone
@@ -131,6 +130,25 @@ class IndexReuseSpec extends SparkSpec {
     val again = Similarity.ivfPqServe(spark, sf).collect().toSeq
     assert(again == before)
     cts.foreach(ct => assert(new java.io.File(ct, "_SUCCESS").exists()))
+  }
+
+  test("IVF append with its stored centroids missing or uncommitted " +
+      "rebuilds the index, not a raw path failure") {
+    val before = Similarity.annIndexAppend(spark, sf).collect().toSeq
+    assert(before.nonEmpty)
+    val ct = new java.io.File(BucketedTables.indexPath(
+      s"graft_ivf_centroids_${BucketedTables.indexSuffix(sf)}"))
+    assert(new java.io.File(ct, "_SUCCESS").exists(),
+      s"expected committed centroids at $ct after the append")
+    // centroids gone while the assignment table stays registered
+    org.apache.commons.io.FileUtils.deleteDirectory(ct)
+    assert(Similarity.annIndexAppend(spark, sf).collect().toSeq == before)
+    assert(new java.io.File(ct, "_SUCCESS").exists(),
+      s"rebuild must re-persist committed centroids at $ct")
+    // an UNCOMMITTED dir (no _SUCCESS) counts as missing too
+    new java.io.File(ct, "_SUCCESS").delete()
+    assert(Similarity.annIndexAppend(spark, sf).collect().toSeq == before)
+    assert(new java.io.File(ct, "_SUCCESS").exists())
   }
 
   private def emb2df(rows: Array[(Long, Seq[Double])]) = {

@@ -103,5 +103,7 @@ class ReplaySpec extends SparkSpec {
     assert(where("conf\\.(set|unset)\\(").sorted ==
       (Seq.fill(3)(helper) :+ "graft/ingest/Tables.scala").sorted)
     assert(where("SparkSession\\.builder") == Seq("graft/Session.scala"))
+    // the stored-index location is written once, behind BucketedTables
+    assert(where("graft_index") == Seq("graft/sink/BucketedTables.scala"))
   }
 }
