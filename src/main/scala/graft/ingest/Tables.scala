@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
  *
  *  - INT64 TIMESTAMP(NANOS) (pyarrow default), which Spark's parquet
  *    reader rejects outright ([PARQUET_TYPE_ILLEGAL]). The supported
- *    route is the `spark.sql.legacy.parquet.nanosAsLong` flag — nanos
- *    arrive as LongType — after which we restore a true TimestampType
+ *    route is the `spark.sql.legacy.parquet.nanosAsLong` flag (set by
+ *    `graft.Session`; this loader requires it and never writes conf) —
+ *    nanos arrive as LongType — after which we restore a true TimestampType
  *    via integer-division to micros. Truncation matches what DuckDB does
  *    when it reads the same files, so oracle parity is preserved.
  *  - timestamp[us] with isAdjustedToUTC=false, which Spark reads as
@@ -34,8 +35,9 @@ object Tables {
   )
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // Runtime-settable legacy conf; idempotent.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    require(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true",
+      "Tables.load needs spark.sql.legacy.parquet.nanosAsLong=true; " +
+        "build the session with graft.Session")
     var df = spark.read.parquet(s"$sfDir/$name.parquet")
     for (c <- tsCols.getOrElse(name, Nil)) df.schema(c).dataType match {
       case LongType         => df = df.withColumn(c, timestamp_micros(expr(s"$c div 1000")))

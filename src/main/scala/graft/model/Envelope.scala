@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
  *
  * Scale posture: the envelope is a plain columnar row — no per-record
  * driver work, no RDD; `uid` uniqueness is free (Kafka coordinates), so
- * replay-dedup is a `dropDuplicates("uid")`, and the sink partitions by
+ * the sink drops a replayed record on append, and it partitions by
  * (topic, date) so 100 TB of changelog prunes to the scanned topics/days.
  */
 object Envelope {

@@ -21,48 +21,22 @@ import graft.sink.ChangelogSink
  *   log.asView("changelog"); spark.sql("...")    // full SQL
  * }}}
  *
- * Replays are made safe by deduplicating on `uid` (topic+partition+offset,
- * the reference's ES `_id`), and WHERE the dedup sits is the cost model:
- *
- *  - the row filters (`searchKey`, `searchKeyTopic`, `searchField`,
- *    `searchJson`, `tombstones`, `search`, `matchPhrase`, `fuzzy`,
- *    `spanNear`) and `discover`'s time window apply to the RAW sink read
- *    and `dropDuplicates("uid")` runs on the surviving rows only: the
- *    predicate reaches the scan (`topic` prunes partitions, `key` lands in
- *    `PushedFilters`) and the shuffle carries only the hits;
- *  - `latest` ranks the raw read directly: copies of a uid are one Kafka
- *    record, so they tie on (timestamp, offset) and `row_number` keeps
- *    exactly one of them;
- *  - `histogram`, `matchQuery`, [[frame]] and [[asView]] need the whole
- *    deduplicated collection and dedup first.
- *
- * Filter-then-dedup is sound because a uid names ONE Kafka record and
- * every stored copy came from that record through the same SMT chain, so
- * a row predicate keeps all of a uid's copies or none of them. Where
- * copies could differ (a re-ingest under another reader schema), the
- * filtered result is one that the dedup-first form, which keeps an
- * arbitrary copy, could also have returned.
+ * The sink stores each `uid` once ([[ChangelogSink.append]]), so every
+ * operation is its [[LogQueries]] call on the sink read as stored: a row
+ * predicate reaches the scan (`topic` prunes partitions, `key` lands in
+ * `PushedFilters`), and no operation shuffles to deduplicate.
  */
 case class Changelog(spark: SparkSession, path: String,
     valueJsonField: String = "value") {
 
-  /** The sink read as stored: replayed records appear once per copy. */
-  private def raw: DataFrame = ChangelogSink.read(spark, path)
-
-  /** The envelope frame, replay-safe: the whole table deduplicated on
-    * `uid` (one shuffle of every row). */
-  def frame: DataFrame = raw.dropDuplicates("uid")
-
-  /** `filter` over the raw sink read, then the uid dedup over its hits. */
-  private def hits(filter: DataFrame => DataFrame): DataFrame =
-    filter(raw).dropDuplicates("uid")
+  /** The envelope frame: the sink read, one row per uid. */
+  def frame: DataFrame = ChangelogSink.read(spark, path)
 
   private def payload: Column =
     coalesce(col(s"message.`$valueJsonField`").cast("string"), lit(""))
 
   def discover(from: Column, to: Column, n: Int): DataFrame =
-    LogQueries.discoverPage(
-      hits(_.where(col("timestamp").between(from, to))), from, to, n)
+    LogQueries.discoverPage(frame, from, to, n)
 
   def histogram(bucket: String = "hour"): DataFrame =
     LogQueries.discoverHistogram(frame, bucket)
@@ -72,21 +46,21 @@ case class Changelog(spark: SparkSession, path: String,
     * Catalyst predicate ([[Kql]] grammar; free-text terms match the
     * payload's JSON-string view). */
   def search(query: String): DataFrame =
-    hits(_.where(Kql.parse(query, s"message.$valueJsonField")))
+    frame.where(Kql.parse(query, s"message.$valueJsonField"))
 
-  def searchKey(key: String): DataFrame = hits(LogQueries.searchKey(_, key))
+  def searchKey(key: String): DataFrame = LogQueries.searchKey(frame, key)
 
   def searchKeyTopic(key: String, topic: String): DataFrame =
-    hits(LogQueries.searchKeyTopic(_, key, topic))
+    LogQueries.searchKeyTopic(frame, key, topic)
 
   def searchField(fieldPath: String, value: Any): DataFrame =
-    hits(LogQueries.searchField(_, fieldPath, value))
+    LogQueries.searchField(frame, fieldPath, value)
 
   def searchJson(jsonPath: String, value: String): DataFrame =
-    hits(LogQueries.searchJson(_, valueJsonField, jsonPath, value))
+    LogQueries.searchJson(frame, valueJsonField, jsonPath, value)
 
   def tombstones(): DataFrame =
-    hits(LogQueries.tombstones(_, valueJsonField))
+    LogQueries.tombstones(frame, valueJsonField)
 
   /**
    * Kibana's search box: a relevance-ranked match query over the record
@@ -112,10 +86,10 @@ case class Changelog(spark: SparkSession, path: String,
    * stream ([[graft.functions.PhraseMatch]]) — `"Spark streaming"`
    * matches a payload containing `spark, streaming.` the way Kibana's
    * quoted search does. A plain map-side filter predicate over the scan,
-   * linear at any scale; only its hits reach the uid dedup's shuffle.
+   * linear at any scale.
    */
   def matchPhrase(phrase: String): DataFrame =
-    hits(_.where(graft.functions.PhraseMatch.phrase(payload, phrase)))
+    frame.where(graft.functions.PhraseMatch.phrase(payload, phrase))
 
   /** Lucene fuzzy term search (the query-bar `term~` / `term~N` suffix,
     * ES `fuzziness`): rows whose payload's analyzed token stream contains
@@ -127,15 +101,15 @@ case class Changelog(spark: SparkSession, path: String,
     * [[matchPhrase]], a plain map-side filter predicate
     * ([[graft.functions.FuzzyMatch]]), linear at any scale. */
   def fuzzy(term: String, maxDist: Option[Int] = None): DataFrame =
-    hits(_.where(graft.functions.FuzzyMatch.fuzzy(payload, term, maxDist)))
+    frame.where(graft.functions.FuzzyMatch.fuzzy(payload, term, maxDist))
 
   /** Ordered-proximity search (ES/Lucene `span_near`, `in_order: true`):
     * like [[matchPhrase]] but tolerating up to `slop` interleaved tokens
     * between the phrase tokens — the Lucene `"a b"~N` query. */
   def spanNear(phrase: String, slop: Int): DataFrame =
-    hits(_.where(graft.functions.PhraseMatch.near(payload, phrase, slop)))
+    frame.where(graft.functions.PhraseMatch.near(payload, phrase, slop))
 
-  def latest(): DataFrame = LogQueries.latestStatePerKey(raw)
+  def latest(): DataFrame = LogQueries.latestStatePerKey(frame)
 
   /** Register for `spark.sql` — the strict superset of Kibana's surface. */
   def asView(name: String): Unit = frame.createOrReplaceTempView(name)

@@ -298,11 +298,9 @@ object LogQueries {
 
   /**
    * Q2 — Search key across topics (reference: README.md:32-34,
-   * attachments/search_for_key.png). A plain equality filter: over a raw
+   * attachments/search_for_key.png). A plain equality filter: over the
    * sink read it is pushed down to the parquet scan (PushedFilters) with
-   * no shuffle and no join. Over a uid-deduplicated frame it sits above
-   * the dedup's shuffle, so [[Changelog]] applies it to the raw read and
-   * deduplicates only the hits.
+   * no shuffle and no join.
    */
   def searchKey(env: DataFrame, key: String): DataFrame =
     env.where(col("key") === key)
@@ -310,9 +308,7 @@ object LogQueries {
   /**
    * Q3 — Search key AND topic (reference: README.md:36-38). With the sink
    * partitioned by topic, the topic predicate is PARTITION-pruned — at
-   * 100 TB only the one topic's files are listed, let alone read. As with
-   * [[searchKey]], that holds for a raw sink read, which is where
-   * [[Changelog]] applies it, ahead of its uid dedup.
+   * 100 TB only the one topic's files are listed, let alone read.
    */
   def searchKeyTopic(env: DataFrame, key: String, topic: String): DataFrame =
     env.where(col("key") === key && col("topic") === topic)

@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
  * Spark-natively that is an APPEND-ONLY parquet table partitioned by
  * (topic, date):
  *
- *  - append mode matches the changelog model — no upsert machinery needed,
- *    the `uid` column makes replays idempotent: [[streamAppend]] drops
- *    within-batch copies, and [[graft.query.Changelog]] drops the rest at
- *    query time, on each query's filtered hits (only its whole-table
- *    operations dedup every row);
+ *  - append mode matches the changelog model — no upsert machinery needed:
+ *    [[append]] stores each `uid` once (a replay of a stored record is
+ *    dropped on the way in, as the reference's `_id` overwrite drops it),
+ *    so no reader deduplicates;
  *  - (topic, date) partitioning replaces both the ES index-per-pattern
  *    layout AND rollover: queries with topic/time predicates partition-prune
  *    (at 100 TB only matching directories are even listed), and retention
@@ -106,13 +105,67 @@ object ChangelogSink {
       }
   }
 
-  /** Append an envelope frame to the partitioned changelog table. */
-  def append(env: DataFrame, path: String): Unit =
-    env.withColumn("date", to_date(col("timestamp")))
-      .write
-      .partitionBy("topic", "date")
-      .mode("append")
-      .parquet(path)
+  /**
+   * Append an envelope frame to the partitioned changelog table, storing
+   * each `uid` (topic+partition+offset) once. This is the only place uid
+   * uniqueness is enforced; no reader deduplicates.
+   *
+   *  - The batch's own copies are dropped, then uids already stored are
+   *    anti-joined out. Every copy of a uid carries the same timestamp, so
+   *    all copies sit in one (topic, `date = to_date(timestamp)`)
+   *    partition: only the `uid` column of the existing partitions the
+   *    batch touches is read, by explicit path (the root is never
+   *    listed). One small job finds them; a batch whose partitions are
+   *    all new reads no stored file.
+   *  - The write is staged in its own dot-dir and its files renamed in:
+   *    Spark's committer shares one `_temporary` dir per output path, so
+   *    two plain appends to one table at once can fail each other. A
+   *    failed append may leave part of its rows stored; a retry stores
+   *    the rest, once. A killed one leaves an `.append-*` dir that
+   *    readers skip and that can be deleted.
+   *
+   * Contract: one writer per Kafka (topic, partition), Kafka Connect's
+   * task model, so only a later replay of the same partition repeats a
+   * uid. Appends of different Kafka partitions may run at once, of one
+   * topic and date too. A replay racing a compaction or erasure of its
+   * partition may store a copy. A table written before this contract is
+   * made unique once with `append(read(old), new)`.
+   */
+  def append(env: DataFrame, path: String): Unit = {
+    val spark = env.sparkSession
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the date cast to string before the collect, as in [[eraseKeys]]
+    val touched = env
+      .select(col("topic"), to_date(col("timestamp")).cast("string"))
+      .distinct().collect()
+      .map(r => new Path(root, s"topic=${r.getString(0)}/date=${r.getString(1)}"))
+      .filter(fs.exists)
+    val batch = env.withColumn("date", to_date(col("timestamp")))
+      .dropDuplicates("uid")
+    val fresh =
+      if (touched.isEmpty) batch
+      else batch.join(
+        spark.read.schema("uid STRING")
+          .parquet(touched.map(_.toString).toIndexedSeq: _*)
+          .select(col("uid").as("stored_uid")),
+        col("uid") === col("stored_uid"), "left_anti")
+    val staging = new Path(root, s".append-${java.util.UUID.randomUUID()}")
+    try {
+      fresh.write.partitionBy("topic", "date").parquet(staging.toString)
+      for {
+        topicDir <- fs.listStatus(staging) if topicDir.isDirectory
+        dateDir <- fs.listStatus(topicDir.getPath) if dateDir.isDirectory
+        part = new Path(root,
+          s"${topicDir.getPath.getName}/${dateDir.getPath.getName}")
+        f <- fs.listStatus(dateDir.getPath) if isDataFile(f)
+      } {
+        fs.mkdirs(part)
+        CommitOps.renameOrThrow(fs, f.getPath,
+          new Path(part, f.getPath.getName), "move-staged", "append")
+      }
+    } finally fs.delete(staging, true)
+  }
 
   /**
    * Read the changelog back (partition columns topic/date restored),
@@ -160,13 +213,14 @@ object ChangelogSink {
 
   /**
    * [[append]] with an ingest audit attached via `Dataset.observe` — the
-   * production data-quality hook: metrics are accumulated BY THE WRITE
-   * JOB ITSELF (per-task accumulators folded into the job, not a second
-   * scan of the input), so every ingest batch gets a (rows, tombstones,
-   * min/max event time) audit row for free. Returns the observed metrics;
-   * a deployment forwards them to its metrics sink or asserts
-   * freshness/volume SLOs on them. At 100 TB the cost is a few
-   * accumulators per task — the data is read exactly once.
+   * production data-quality hook: metrics are accumulated by the
+   * append's own first pass over the batch, its partition-key job
+   * (per-task accumulators folded into the job, not a scan of its own),
+   * so every ingest batch gets a (rows, tombstones, min/max event time)
+   * audit row for free. The rows are counted as delivered, before the
+   * uid dedup. Returns the observed metrics; a deployment forwards them
+   * to its metrics sink or asserts freshness/volume SLOs on them. At
+   * 100 TB the cost is a few accumulators per task.
    */
   def appendObserved(env: DataFrame, path: String): Map[String, Any] = {
     val obs = new org.apache.spark.sql.Observation("ingest_audit")
@@ -181,23 +235,19 @@ object ChangelogSink {
   }
 
   /**
-   * Streaming flavor of [[append]]: a `foreachBatch` writer that dedups
-   * each micro-batch on `uid` before appending. Combined with the
-   * append-only model this gives the reference's effectively-once story
-   * (README.md:11: the topic+partition+offset id makes replays
-   * idempotent) without a transactional sink: within-batch replays are
-   * dropped here; copies across batches stay in the table and
-   * [[graft.query.Changelog]] drops them at query time, after each
-   * query's filter.
+   * Streaming flavor of [[append]]: a `foreachBatch` writer that appends
+   * each micro-batch. The replayable source plus [[append]]'s idempotence
+   * give the reference's effectively-once story (README.md:11: the
+   * topic+partition+offset id makes replays idempotent) without a
+   * transactional sink: a record re-delivered in a later micro-batch, or
+   * a whole batch retried after a failure, is stored once.
    */
   def streamAppend(env: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     env.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        append(batch.dropDuplicates("uid"), path)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => append(batch, path) }
       .start()
 
   /**

@@ -22,7 +22,7 @@ class ChangelogFacadeSpec extends SparkSpec {
   test("the kafana workflow end-to-end over a sunk changelog") {
     val dir = Files.createTempDirectory("facade").toString
     ChangelogSink.append(Pipeline.envelope(spark, sf), dir)
-    // replayed batch: facade must dedup on uid
+    // replayed batch: the sink stores each uid once
     ChangelogSink.append(Pipeline.envelope(spark, sf), dir)
 
     val log = Changelog(spark, dir, Pipeline.ValueJsonField)
@@ -141,8 +141,15 @@ class ChangelogFacadeSpec extends SparkSpec {
       assert(expected.nonEmpty, s"$name: vacuous case")
       assert(rows(got) == expected, s"$name: rows differ from dedup-first")
     }
-    // the replay is really there: the raw read holds the events twice
-    assert(ChangelogSink.read(spark, dir).count() > old.count())
+    // the events batch was appended twice: the raw read holds each uid once
+    assert(ChangelogSink.read(spark, dir).count() == old.count())
+  }
+
+  test("exceptAll of a facade frame with itself is empty") {
+    val log = Changelog(spark, twoTopicDir, Pipeline.ValueJsonField)
+    assert(log.frame.count() > 0 && log.searchKey("13").count() > 0)
+    assert(log.frame.exceptAll(log.frame).isEmpty)
+    assert(log.searchKey("13").exceptAll(log.searchKey("13")).isEmpty)
   }
 
   test("searchKey filters at the scan: key in PushedFilters, no Exchange " +

@@ -103,6 +103,13 @@ object FlakyRenameFs {
 class ChangelogSinkSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `env` appended as `n` disjoint slices (by offset mod `n`): each
+    * (topic, date) partition gets up to `n` files of distinct uids. */
+  private def appendSlices(env: org.apache.spark.sql.DataFrame, dir: String,
+      n: Int): Unit =
+    (0 until n).foreach(i =>
+      ChangelogSink.append(env.where(pmod($"offset", lit(n)) === i), dir))
+
   test("append + read round-trips; partitioned by topic/date; retention drops") {
     val dir = Files.createTempDirectory("changelog").toString
     val env = Pipeline.envelope(spark, sf)
@@ -114,11 +121,12 @@ class ChangelogSinkSpec extends SparkSpec {
     val topicDirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
     assert(topicDirs.contains("topic=events"))
 
-    // append again: changelog append-only model; uid dedup restores one copy
+    // append again: a replayed batch stores no second copy of any uid
     ChangelogSink.append(env, dir)
     val doubled = ChangelogSink.read(spark, dir)
-    assert(doubled.count() == 2 * env.count())
+    assert(doubled.count() == env.count())
     assert(doubled.dropDuplicates("uid").count() == env.count())
+    assertUidsUnique(dir)
 
     // retention: drop everything before the max date -> only maxdate remains
     val maxDate = back.agg(max(to_date($"timestamp"))).as[java.sql.Date].head().toString
@@ -181,8 +189,8 @@ class ChangelogSinkSpec extends SparkSpec {
       "count, content identical, re-run is a no-op") {
     val dir = java.nio.file.Files.createTempDirectory("sink-compact").toString
     val env = Pipeline.envelope(spark, sf)
-    // 5 appends = at least 5 files per (topic, date) partition
-    (1 to 5).foreach(_ => ChangelogSink.append(env, dir))
+    // 5 disjoint appends = at least 5 files per (topic, date) partition
+    appendSlices(env, dir, 5)
     val before = ChangelogSink.read(spark, dir)
     val beforeRows = before.collect().toSet
     val date = before.agg(max(to_date($"timestamp")))
@@ -208,7 +216,7 @@ class ChangelogSinkSpec extends SparkSpec {
     val dir = "flaky:" +
       java.nio.file.Files.createTempDirectory("sink-crash").toString
     val env = Pipeline.envelope(spark, sf)
-    (1 to 3).foreach(_ => ChangelogSink.append(env, dir))
+    appendSlices(env, dir, 3)
     val beforeRows = ChangelogSink.read(spark, dir).collect().toSet
     val date = ChangelogSink.read(spark, dir)
       .agg(max(to_date($"timestamp"))).as[java.sql.Date].head().toString
@@ -243,7 +251,7 @@ class ChangelogSinkSpec extends SparkSpec {
     val dir = "flaky:" +
       java.nio.file.Files.createTempDirectory("sink-midswap").toString
     val env = Pipeline.envelope(spark, sf)
-    (1 to 4).foreach(_ => ChangelogSink.append(env, dir))
+    appendSlices(env, dir, 4)
     val before = ChangelogSink.read(spark, dir).collect()
     val date = ChangelogSink.read(spark, dir)
       .agg(max(to_date($"timestamp"))).as[java.sql.Date].head().toString
@@ -283,7 +291,7 @@ class ChangelogSinkSpec extends SparkSpec {
       "compacts fragmented ones, second sweep is a no-op") {
     val dir = java.nio.file.Files.createTempDirectory("sink-roll").toString
     val env = Pipeline.envelope(spark, sf)
-    (1 to 4).foreach(_ => ChangelogSink.append(env, dir))
+    appendSlices(env, dir, 4)
     val all = ChangelogSink.read(spark, dir)
     val maxDate = all.agg(max(to_date($"timestamp")))
       .as[java.sql.Date].head().toString
@@ -296,7 +304,7 @@ class ChangelogSinkSpec extends SparkSpec {
     assert(compacted == 1, s"compacted $compacted partitions")
     val partDir = new java.io.File(s"$dir/topic=events/date=$maxDate")
     assert(partDir.listFiles().count(_.getName.endsWith(".parquet")) == 1)
-    // surviving rows = exactly the max-date slice, one copy per append
+    // surviving rows = exactly the max-date slice
     val kept = ChangelogSink.read(spark, dir)
     assert(kept.agg(min(to_date($"timestamp")))
       .as[java.sql.Date].head().toString == maxDate)
@@ -476,9 +484,7 @@ class ChangelogSinkSpec extends SparkSpec {
     val dir = "flaky:" + local
     // four disjoint appends: every date partition holds distinct rows in
     // four files, so each swap stages several files
-    val env = Pipeline.envelopeFlat(spark, sf)
-    (0 until 4).foreach(i =>
-      ChangelogSink.append(env.where(pmod($"offset", lit(4)) === i), dir))
+    appendSlices(Pipeline.envelopeFlat(spark, sf), dir, 4)
     // partition content through plain file: paths (parquet data is never
     // read through the test scheme)
     def rows(date: String): Seq[String] =
@@ -579,8 +585,7 @@ class ChangelogSinkSpec extends SparkSpec {
       "never swapped, byte-identical after both ops") {
     val dir = Files.createTempDirectory("dotfile-leftover").toString
     val env = Pipeline.envelopeFlat(spark, sf)
-    ChangelogSink.append(env, dir)
-    ChangelogSink.append(env, dir) // second file per partition → compactable
+    appendSlices(env, dir, 2) // second file per partition → compactable
     val before = ChangelogSink.read(spark, dir)
     val beforeCount = before.count()
     val subj = before.where($"key" === "13").count()
@@ -1012,5 +1017,78 @@ class ChangelogSinkSpec extends SparkSpec {
     assert(!names.exists(_.startsWith(".compacting-")))
     assert(stagedNames.forall(names.contains))
     assert(!staging.exists())
+  }
+
+  test("the table stores each uid once through replayed appends, erasure " +
+      "and compaction") {
+    val dir = Files.createTempDirectory("changelog-unique").toString
+    val env = Pipeline.envelope(spark, sf)
+    val n = env.count()
+    appendSlices(env, dir, 3)
+    // a replay of the whole batch, then of one slice on its own
+    ChangelogSink.append(env, dir)
+    ChangelogSink.append(env.where(pmod($"offset", lit(3)) === 1), dir)
+    assert(ChangelogSink.read(spark, dir).count() == n)
+    assertUidsUnique(dir)
+    val n13 = env.where($"key" === "13").count()
+    assert(n13 > 0)
+    ChangelogSink.forgetKey(spark, dir, "13").collect()
+    assertUidsUnique(dir)
+    val date = ChangelogSink.read(spark, dir)
+      .agg(max($"date").cast("string")).as[String].head()
+    assert(ChangelogSink.compactPartition(spark, dir, "events", date) == 1)
+    assertUidsUnique(dir)
+    assert(ChangelogSink.read(spark, dir).count() == n - n13)
+  }
+
+  test("an append whose (topic, date) partitions are all new reads no " +
+      "stored data file") {
+    val dir = Files.createTempDirectory("changelog-new-parts").toString
+    val env = Pipeline.envelope(spark, sf)
+    ChangelogSink.append(env, dir)
+    // break every stored data file: an append that read one would fail
+    def dataFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) dataFiles(f)
+        else if (f.getName.endsWith(".parquet")) Seq(f) else Nil)
+    val stored = dataFiles(new java.io.File(dir))
+    assert(stored.nonEmpty)
+    stored.foreach { f =>
+      Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+      new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+    }
+    // the same records under another topic: only new partitions
+    ChangelogSink.append(env.withColumn("topic", lit("replica"))
+      .withColumn("uid", graft.model.Envelope.uid), dir)
+    assert(spark.read.parquet(s"$dir/topic=replica").count() == env.count())
+    // and an append that touches a stored partition does read it
+    intercept[Exception](ChangelogSink.append(env, dir))
+  }
+
+  test("concurrent appends of disjoint Kafka partitions of one topic to " +
+      "one date: the table holds their union, each uid once") {
+    val dir = Files.createTempDirectory("changelog-concurrent").toString
+    val ts = java.sql.Timestamp.valueOf("2024-05-01 10:00:00")
+    def batch(partition: Int, b: Int) = (0 until 2000).map { i =>
+      val offset = b * 2000L + i
+      ("T", partition, offset, s"T+$partition+$offset", s"k${i % 50}", ts)
+    }.toDF("topic", "partition", "offset", "uid", "key", "timestamp")
+      .repartition(4)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      // each writer owns one Kafka partition and appends four batches
+      val writers = scala.concurrent.Future.traverse(Seq(0, 1)) { p =>
+        scala.concurrent.Future(
+          (0 until 4).foreach(b => ChangelogSink.append(batch(p, b), dir)))
+      }
+      scala.concurrent.Await.result(writers,
+        scala.concurrent.duration.Duration(5, "min"))
+    } finally pool.shutdown()
+    assert(ChangelogSink.read(spark, dir).count() == 2 * 4 * 2000)
+    assertUidsUnique(dir)
+    assert(new java.io.File(dir, "topic=T").list().toSeq ==
+      Seq("date=2024-05-01"))
   }
 }

@@ -64,6 +64,42 @@ class FormatsAndStreamSinkSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("foreachBatch streaming sink: a record re-delivered in a later " +
+      "micro-batch, or a whole batch retried, is stored once") {
+    val dir = Files.createTempDirectory("streamsink-replay").toString
+    val in = MemoryStream[RecIn]
+    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    def stored(table: String): Long = ChangelogSink.read(spark, table).count()
+    val q = ChangelogSink.streamAppend(env, s"$dir/table",
+      Files.createTempDirectory("ckpt").toString)
+    try {
+      in.addData(rec("a", 1, 0), rec("b", 2, 1))
+      q.processAllAvailable()
+      assert(stored(s"$dir/table") == 2)
+      // at-least-once delivery: offset 2 again, beside a new record
+      in.addData(rec("b", 2, 1), rec("c", 3, 2))
+      q.processAllAvailable()
+      assert(stored(s"$dir/table") == 3)
+      in.addData(rec("b", 2, 1))
+      q.processAllAvailable()
+      assert(stored(s"$dir/table") == 3)
+    } finally q.stop()
+    assertUidsUnique(s"$dir/table")
+    // a retried foreachBatch: its body appends the same batch twice
+    val again = MemoryStream[RecIn]
+    again.addData(rec("a", 1, 0), rec("b", 2, 1), rec("b", 2, 1),
+      rec("c", 3, 2))
+    val retried = StreamPipeline.ingest(again.toDF(), "value_json").writeStream
+      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        ChangelogSink.append(batch, s"$dir/retried")
+        ChangelogSink.append(batch, s"$dir/retried")
+      }.start()
+    try retried.processAllAvailable() finally retried.stop()
+    assert(stored(s"$dir/retried") == 3)
+    assertUidsUnique(s"$dir/retried")
+  }
+
   test("session windows: gap-separated activity sessions per key") {
     val in = MemoryStream[RecIn]
     val env = StreamPipeline.ingest(in.toDF(), "value_json")

@@ -98,12 +98,14 @@ class ReplaySpec extends SparkSpec {
     // each lives once, in the helper: Replay.run and Replay.session
     assert(where("Trigger\\.AvailableNow") == Seq(helper))
     assert(where("stateStore\\.providerClass") == Seq(helper))
-    // the helper's three: the conf copy, 8 partitions, RocksDB; plus
-    // Tables.load's nanosAsLong write; and one session builder
-    assert(where("conf\\.(set|unset)\\(").sorted ==
-      (Seq.fill(3)(helper) :+ "graft/ingest/Tables.scala").sorted)
+    // the helper's three: the conf copy, 8 partitions, RocksDB; and one
+    // session builder
+    assert(where("conf\\.(set|unset)\\(") == Seq.fill(3)(helper))
     assert(where("SparkSession\\.builder") == Seq("graft/Session.scala"))
     // the stored-index location is written once, behind BucketedTables
     assert(where("graft_index") == Seq("graft/sink/BucketedTables.scala"))
+    // uid uniqueness has one owner, the sink's append: no reader dedups
+    assert(where("dropDuplicates\\(\"uid\"\\)") ==
+      Seq("graft/sink/ChangelogSink.scala"))
   }
 }

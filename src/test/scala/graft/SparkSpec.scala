@@ -49,6 +49,14 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Fails unless the changelog table at `dir` stores each uid once. */
+  protected def assertUidsUnique(dir: String): Unit = {
+    val dups = graft.sink.ChangelogSink.read(spark, dir)
+      .groupBy("uid").count().where("count > 1")
+    assert(dups.isEmpty,
+      s"uids stored more than once: ${dups.limit(5).collect().mkString(", ")}")
+  }
+
   /** Run `f` with session confs temporarily set, restoring after. */
   protected def withSQLConf(kv: (String, String)*)(f: => Unit): Unit = {
     val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
