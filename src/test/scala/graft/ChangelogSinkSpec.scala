@@ -906,16 +906,22 @@ class ChangelogSinkSpec extends SparkSpec {
     dead.mkdirs()
     java.nio.file.Files.writeString(
       new java.io.File(dead, "part-junk.parquet").toPath, "junk")
+    // and a killed append's staged batch (an append writes no manifest)
+    val deadAppend = new java.io.File(dir, ".append-killed")
+    val deadAppendPart = new java.io.File(deadAppend, partsRel.head)
+    deadAppendPart.mkdirs()
+    java.nio.file.Files.writeString(
+      new java.io.File(deadAppendPart, "part-junk.parquet").toPath, "junk")
 
     val (forward, discardedN) = ChangelogSink.recoverStaging(spark, dir)
-    assert(forward == 1 && discardedN == 1)
+    assert(forward == 1 && discardedN == 2)
     // the table is exactly the erased table — no loss, no dupes, no S
     val after = ChangelogSink.read(spark, dir).drop("date").collect().toSeq
     assert(after.size == after.toSet.size)
     assert(after.toSet == expected)
     // fully-erased partition directory is gone; no debris anywhere
     assert(!partDir("topic=topicF/date=2024-04-01").exists())
-    assert(!staging.exists() && !dead.exists())
+    assert(!staging.exists() && !dead.exists() && !deadAppend.exists())
     partsRel.filterNot(_ == "topic=topicF/date=2024-04-01").foreach { p =>
       assert(!partDir(p).listFiles().exists(_.getName.startsWith(".forgetting-")))
     }
@@ -1090,5 +1096,40 @@ class ChangelogSinkSpec extends SparkSpec {
     assertUidsUnique(dir)
     assert(new java.io.File(dir, "topic=T").list().toSeq ==
       Seq("date=2024-05-01"))
+  }
+
+  test("the partition day is UTC whatever the session time zone, and a " +
+      "null timestamp's partition is found too: replays store no copy") {
+    val dir = Files.createTempDirectory("changelog-tz").toString
+    // 20:00 UTC is already the next day at +05:30
+    val batch = Seq(
+      ("T", 0, 1L, "T+0+1", "k", java.sql.Timestamp.from(
+        java.time.Instant.parse("2024-05-01T20:00:00Z"))),
+      ("T", 0, 2L, "T+0+2", "k", null: java.sql.Timestamp))
+      .toDF("topic", "partition", "offset", "uid", "key", "timestamp")
+    ChangelogSink.append(batch, dir)
+    withSQLConf("spark.sql.session.timeZone" -> "+05:30") {
+      ChangelogSink.append(batch, dir)
+    }
+    ChangelogSink.append(batch, dir)
+    assert(ChangelogSink.read(spark, dir).count() == 2)
+    assertUidsUnique(dir)
+    assert(new java.io.File(dir, "topic=T").list().sorted.toSeq ==
+      Seq("date=2024-05-01", "date=__HIVE_DEFAULT_PARTITION__"))
+  }
+
+  test("append never sets up a write job in the table root's _temporary") {
+    // a plain partitioned write to the root would: its committer shares
+    // <root>/_temporary with every other append running at once. Here
+    // that name is a file, so such a write cannot set up its job.
+    val dir = Files.createTempDirectory("changelog-no-temporary").toString
+    Files.write(new java.io.File(dir, "_temporary").toPath,
+      Array.emptyByteArray)
+    val env = Pipeline.envelope(spark, sf)
+    ChangelogSink.append(env, dir)
+    ChangelogSink.append(env.withColumn("topic", lit("replica"))
+      .withColumn("uid", graft.model.Envelope.uid), dir)
+    assert(ChangelogSink.read(spark, dir).count() == 2 * env.count())
+    assert(new java.io.File(dir, "_temporary").isFile)
   }
 }
