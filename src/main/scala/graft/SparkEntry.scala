@@ -804,7 +804,7 @@ object SparkEntry {
             .cast(org.apache.spark.sql.types.DecimalType(18, 2))
             .multiply(lit(100)).cast("long")).as("max_cents"))
       hourly.write.mode("overwrite").parquet(s"$work/rollup")
-      s.read.parquet(s"$work/rollup")
+      graft.ingest.Tables.parquet(s, s"$work/rollup")
         .groupBy(to_date(col("bucket")).as("day"), col("event_type"))
         .agg(sum(col("n")).as("n"),
           sum(col("sum_cents")).as("sum_cents"),

@@ -622,7 +622,7 @@ object Dedup {
           // at-least-once retry: the recommit must be a no-op
           if (batchId == 0L) commit(batch.toDF(), batchId)
         })
-      spark.read.parquet(segPath)
+      Tables.parquet(spark, segPath)
         .select(col("doc_id"), col("sig"), col("bkey"))
         .localCheckpoint() // the probe result must outlive the work dir
     }

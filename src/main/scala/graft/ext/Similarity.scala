@@ -740,8 +740,8 @@ object Similarity {
       nCentroids: Int = 8, k: Int = 3, iterations: Int = 2): DataFrame = {
     val idxTable = annIndex(spark, dir, nCentroids, iterations)
     // stored centroids: k×dim, the bounded broadcast-scalar collect
-    val stored = spark.read
-      .parquet(BucketedTables.indexPath(annIndexNames(dir)._2))
+    val stored = Tables.parquet(spark,
+        BucketedTables.indexPath(annIndexNames(dir)._2))
       .orderBy(col("centroid_id")).collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
     val emb = Tables.load(spark, dir, "embeddings")
@@ -1562,7 +1562,7 @@ object Similarity {
     * `books(s)(c)` shape — one bounded driver read (256 doubles). */
   private def loadCodebooks(spark: SparkSession, cbPath: String,
       subspaces: Int, k: Int): Seq[Seq[Seq[Double]]] = {
-    val rows = spark.read.parquet(cbPath)
+    val rows = Tables.parquet(spark, cbPath)
       .select(col("s"), col("c"), col("pos"), col("v"))
       .collect().map(r => ((r.getInt(0), r.getInt(1)),
         (r.getInt(2), r.getDouble(3))))
@@ -1600,8 +1600,8 @@ object Similarity {
       nQueries: Int = 10, topK: Int = 5): DataFrame = {
     val (assigned, cands, books) =
       ivfPqIndex(spark, dir, nCentroids, iterations, subspaces, k)
-    val centroids: Seq[Seq[Double]] = spark.read
-      .parquet(BucketedTables.indexPath(ivfPqNames(dir)._3))
+    val centroids: Seq[Seq[Double]] = Tables.parquet(spark,
+        BucketedTables.indexPath(ivfPqNames(dir)._3))
       .select(col("centroid_id"), col("pos"), col("v"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)

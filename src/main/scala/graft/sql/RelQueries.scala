@@ -1368,7 +1368,7 @@ object RelQueries {
         dayofweek(col("ts")).as("dow")).distinct()
       .where(col("dow") === 1 || col("dow") === 7)
       .select(col("event_date"))
-    (spark.read.parquet(work), dim)
+    (Tables.parquet(spark, work), dim)
   }
 
   def q24SaltedJoin(spark: SparkSession, dir: String): DataFrame = {

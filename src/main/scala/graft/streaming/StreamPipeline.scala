@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
   Trigger, ValueState}
 import org.apache.spark.sql.types.StructType
 
+import graft.ingest.Tables
 import graft.transform.Transforms
 
 /**
@@ -834,7 +835,7 @@ object StreamPipeline {
       })
     // cross-batch rollup: equals the one-shot batch aggregate IFF the
     // replayed commit was idempotent (the exactly-once contract)
-    spark.read.parquet(table)
+    Tables.parquet(spark, table)
       .groupBy(col("event_type"))
       .agg(sum(col("n")).as("n_events"),
         sum(col("sum_cents")).cast("decimal(38,0)").as("cents"))
@@ -1569,13 +1570,11 @@ object StreamPipeline {
       })
     onPlan(org.apache.spark.sql.GraftColumnBridge.lastStreamingPlan(q))
     // a corpus whose gated matches are all empty commits NO batch_id
-    // partitions — schema inference over the bare table dir would
-    // fail, so fall back to an explicit-schema empty frame
-    val hasAlerts = Option(new java.io.File(table).listFiles())
-      .exists(_.exists(_.getName.startsWith("batch_id=")))
-    val alerts = if (hasAlerts) spark.read.parquet(table)
-      else spark.range(0).select(col("id").cast("int").as("query_id"),
-        col("id").as("emitted_us"))
+    // partitions — no footer to take a schema from, so the frame is an
+    // explicit-schema empty one
+    val alerts = Tables.footerSchema(spark, table).fold(
+      spark.range(0).select(col("id").cast("int").as("query_id"),
+        col("id").as("emitted_us")))(spark.read.schema(_).parquet(table))
     alerts
       .select(col("query_id"), col("emitted_us"))
       .orderBy(col("query_id"), col("emitted_us"))

@@ -1118,6 +1118,34 @@ class ChangelogSinkSpec extends SparkSpec {
       Seq("date=2024-05-01", "date=__HIVE_DEFAULT_PARTITION__"))
   }
 
+  test("forgetKey erases a null-timestamp row from its default partition") {
+    val dir = Files.createTempDirectory("changelog-forget-null").toString
+    val at = java.sql.Timestamp.from(
+      java.time.Instant.parse("2024-05-01T20:00:00Z"))
+    // the subject's rows sit in a dated and the null-date partition of
+    // one topic, beside other subjects' rows in each
+    ChangelogSink.append(Seq(
+      ("T", 0, 1L, "T+0+1", "x", null: java.sql.Timestamp),
+      ("T", 0, 2L, "T+0+2", "x", at),
+      ("T", 0, 3L, "T+0+3", "y", null: java.sql.Timestamp),
+      ("T", 0, 4L, "T+0+4", "z", at))
+      .toDF("topic", "partition", "offset", "uid", "key", "timestamp"), dir)
+    val audit = ChangelogSink.forgetKey(spark, dir, "x")
+      .as[(String, String, Long, Long, Long)].collect().toSeq
+    assert(audit == Seq(("T", null, 2L, 1L, 1L),
+      ("T", "2024-05-01", 2L, 1L, 1L)))
+    def uids() = ChangelogSink.read(spark, dir).select($"uid").as[String]
+      .collect().toSet
+    assert(uids() == Set("T+0+3", "T+0+4"))
+    // one null-timestamp row alone: gone with its partition, and the
+    // audit counts it
+    val single = ChangelogSink.forgetKey(spark, dir, "y").collect()
+    assert(single.map(_.getAs[Long]("rows_deleted")).toSeq == Seq(1L))
+    assert(uids() == Set("T+0+4"))
+    assert(new java.io.File(dir, "topic=T").list().toSeq ==
+      Seq("date=2024-05-01"))
+  }
+
   test("append never sets up a write job in the table root's _temporary") {
     // a plain partitioned write to the root would: its committer shares
     // <root>/_temporary with every other append running at once. Here

@@ -107,5 +107,15 @@ class ReplaySpec extends SparkSpec {
     // uid uniqueness has one owner, the sink's append: no reader dedups
     assert(where("dropDuplicates\\(\"uid\"\\)") ==
       Seq("graft/sink/ChangelogSink.scala"))
+    // a parquet read with no schema runs an inference job; it lives
+    // only in the job-free open helper, and every other read goes
+    // through it or passes .schema(...). Matched on each file's joined
+    // code lines, so a read split across lines or given options counts
+    val text = code.groupBy(_._1).map { case (p, ls) =>
+      p -> ls.map(_._2).mkString("\n") }
+    assert(text.collect { case (p, t)
+        if "read(\\s*\\.option\\([^)]*\\))*\\s*\\.parquet\\(".r
+          .findFirstIn(t).isDefined => p }.toSeq ==
+      Seq("graft/ingest/Tables.scala"))
   }
 }
