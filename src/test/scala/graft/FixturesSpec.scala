@@ -72,7 +72,7 @@ class FixturesSpec extends SparkSpec {
     assert(schema == spark.read.parquet(dir).schema)
   }
 
-  test("both fixture timestamp shapes: the footer schema is the inferred " +
+  test("both fixture timestamp shapes: the opened schema is the inferred " +
       "one, and Tables.load converts each to the same instant") {
     // 2024-05-01T20:00:00.123456789Z; micros truncate the nanos
     val nanos = 1714593600123456789L
