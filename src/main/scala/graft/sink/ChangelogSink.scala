@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.ingest.Tables
 
@@ -29,8 +30,8 @@ object ChangelogSink {
     org.slf4j.LoggerFactory.getLogger(ChangelogSink.getClass)
 
   /**
-   * The COMMIT PRIMITIVE every staged swap (compaction, erasure,
-   * recovery) is built on, and the one place its filesystem assumption
+   * The COMMIT PRIMITIVE [[commit]] and [[recoverStaging]] are built
+   * on, and the one place their filesystem assumption
    * lives: `rename` must be an ATOMIC, O(1) METADATA operation — true on
    * HDFS and POSIX filesystems, where the hide/move/delete protocol then
    * gives per-partition atomicity (a reader never observes missing or
@@ -128,12 +129,13 @@ object ChangelogSink {
    *    micro-batch. On 4 local cores a 1000-record append took 0.5–1.2 s
    *    warm up to 1e6 stored rows that day, and 2.8–3.5 s at 1e7 (61 MB of
    *    uid shuffle).
-   *  - The write is staged in its own dot-dir and its files renamed in:
-   *    Spark's committer shares one `_temporary` dir per output path, so
-   *    two plain appends to one table at once can fail each other. A
-   *    failed append may leave part of its rows stored; a retry stores
-   *    the rest, once. A killed one leaves an `.append-*` dir that
-   *    readers skip and [[recoverStaging]] deletes.
+   *  - The batch goes through [[commit]] with an empty snapshot: staged
+   *    in its own dot-dir (Spark's committer shares one `_temporary` dir
+   *    per output path, so two plain appends to one table at once can
+   *    fail each other) and renamed in. A failed append may leave part
+   *    of its rows stored; a retry stores the rest, once. A killed one
+   *    leaves an `.append-*` dir that readers skip and [[recoverStaging]]
+   *    deletes.
    *
    * Contract: one writer per Kafka (topic, partition), Kafka Connect's
    * task model, so only a later replay of the same partition repeats a
@@ -161,21 +163,7 @@ object ChangelogSink {
           .parquet(touched.map(_.toString).toIndexedSeq: _*)
           .select(col("uid").as("stored_uid")),
         col("uid") === col("stored_uid"), "left_anti")
-    val staging = new Path(root, s".append-${java.util.UUID.randomUUID()}")
-    try {
-      fresh.write.partitionBy("topic", "date").parquet(staging.toString)
-      for {
-        topicDir <- fs.listStatus(staging) if topicDir.isDirectory
-        dateDir <- fs.listStatus(topicDir.getPath) if dateDir.isDirectory
-        part = new Path(root,
-          s"${topicDir.getPath.getName}/${dateDir.getPath.getName}")
-        f <- fs.listStatus(dateDir.getPath) if isDataFile(f)
-      } {
-        fs.mkdirs(part)
-        CommitOps.renameOrThrow(fs, f.getPath,
-          new Path(part, f.getPath.getName), "move-staged", "append")
-      }
-    } finally fs.delete(staging, true)
+    commit(spark, path, fresh, Map.empty, ".append-", "append")
   }
 
   /** The (topic, date) partition's path under the table root, spelled as
@@ -205,13 +193,23 @@ object ChangelogSink {
    * Spark's: driver-side, unless one directory holds more subdirectories
    * than `spark.sql.sources.parallelPartitionDiscovery.threshold`.
    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types._
+  def read(spark: SparkSession, path: String): DataFrame =
     Tables.footerSchema(spark, path).fold(Tables.parquet(spark, path)) {
-      data => spark.read.schema(data
-        .add("topic", StringType).add("date", DateType)).parquet(path)
+      data => spark.read.schema(withPartitionColumns(data)).parquet(path)
     }
-  }
+
+  /** A data-file schema with the partition columns `read` restores. */
+  private def withPartitionColumns(data: StructType): StructType =
+    data.add("topic", StringType).add("date", DateType)
+
+  /** `files` (each under a partition dir of the table at `path`) with
+    * their partition columns restored from the dir names, typed by
+    * `schema`. An explicit file list, never a listing: only a snapshot's
+    * files are read. */
+  private def readFiles(spark: SparkSession, path: String,
+      schema: StructType, files: Seq[FileStatus]): DataFrame =
+    spark.read.schema(schema).option("basePath", path)
+      .parquet(files.map(_.getPath.toString): _*)
 
   /**
    * [[append]] with an ingest audit attached via `Dataset.observe` — the
@@ -261,47 +259,28 @@ object ChangelogSink {
    *  1. discovery — ONE scan with the key filter pushed to parquet
    *     (dictionary/bloom pruning skips most row groups); yields the hit
    *     list + per-partition delete counts (bounded driver metadata);
-   *  2. rewrite — ONE job writing the kept rows of ALL hit partitions
-   *     (partition-pruned read — untouched partitions are never even
-   *     listed) to a dot-prefixed staging dir, `partitionBy(topic,
-   *     date)`; reading while writing elsewhere is safe, no input file
-   *     is touched;
-   *  3. audit — rows_after comes from the STAGED parquet FOOTERS
-   *     (record counts are free metadata; O(#files) driver reads, no
-   *     third data pass) and rows_before = rows_after + rows_deleted;
-   *  4. commit — per hit partition, the same hide-originals → move-staged
-   *     → delete-hidden swap as [[compactPartition]]: O(#files) METADATA
-   *     renames on the driver, zero further Spark jobs. A partition whose
-   *     rows were ALL the subject's stages no output and its directory is
-   *     simply removed.
+   *  2. rewrite — the kept rows of the hit partitions' snapshot files
+   *     (untouched partitions are never even listed) go through
+   *     [[rewrite]]: one staged write (one per topic payload schema),
+   *     then a metadata-only swap per hit partition. A partition whose
+   *     rows were ALL the subject's stages no output and its directory
+   *     is removed;
+   *  3. audit — rows_after comes from the committed files' parquet
+   *     FOOTERS (record counts are free metadata; O(#files) driver reads,
+   *     no third data pass) and rows_before = rows_after + rows_deleted.
    *
-   * This is dynamic-partition-overwrite SEMANTICS (only partitions present
-   * in the output — plus fully-erased ones — change) implemented with the
-   * explicit swap, for two reasons: Spark's path-based writer refuses an
-   * overwrite of a path in its own input (UNSUPPORTED_OVERWRITE.PATH,
-   * regardless of `partitionOverwriteMode=dynamic` — verified on 4.1.2),
-   * and its dynamic committer deletes matching partition directories at
-   * commit with no hide/rollback phase. Atomicity trade-off: the swap is
-   * atomic PER PARTITION (a reader never sees a partition missing or
-   * duplicated rows; a crash mid-swap rolls that partition back) but NOT
-   * across partitions — a crash between partition commits leaves some
-   * partitions erased and some not. That is the same commit granularity
-   * Spark's own dynamic overwrite has, and erasure is idempotent: a RETRY
-   * re-discovers only the partitions still holding the key and finishes
-   * the job (a fully-erased table returns an empty audit, no-op).
-   * Concurrent appends to a HIT partition are pinned out by the same
-   * snapshot rule as [[compactPartition]]: the rewrite reads and the
-   * swap hides EXACTLY the files listed before the rewrite, so a file
-   * appended mid-erasure is neither lost nor duplicated — but its rows
-   * are not erased by THIS call (a retry re-discovers them). Appends to
-   * other partitions are always safe.
+   * The commit is atomic per partition, not across partitions (see
+   * [[commit]]), and erasure is idempotent: a RETRY re-discovers only the
+   * partitions still holding the key and finishes the job (a
+   * fully-erased table returns an empty audit, no-op). A file appended to
+   * a hit partition after the snapshot is neither lost nor duplicated,
+   * but its rows are not erased by THIS call (a retry re-discovers them).
    *
    * Returns the audit frame (topic, date, rows_before, rows_deleted,
    * rows_after) — the erasure receipt a compliance pipeline stores.
    */
   def forgetKey(spark: SparkSession, path: String, key: String)
       : DataFrame = {
-    import org.apache.spark.sql.types._
     val (partAudit, _) = eraseKeys(spark, path, Seq(key))
     spark.createDataFrame(
       spark.sparkContext.parallelize(partAudit.toIndexedSeq.map(t =>
@@ -328,7 +307,6 @@ object ChangelogSink {
    */
   def forgetKeys(spark: SparkSession, path: String, keys: Seq[String])
       : DataFrame = {
-    import org.apache.spark.sql.types._
     val (partAudit, keyHits) = eraseKeys(spark, path, keys)
     val partTotals = partAudit.map(t => ((t._1, t._2), (t._3, t._5))).toMap
     val rows = keyHits.map { case (key, topic, date, nDel) =>
@@ -345,10 +323,9 @@ object ChangelogSink {
         StructField("part_rows_after", LongType))))
   }
 
-  /** Shared erasure core (see [[forgetKey]] for the full protocol and
-    * atomicity notes). Returns (per-partition audit sorted by (topic,
-    * date), per-(key, partition) delete counts sorted by (key, topic,
-    * date)). */
+  /** Shared erasure core (see [[forgetKey]]). Returns (per-partition
+    * audit sorted by (topic, date), per-(key, partition) delete counts
+    * sorted by (key, topic, date)). */
   private def eraseKeys(spark: SparkSession, path: String,
       keys: Seq[String])
       : (Seq[(String, String, Long, Long, Long)],
@@ -374,111 +351,182 @@ object ChangelogSink {
       .toSeq.sortBy(t => (t._1, Option(t._2)))
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pin the SNAPSHOT once, before the rewrite reads anything — the
-    // same append-safety pattern as [[compactPartition]]: the rewrite
-    // reads exactly these files and the swap hides/deletes exactly these
-    // files, so a file appended to a hit partition after this listing is
-    // neither lost (it is never hidden) nor duplicated (it is never
-    // read). Its rows are simply NOT erased — concurrent appends during
-    // erasure remain unsupported, but the failure mode is now visible
-    // non-erasure (a retry re-discovers the key), never silent loss.
-    val snapshot: Map[(String, String), Seq[FileStatus]] =
-      hits.map { case (t, d, _) =>
-        (t, d) -> fs.listStatus(new Path(path, partDir(t, d)))
-          // dot-files are NOT data: a crash mid-swap leaves hidden
-          // .forgetting-*/.compacting-*.parquet leftovers, and feeding
-          // one to spark.read as an EXPLICIT path (hidden-file filtering
-          // of explicit roots is version-dependent) while the swap later
-          // hides/deletes it could drop rows that were never rewritten
-          .filter(isDataFile).toSeq
-      }.toMap
-    val snapshotFiles = hits.flatMap { case (t, d, _) =>
-      snapshot((t, d)).map(_.getPath.toString) }
-    val staging = new Path(path, s".forget-${System.nanoTime()}")
-    // ONE staged write of the snapshot files' kept rows; basePath
-    // restores the (topic, date) partition columns from the directory
-    // names, typed by the table's schema. Natural input partitioning (no
-    // repartition(1)) keeps the rewrite fully parallel. NULL keys are
-    // never a subject: isin() is null for them, so keep on
-    // coalesce(..., false)
-    spark.read.schema(table.schema).option("basePath", path)
-      .parquet(snapshotFiles: _*)
-      .where(!coalesce(col("key").isin(keys: _*), lit(false)))
-      .write.partitionBy("topic", "date")
-      .mode("overwrite").parquet(staging.toString)
-    // MANIFEST before any swap: staged layout, the hit-partition list,
-    // the ORIGINAL (snapshot) file names and every staged file name. A
-    // hard crash (process kill, no in-process rollback) can strand
-    // partitions mid-swap; [[recoverStaging]] replays the commit
-    // deterministically from this manifest. Its presence also marks the
-    // staged write as COMPLETE (it is written strictly after the write
-    // job returns) — a staging dir without one is discardable debris.
-    val staged = hits.map { case (t, d, _) =>
-      (t, d) -> stagedFiles(fs, new Path(staging, partDir(t, d)))
-    }.toMap
-    writeManifest(fs, staging, nested = true, hits.map { case (t, d, _) =>
-      (partDir(t, d), snapshot((t, d)).map(_.getPath.getName),
-        staged((t, d)).map(_.getPath.getName))
-    })
-    // parquet footers carry exact record counts — the audit's rows_after
-    // is a metadata read per staged file, never a third data pass
-    def footerRows(f: FileStatus): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromStatus(f, spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    // the SNAPSHOT, listed before the rewrite reads anything
+    val snapshot = hits.map { case (t, d, _) =>
+      partDir(t, d) -> dataFiles(fs, new Path(path, partDir(t, d)))
+    }
+    // the snapshot files' kept rows; natural input partitioning keeps the
+    // rewrite fully parallel. NULL keys are never a subject: isin() is
+    // null for them, so keep on coalesce(..., false)
+    val committed = rewrite(spark, path, snapshot, ".forget-",
+        "forgetKeys") { (schema, group) =>
+      readFiles(spark, path, schema, group.flatMap(_._2))
+        .where(!coalesce(col("key").isin(keys: _*), lit(false)))
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footerRows(f: Path): Long = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       try r.getRecordCount finally r.close()
     }
     val audit = hits.map { case (topic, date, nDel) =>
-      val part = new Path(path, partDir(topic, date))
-      val moveIn = staged((topic, date))
-      val b = moveIn.map(footerRows).sum + nDel
-      swap(fs, part, snapshot((topic, date)), moveIn, ".forgetting-",
-        "forgetKeys").foreach(fs.delete(_, false))
-      // fully erased AND nothing landed after the snapshot: drop the
-      // dir (a post-snapshot append keeps the partition alive)
-      if (b == nDel && fs.listStatus(part).isEmpty)
-        fs.delete(part, true)
+      val b = committed.getOrElse(partDir(topic, date), Nil)
+        .map(footerRows).sum + nDel
       (topic, date, b, nDel, b - nDel)
     }
-    fs.delete(staging, true)
     (audit, keyHits.toIndexedSeq)
   }
 
-  /** A visible parquet data file: not a dot-hidden swap leftover. */
-  private def isDataFile(f: FileStatus): Boolean =
-    f.isFile && f.getPath.getName.endsWith(".parquet") &&
-      !f.getPath.getName.startsWith(".")
-
-  /** The `part-` files a staged write left in `dir` (none if absent). */
-  private def stagedFiles(fs: org.apache.hadoop.fs.FileSystem,
+  /** The visible parquet data files in `dir`, never a dot-hidden swap
+    * leftover: a crash mid-swap leaves hidden .forgetting-* and
+    * .compacting-* originals for [[recoverStaging]] to settle, and
+    * reading one as an explicit path would duplicate its rows or, once a
+    * swap hid or deleted it, drop rows never rewritten. */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): Seq[FileStatus] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-")).toSeq
+    fs.listStatus(dir).filter(f => f.isFile &&
+      f.getPath.getName.endsWith(".parquet") &&
+      !f.getPath.getName.startsWith(".")).toSeq
 
-  /** Phases 1 and 2 of the staged swap shared by erasure and compaction
-    * (protocol on [[compactPartition]]): hide every original behind
-    * `hidePrefix`, then move every staged file into `part`. Any failure
-    * un-moves (else deletes) the staged files already moved in BEFORE it
-    * restores the originals, so a partial staged copy never stays
-    * visible beside them. Returns the hidden originals for the caller's
-    * phase 3 delete; `note` is appended to rename failure messages. */
+  /** Every `topic=*` / `date=*` partition dir under `root` (a table root
+    * or a staging dir). */
+  private def partitions(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path): Seq[Path] = for {
+    topicDir <- fs.listStatus(root).toSeq
+    if topicDir.isDirectory && topicDir.getPath.getName.startsWith("topic=")
+    dateDir <- fs.listStatus(topicDir.getPath).toSeq
+    if dateDir.isDirectory && dateDir.getPath.getName.startsWith("date=")
+  } yield dateDir.getPath
+
+  /** A partition dir's path relative to its root, `topic=…/date=…`. */
+  private def relOf(part: Path): String =
+    s"${part.getParent.getName}/${part.getName}"
+
+  /** The dot-prefix [[commit]] and [[recoverStaging]] hide a staging
+    * dir's snapshot originals behind. */
+  private def hidePrefixOf(staging: String): String =
+    if (staging.startsWith(".forget-")) ".forgetting-" else ".compacting-"
+
+  /**
+   * The one commit step of every changelog write: [[append]], erasure
+   * and compaction. `frame` holds the new rows, `topic` and `date`
+   * columns included; `snapshot` maps each partition to replace (its
+   * path relative to the root) to the original files the caller listed
+   * before reading any of them, and is empty for an append.
+   *
+   *  1. stage — ONE write of `frame`, partitioned by (topic, date), into
+   *     a dot-dir named `stage` plus a UUID. Readers skip dot-paths, and
+   *     no two writers of the table share Spark's `_temporary`. Spark's
+   *     own overwrite cannot do this: its path-based writer refuses to
+   *     overwrite a path in its own input (UNSUPPORTED_OVERWRITE.PATH,
+   *     whatever `partitionOverwriteMode` says), and its dynamic
+   *     committer deletes the old partition dirs with no rollback.
+   *  2. manifest — unless the snapshot is empty, `_MANIFEST` records
+   *     every partition, its snapshot originals and its staged files,
+   *     strictly after the write and before any rename (see
+   *     [[writeManifest]]). [[recoverStaging]] replays a killed commit
+   *     from it; a staging dir without one is debris.
+   *  3. swap — per partition, in path order, [[swap]] hides every
+   *     snapshot original behind a dot-prefixed rename, then moves the
+   *     staged files in; the hidden originals are then deleted, and a
+   *     partition left empty (fully erased, nothing appended since the
+   *     snapshot) loses its dir. O(#files) metadata renames on the
+   *     driver, no Spark job. Every rename is checked (HDFS and local
+   *     `rename` report failure by returning false), and a failure rolls
+   *     its partition back to exactly its pre-swap files.
+   *  4. clean up — the staging dir is deleted. A failed commit keeps it
+   *     only when it has a manifest, for [[recoverStaging]].
+   *
+   * Only snapshot files are read, hidden or deleted, so a file appended
+   * to a partition after the caller's listing is neither lost nor
+   * duplicated; its rows are just not part of this rewrite. A reader
+   * never sees a partition with missing or duplicated rows. The commit is
+   * atomic per partition, not across partitions — the granularity of
+   * Spark's own dynamic overwrite: a failure leaves the partitions before
+   * it committed and the rest as they were, and erasure and compaction
+   * are idempotent, so a retry or [[recoverStaging]] finishes them. Two
+   * commits that replace the same partition must not run at once (their
+   * hides would race); appends may run beside anything. `rename` must be
+   * an atomic metadata operation ([[CommitOps]] says what an object
+   * store does instead). Returns the committed files of each partition.
+   */
+  private def commit(spark: SparkSession, path: String, frame: DataFrame,
+      snapshot: Map[String, Seq[FileStatus]], stage: String, op: String)
+      : Map[String, Seq[Path]] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(root, stage + java.util.UUID.randomUUID())
+    var done = false
+    try {
+      frame.write.partitionBy("topic", "date").parquet(staging.toString)
+      val staged = partitions(fs, staging)
+        .map(p => relOf(p) -> dataFiles(fs, p)).toMap
+      val parts = (snapshot.keySet ++ staged.keySet).toSeq.sorted
+      def names(files: Map[String, Seq[FileStatus]], rel: String) =
+        files.getOrElse(rel, Nil).map(_.getPath.getName)
+      if (snapshot.nonEmpty) writeManifest(fs, staging, parts.map(rel =>
+        (rel, names(snapshot, rel), names(staged, rel))))
+      val committed = parts.map { rel =>
+        val part = new Path(root, rel)
+        val moveIn = staged.getOrElse(rel, Nil)
+        if (moveIn.nonEmpty) fs.mkdirs(part)
+        swap(fs, part, snapshot.getOrElse(rel, Nil), moveIn,
+          hidePrefixOf(stage), op).foreach(fs.delete(_, false))
+        if (moveIn.isEmpty && fs.listStatus(part).isEmpty)
+          fs.delete(part, true)
+        rel -> moveIn.map(f => new Path(part, f.getPath.getName))
+      }.toMap
+      done = true
+      committed
+    } finally {
+      if (done || !fs.exists(new Path(staging, ManifestName)))
+        fs.delete(staging, true)
+    }
+  }
+
+  /** [[commit]] of a rewrite of `snapshot`'s partitions (each its path
+    * relative to the root and its files), one commit per distinct data
+    * schema: the first file's, as a read of the partition infers it.
+    * Each topic's envelope carries its own `message` struct, and a write
+    * has one schema, so one rewrite of two topics' partitions would read
+    * every file with one topic's schema and drop the other's fields.
+    * `rows` builds a group's new rows from its schema (partition columns
+    * included) and its partitions. Returns the committed files of each
+    * partition. */
+  private def rewrite(spark: SparkSession, path: String,
+      snapshot: Seq[(String, Seq[FileStatus])], stage: String, op: String)(
+      rows: (StructType, Seq[(String, Seq[FileStatus])]) => DataFrame)
+      : Map[String, Seq[Path]] = {
+    val bySchema = snapshot.filter(_._2.nonEmpty).map { case p @ (_, files) =>
+      withPartitionColumns(Tables.footerSchema(spark,
+        files.head.getPath.toString).get) -> p
+    }
+    bySchema.map(_._1).distinct.flatMap { schema =>
+      val group = bySchema.collect { case (`schema`, p) => p }
+      commit(spark, path, rows(schema, group), group.toMap, stage, op)
+    }.toMap
+  }
+
+  /** Phases 1 and 2 of [[commit]]'s swap for one partition: hide every
+    * original behind `hidePrefix`, then move every staged file into
+    * `part`. Any failure un-moves (else deletes) the staged files already
+    * moved in BEFORE it restores the originals, so a partial staged copy
+    * never stays visible beside them. Returns the hidden originals for
+    * the caller's phase 3 delete. */
   private def swap(fs: org.apache.hadoop.fs.FileSystem, part: Path,
       originals: Seq[FileStatus], staged: Seq[FileStatus],
-      hidePrefix: String, op: String, note: String = ""): Seq[Path] = {
-    def renameOrThrow(src: Path, dst: Path, what: String): Unit =
-      CommitOps.renameOrThrow(fs, src, dst, what + note, op)
+      hidePrefix: String, op: String): Seq[Path] = {
     val hidden = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
     val moved = scala.collection.mutable.ListBuffer.empty[(Path, Path)]
     try {
       originals.foreach { f =>
         val h = new Path(part, hidePrefix + f.getPath.getName)
-        renameOrThrow(f.getPath, h, "hide-original")
+        CommitOps.renameOrThrow(fs, f.getPath, h, "hide-original", op)
         hidden += ((f.getPath, h))
       }
       staged.foreach { f =>
         val dst = new Path(part, f.getPath.getName)
-        renameOrThrow(f.getPath, dst, "move-staged")
+        CommitOps.renameOrThrow(fs, f.getPath, dst, "move-staged", op)
         moved += ((f.getPath, dst))
       }
     } catch {
@@ -505,35 +553,31 @@ object ChangelogSink {
 
   private val ManifestName = "_MANIFEST"
 
-  /** Manifest written into a staging dir strictly AFTER its write job
-    * succeeds and strictly BEFORE any swap rename. Line format:
-    * `L nested|flat` (staged files under partition subdirs or at the
-    * staging root), `P <partRel>`, `O <partRel>/<origName>` (the swap's
-    * SNAPSHOT — recovery must never touch files appended after it),
+  /** The manifest of a staging dir. Line format: `L nested` (staged
+    * files under partition subdirs; [[recoverStaging]] still reads the
+    * `L flat` layout an older build wrote, staged files at the staging
+    * root), `P <partRel>`, `O <partRel>/<origName>` (the swap's SNAPSHOT
+    * — recovery must never touch files appended after it),
     * `F <partRel>/<stagedName>`. */
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      staging: Path, nested: Boolean,
-      parts: Seq[(String, Seq[String], Seq[String])]): Unit = {
-    val out = fs.create(new Path(staging, ManifestName), true)
-    try {
-      out.write(s"L ${if (nested) "nested" else "flat"}\n".getBytes("UTF-8"))
-      parts.foreach { case (rel, _, _) =>
-        out.write(s"P $rel\n".getBytes("UTF-8")) }
-      parts.foreach { case (rel, origs, _) =>
-        origs.foreach(n => out.write(s"O $rel/$n\n".getBytes("UTF-8"))) }
-      parts.foreach { case (rel, _, staged) =>
-        staged.foreach(n => out.write(s"F $rel/$n\n".getBytes("UTF-8"))) }
-    } finally out.close()
+      staging: Path, parts: Seq[(String, Seq[String], Seq[String])]): Unit = {
+    val lines = "L nested" +: (parts.map { case (rel, _, _) => s"P $rel" } ++
+      parts.flatMap { case (rel, origs, _) => origs.map(n => s"O $rel/$n") } ++
+      parts.flatMap { case (rel, _, staged) => staged.map(n => s"F $rel/$n") })
+    val out = new java.io.OutputStreamWriter(
+      fs.create(new Path(staging, ManifestName), true), "UTF-8")
+    try out.append(lines.mkString("", "\n", "\n")) finally out.close()
   }
 
   /**
-   * HARD-CRASH RECOVERY for the staged swaps (erasure `.forget-*` and
-   * compaction `.compact-*`), sweeping killed appends' `.append-*` too. The in-process rollback handles rename
-   * FAILURES; a process kill mid-swap handles nothing — it can strand a
-   * partition with its snapshot originals hidden (dot-prefixed,
-   * invisible to readers) and the staged files only partially moved in.
-   * Readers see missing rows until someone repairs it, and a blind
-   * erasure RETRY cannot: the subject's rows are hidden from discovery.
+   * HARD-CRASH RECOVERY for [[commit]]: erasure `.forget-*` and
+   * compaction `.compact-*` staging dirs, and killed appends'
+   * `.append-*`. The in-process rollback handles rename FAILURES; a
+   * process kill mid-swap handles nothing — it can strand a partition
+   * with its snapshot originals hidden (dot-prefixed, invisible to
+   * readers) and the staged files only partially moved in. Readers see
+   * missing rows until someone repairs it, and a blind erasure RETRY
+   * cannot: the subject's rows are hidden from discovery.
    *
    * Recovery is a deterministic ROLL-FORWARD replay of the commit from
    * the staging manifest, per manifest partition:
@@ -541,8 +585,7 @@ object ChangelogSink {
    *  - still-visible manifest ORIGINALS mean the move phase never
    *    started there (hide-all strictly precedes move): hide and drop
    *    them; files NOT in the manifest (appended after the snapshot)
-   *    are never touched — the compaction append-safety rule survives
-   *    the crash;
+   *    are never touched — the append-safety rule survives the crash;
    *  - staged files still in staging move in; hidden originals delete;
    *    an erasure partition with no staged files was fully erased and
    *    its directory drops (unless post-snapshot appends landed there);
@@ -583,9 +626,7 @@ object ChangelogSink {
     var (forward, discarded) = (0, 0)
     stagings.foreach { st =>
       val staging = st.getPath
-      val hidePrefix =
-        if (staging.getName.startsWith(".forget-")) ".forgetting-"
-        else ".compacting-"
+      val hidePrefix = hidePrefixOf(staging.getName)
       val manifest = new Path(staging, ManifestName)
       if (!fs.exists(manifest)) {
         fs.delete(staging, true) // write died pre-manifest: pure debris
@@ -665,67 +706,46 @@ object ChangelogSink {
    * job behind any streaming append sink: `foreachBatch` writes one file
    * per micro-batch per partition, and a day of 1-minute triggers leaves
    * 1440 tiny files whose open/footer cost dominates scans. Rewrites the
-   * partition into `ceil(bytes / targetBytes)` files, staged into a
-   * dot-prefixed temp dir (invisible to concurrent readers — Spark's file
-   * listing skips `.`/`_` paths) and swapped in with O(#files) renames.
-   * Only this partition's bytes are rewritten; a whole-table compaction is
-   * this per-partition job fanned out over partitions, so the unit of
-   * work stays bounded no matter how large the table grows. Idempotent:
-   * re-running on a compact partition is a no-op. Returns the resulting
-   * file count.
-   *
-   * Crash/failure safety: the input is pinned to the file SNAPSHOT taken
-   * up front (a file appended after the listing is neither read nor
-   * removed, so it is never duplicated or lost), and the swap runs in
-   * three checked phases — hide every original behind a dot-prefixed
-   * rename (reversible, invisible to readers), move the staged files in,
-   * then delete the hidden originals. Every rename result is checked
-   * (HDFS/local `rename` reports failure by returning false, not by
-   * throwing); any failure before the move completes first un-moves any
-   * staged files already swapped in, then restores the hidden originals,
-   * so the partition returns to exactly its pre-swap state — at no point
-   * can a reader observe missing OR duplicated rows, and a retry
-   * snapshots the original files only. Failures during the final
-   * cleanup leave only dot-prefixed garbage that readers skip. Compaction
-   * must still not run concurrently with another compaction of the SAME
-   * partition (the hide phase would race); appends are safe.
+   * partition's files into `ceil(bytes / targetBytes)` files through
+   * [[commit]]; only this partition's bytes are rewritten. Idempotent:
+   * re-running on a compact partition is a no-op. A null `date` names
+   * the partition of null-timestamp rows. Returns the resulting file
+   * count. [[rollIfNeeded]] is the same rewrite over every fragmented
+   * partition of the table at once.
    */
   def compactPartition(spark: SparkSession, path: String, topic: String,
       date: String, targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val part = new Path(s"$path/topic=$topic/date=$date")
+    val part = new Path(path, partDir(topic, date))
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(part)) return 0
-    val files = fs.listStatus(part)
-      // exclude crash-leftover dot-hidden files (.compacting-*.parquet):
-      // they are pre-swap originals, not data to re-compact — run
-      // recoverStaging first; reading one explicitly here would
-      // duplicate its rows into the compacted output
-      .filter(isDataFile)
-    if (files.length <= 1) return files.length
-    val nOut = math.max(1,
-      math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
+    val (files, nOut) = layout(fs, part, targetBytes)
     if (nOut >= files.length) return files.length // already compact
-    // read the SNAPSHOT file list, not the directory: a file appended
-    // between the listing and the rewrite is then neither read (no
-    // duplicate rows in the compacted output) nor hidden/deleted below
-    // (it survives untouched). Leaf files hold exactly the data columns
-    // (partition values live in the directory name).
-    val df = Tables.parquet(spark, files.map(_.getPath.toString).toIndexedSeq: _*)
-    val tmp = new Path(path,
-      s".compact-$topic-$date-${System.nanoTime()}")
-    df.repartition(nOut).write.mode("overwrite").parquet(tmp.toString)
-    val staged = stagedFiles(fs, tmp)
-    // manifest before any swap — [[recoverStaging]] can replay this
-    // commit after a hard crash; O = the snapshot only, so files
-    // appended after the listing stay untouched even through recovery
-    writeManifest(fs, tmp, nested = false, Seq((s"topic=$topic/date=$date",
-      files.map(_.getPath.getName).toSeq, staged.map(_.getPath.getName))))
-    // tmp is left for inspection/retry if the swap rolls back
-    swap(fs, part, files.toSeq, staged, ".compacting-",
-      "compactPartition", s" (staged output left intact at $tmp)")
-      .foreach(fs.delete(_, false))
-    fs.delete(tmp, true)
+    compact(spark, path, Seq((relOf(part), files, nOut)))
     nOut
+  }
+
+  /** A partition's data files and the `ceil(bytes / targetBytes)` file
+    * count compaction rewrites them into; the partition is fragmented
+    * when that count is below its file count. */
+  private def layout(fs: org.apache.hadoop.fs.FileSystem, part: Path,
+      targetBytes: Long): (Seq[FileStatus], Int) = {
+    val files = dataFiles(fs, part)
+    (files, math.max(1,
+      math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt))
+  }
+
+  /** Compact fragmented partitions, each given as (path relative to the
+    * root, snapshot files, target file count): the union of each
+    * partition's files, repartitioned to its count, through [[rewrite]]. */
+  private def compact(spark: SparkSession, path: String,
+      parts: Seq[(String, Seq[FileStatus], Int)]): Unit = {
+    val nOut = parts.map(p => p._1 -> p._3).toMap
+    rewrite(spark, path, parts.map(p => p._1 -> p._2), ".compact-",
+        "compact") { (schema, group) =>
+      group.map { case (rel, files) =>
+        readFiles(spark, path, schema, files).repartition(nOut(rel))
+      }.reduce(_ union _)
+    }
   }
 
   /**
@@ -736,94 +756,62 @@ object ChangelogSink {
    * changelog the "new index per period" half happens by construction,
    * so the conditions reduce to one sweep over partitions:
    *
-   *  - AGE: date partitions strictly older than `cutoff` (yyyy-MM-dd)
-   *    are dropped — metadata-only, no data rewrite;
-   *  - SIZE/SHAPE: a surviving partition whose file count exceeds what
-   *    `targetBytes` would produce is compacted via [[compactPartition]]
-   *    (bounded per-partition unit of work).
+   *  - AGE: [[dropPartitionsBefore]] `cutoff` — metadata-only, no data
+   *    rewrite;
+   *  - SIZE/SHAPE: every surviving partition with more files than
+   *    `ceil(bytes / targetBytes)` is compacted to that count, all of
+   *    them in one staged write per topic payload schema (see
+   *    [[rewrite]]). Spark runs the partitions' rewrites as tasks of
+   *    that write, so the cluster stays full without a driver thread
+   *    per partition.
    *
-   * Idempotent: a second sweep with the same arguments is a no-op.
+   * Idempotent: a second sweep with the same arguments is a no-op. A
+   * failed sweep leaves the partitions it committed compacted and the
+   * rest as they were; a re-run, or [[recoverStaging]], finishes it.
    * Returns (droppedPartitions, compactedPartitions).
-   *
-   * Fragmented partitions compact CONCURRENTLY (`maxConcurrent` driver
-   * threads, each submitting its own Spark job — partitions are
-   * independent, so the only rule, no concurrent compaction of the SAME
-   * partition, is preserved by construction). A nightly sweep over a
-   * 100 TB table with thousands of fragmented partitions is otherwise
-   * serialized at one small rewrite job at a time; concurrent submission
-   * keeps the cluster full while each unit of work stays bounded. A
-   * failed partition aborts the sweep (its own rollback already ran; the
-   * sweep is idempotent, so re-running finishes the rest).
    */
   def rollIfNeeded(spark: SparkSession, path: String, cutoff: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      maxConcurrent: Int = 4): (Int, Int) = {
+      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val dropped = dropPartitionsBefore(spark, path, cutoff)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return (dropped, 0)
-    val candidates = for {
-      topicDir <- fs.listStatus(root).toSeq
-      if topicDir.isDirectory && topicDir.getPath.getName.startsWith("topic=")
-      dateDir <- fs.listStatus(topicDir.getPath).toSeq
-      if dateDir.isDirectory && dateDir.getPath.getName.startsWith("date=")
-      files = fs.listStatus(dateDir.getPath).filter(isDataFile)
-      nOut = math.max(1,
-        math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
-      if files.length > 1 && nOut < files.length
-    } yield (topicDir.getPath.getName.stripPrefix("topic="),
-      dateDir.getPath.getName.stripPrefix("date="))
-    if (candidates.isEmpty) return (dropped, 0)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(maxConcurrent, candidates.size)))
-      .asInstanceOf[java.util.concurrent.ThreadPoolExecutor]
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val done = scala.concurrent.Future.traverse(candidates) {
-        case (topic, date) => scala.concurrent.Future {
-          compactPartition(spark, path, topic, date, targetBytes)
-        }
-      }
-      scala.concurrent.Await.result(done,
-        scala.concurrent.duration.Duration.Inf)
-      (dropped, candidates.size)
-    } finally {
-      // Await.result rethrows on the FIRST failed compaction while
-      // sibling swaps may still be mid-flight on pool threads (and more
-      // queued). Control must not return — to a retry, or to
-      // recoverStaging — while a live swap runs, so: drop the queued
-      // units (each is independent; the idempotent re-run picks them
-      // up), then WAIT for in-flight compactions to finish their own
-      // commit-or-rollback. On the success path all futures are done and
-      // this is instant.
-      pool.getQueue.clear()
-      pool.shutdown()
-      pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
-    }
+    val fragmented = for {
+      part <- partitions(fs, root)
+      (files, nOut) = layout(fs, part, targetBytes)
+      if nOut < files.length
+    } yield (relOf(part), files, nOut)
+    if (fragmented.nonEmpty) compact(spark, path, fragmented)
+    (dropped, fragmented.size)
   }
 
   /**
-   * K3 — retention: drop date partitions strictly older than `cutoff`
-   * (yyyy-MM-dd). The reference's "define some rollover conditions"
-   * (README.md:14) becomes an O(#partitions) filesystem operation — no
-   * records are read or rewritten, which is the only retention strategy
-   * that survives 100 TB.
+   * K3 — retention: drop date partitions strictly older than `cutoff`, a
+   * `yyyy-MM-dd` date (anything else throws `IllegalArgumentException`).
+   * The reference's "define some rollover conditions" (README.md:14)
+   * becomes an O(#partitions) filesystem operation — no records are read
+   * or rewritten, which is the only retention strategy that survives
+   * 100 TB. Retention by age keeps the rows with a null timestamp
+   * (`date=__HIVE_DEFAULT_PARTITION__`): they have no age, and only
+   * erasure ([[forgetKeys]]) removes them.
    */
   def dropPartitionsBefore(spark: SparkSession, path: String, cutoff: String): Int = {
+    val limit =
+      try java.time.LocalDate.parse(cutoff)
+      catch {
+        case e: java.time.format.DateTimeParseException =>
+          throw new IllegalArgumentException(
+            s"retention cutoff '$cutoff' is not a yyyy-MM-dd date", e)
+      }
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return 0
-    var dropped = 0
-    for (topicDir <- fs.listStatus(root) if topicDir.isDirectory) {
-      for (dateDir <- fs.listStatus(topicDir.getPath) if dateDir.isDirectory) {
-        val name = dateDir.getPath.getName // date=yyyy-MM-dd
-        if (name.startsWith("date=") && name.stripPrefix("date=") < cutoff) {
-          fs.delete(dateDir.getPath, true)
-          dropped += 1
-        }
-      }
+    val old = partitions(fs, root).filter { part =>
+      val date = part.getName.stripPrefix("date=")
+      date != ExternalCatalogUtils.DEFAULT_PARTITION_NAME &&
+        java.time.LocalDate.parse(date).isBefore(limit)
     }
-    dropped
+    old.foreach(fs.delete(_, true))
+    old.size
   }
 }

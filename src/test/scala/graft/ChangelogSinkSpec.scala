@@ -1146,6 +1146,184 @@ class ChangelogSinkSpec extends SparkSpec {
       Seq("date=2024-05-01"))
   }
 
+  test("retention by age keeps null-timestamp rows: a future cutoff " +
+      "drops only the dated partition, and a malformed cutoff throws") {
+    val dir = Files.createTempDirectory("changelog-retain-null").toString
+    ChangelogSink.append(Seq(
+      ("T", 0, 1L, "T+0+1", "k", java.sql.Timestamp.from(
+        java.time.Instant.parse("2024-05-01T20:00:00Z"))),
+      ("T", 0, 2L, "T+0+2", "k", null: java.sql.Timestamp))
+      .toDF("topic", "partition", "offset", "uid", "key", "timestamp"), dir)
+    assert(ChangelogSink.dropPartitionsBefore(spark, dir, "2030-01-01") == 1)
+    assert(new java.io.File(dir, "topic=T").list().toSeq ==
+      Seq("date=__HIVE_DEFAULT_PARTITION__"))
+    assert(ChangelogSink.read(spark, dir).select($"uid").as[String]
+      .collect().toSeq == Seq("T+0+2"))
+    // a cutoff that is not yyyy-MM-dd fails before anything is dropped
+    Seq("2024-5-1", "yesterday", "2024-05-01T00:00").foreach { bad =>
+      intercept[IllegalArgumentException](
+        ChangelogSink.dropPartitionsBefore(spark, dir, bad))
+      intercept[IllegalArgumentException](
+        ChangelogSink.rollIfNeeded(spark, dir, bad))
+    }
+    assert(new java.io.File(dir, "topic=T").list().toSeq ==
+      Seq("date=__HIVE_DEFAULT_PARTITION__"))
+  }
+
+  /** Three (topic, date) partitions, each appended `appends` times as one
+    * file per append: (A, 2024-05-01) with `big` rows per append, (B,
+    * 2024-05-01) and (A, null timestamp) with 100 rows per append. */
+  private def fragmentedTable(dir: String, big: Int, appends: Int): Unit = {
+    val day = java.sql.Timestamp.valueOf("2024-05-01 10:00:00")
+    val parts = Seq(("A", day, big), ("B", day, 100),
+      ("A", null: java.sql.Timestamp, 100))
+    (0 until appends).foreach { b =>
+      ChangelogSink.append(parts.flatMap { case (t, ts, n) =>
+        (0 until n).map(i => (t, s"$t-${ts != null}-$b-$i", s"k${i % 7}", ts))
+      }.toDF("topic", "uid", "key", "timestamp").coalesce(1), dir)
+    }
+  }
+
+  private val sweptRels = Seq("topic=A/date=2024-05-01",
+    "topic=A/date=__HIVE_DEFAULT_PARTITION__", "topic=B/date=2024-05-01")
+
+  private def dataFiles(part: java.io.File): Seq[java.io.File] =
+    part.listFiles().toSeq.filter(f =>
+      f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+
+  test("rollIfNeeded compacts every fragmented partition of two topics, " +
+      "the null-timestamp one included, in one write command: " +
+      "ceil(bytes/target) files each, rows unchanged, re-run a no-op") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources
+      .InsertIntoHadoopFsRelationCommand
+    val dir = Files.createTempDirectory("sink-sweep").toString
+    fragmentedTable(dir, big = 1200, appends = 3)
+    def part(rel: String) = new java.io.File(dir, rel)
+    def bytes(rel: String) = dataFiles(part(rel)).map(_.length).sum
+    sweptRels.foreach(r => assert(dataFiles(part(r)).size == 3, r))
+    // the big partition compacts to two files, the others to one each
+    val target = (bytes(sweptRels.head) + 1) / 2
+    val want = sweptRels.map(r =>
+      r -> math.ceil(bytes(r).toDouble / target).toInt).toMap
+    assert(want == Map(sweptRels(0) -> 2, sweptRels(1) -> 1,
+      sweptRels(2) -> 1), s"target $target: $want")
+    def rows() = ChangelogSink.read(spark, dir).collect().map(_.toString)
+      .toSeq.sorted
+    val before = rows()
+
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.logical.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand]))
+          writes.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val swept = try {
+      val r = ChangelogSink.rollIfNeeded(spark, dir, "2024-01-01", target)
+      // listener events are async: wait until the count is stable
+      var (last, stableFor) = (-1, 0)
+      while (stableFor < 4) {
+        Thread.sleep(250)
+        if (writes.get() == last) stableFor += 1
+        else { last = writes.get(); stableFor = 0 }
+      }
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(swept == ((0, 3)))
+    assert(writes.get() == 1, s"${writes.get()} write commands for 3 partitions")
+    sweptRels.foreach(r => assert(dataFiles(part(r)).size == want(r), r))
+    assert(rows() == before)
+    assert(!new java.io.File(dir).list().exists(_.startsWith(".")))
+    // idempotent: every partition is at its target count
+    val layout = sweptRels.map(r => dataFiles(part(r)).map(_.getName).toSet)
+    assert(ChangelogSink.rollIfNeeded(spark, dir, "2024-01-01", target) ==
+      ((0, 0)))
+    assert(sweptRels.map(r => dataFiles(part(r)).map(_.getName).toSet) ==
+      layout)
+  }
+
+  test("a sweep that fails mid-commit keeps the partition it swapped, " +
+      "rolls the failing one back, and recoverStaging rolls every " +
+      "manifest partition forward: no row lost or duplicated") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.flaky.impl", classOf[FlakyRenameFs].getName)
+    val local = Files.createTempDirectory("sweep-crash").toString
+    val dir = "flaky:" + local
+    fragmentedTable(dir, big = 100, appends = 3)
+    // content through plain file: paths (parquet data is never read
+    // through the test scheme by the assertions)
+    def rows(rel: String): Seq[String] =
+      spark.read.parquet(s"file:$local/$rel").collect().map(_.toString)
+        .toSeq.sorted
+    def files(rel: String) = dataFiles(new java.io.File(local, rel)).size
+    val before = sweptRels.map(r => r -> rows(r)).toMap
+    sweptRels.foreach(r => assert(files(r) == 3, r))
+
+    // each partition stages one file, swapped in path order: the second
+    // move overall is the second partition's
+    FlakyRenameFs.movesSeen.set(0)
+    FlakyRenameFs.failMovesAfter = 1
+    try {
+      val e = intercept[IllegalStateException](
+        ChangelogSink.rollIfNeeded(spark, dir, "2024-01-01"))
+      assert(e.getMessage.contains("move-staged"), e.getMessage)
+    } finally FlakyRenameFs.failMovesAfter = -1
+
+    assert(sweptRels.map(files) == Seq(1, 3, 3))
+    sweptRels.foreach { r =>
+      assert(rows(r) == before(r), s"$r changed by the failed sweep")
+      assert(!new java.io.File(local, r).list()
+        .exists(_.startsWith(".compacting-")), r)
+    }
+    val staging = new java.io.File(local).listFiles()
+      .filter(_.getName.startsWith(".compact-"))
+    assert(staging.length == 1 &&
+      new java.io.File(staging.head, "_MANIFEST").isFile)
+
+    assert(ChangelogSink.recoverStaging(spark, dir) == ((1, 0)))
+    assert(sweptRels.map(files) == Seq(1, 1, 1))
+    sweptRels.foreach(r => assert(rows(r) == before(r), r))
+    assert(!new java.io.File(local).list().exists(_.startsWith(".")))
+  }
+
+  test("compaction and erasure over two topics keep each topic's " +
+      "payload schema: no rewrite drops another topic's fields") {
+    val dir = Files.createTempDirectory("changelog-two-schemas").toString
+    val ts = java.sql.Timestamp.valueOf("2024-05-01 10:00:00")
+    // two topics whose envelopes carry different `message` structs, two
+    // appends each: two or more files per partition
+    (0 until 2).foreach { b =>
+      ChangelogSink.append(Seq(("events", s"e$b-1", "s", ts, "click", 1.5),
+          ("events", s"e$b-2", "x", ts, "view", 2.5 + b))
+        .toDF("topic", "uid", "key", "timestamp", "event_type", "amount")
+        .select($"topic", $"uid", $"key", $"timestamp",
+          struct($"event_type", $"amount").as("message")), dir)
+      ChangelogSink.append(Seq(("orders", s"o$b-1", "s", ts, "paid", 7L),
+          ("orders", s"o$b-2", "y", ts, "open", 3L + b))
+        .toDF("topic", "uid", "key", "timestamp", "status", "items")
+        .select($"topic", $"uid", $"key", $"timestamp",
+          struct($"status", $"items").as("message")), dir)
+    }
+    def part(t: String) =
+      spark.read.parquet(s"$dir/topic=$t/date=2024-05-01")
+    def content(t: String, keep: org.apache.spark.sql.Column = lit(true)) =
+      part(t).where(keep).select($"uid", $"message").collect()
+        .map(_.toString).toSet
+    val topics = Seq("events", "orders")
+    val schemas = topics.map(t => part(t).schema)
+    val before = topics.map(t => content(t))
+    val kept = topics.map(t => content(t, $"key" =!= "s"))
+    assert(ChangelogSink.rollIfNeeded(spark, dir, "2024-01-01") == ((0, 2)))
+    assert(topics.map(t => part(t).schema) == schemas)
+    assert(topics.map(t => content(t)) == before)
+    ChangelogSink.forgetKey(spark, dir, "s").collect()
+    assert(topics.map(t => part(t).schema) == schemas)
+    assert(topics.map(t => content(t)) == kept)
+  }
+
   test("append never sets up a write job in the table root's _temporary") {
     // a plain partitioned write to the root would: its committer shares
     // <root>/_temporary with every other append running at once. Here

@@ -105,8 +105,12 @@ class ReplaySpec extends SparkSpec {
     // the stored-index location is written once, behind BucketedTables
     assert(where("graft_index") == Seq("graft/sink/BucketedTables.scala"))
     // uid uniqueness has one owner, the sink's append: no reader dedups
-    assert(where("dropDuplicates\\(\"uid\"\\)") ==
-      Seq("graft/sink/ChangelogSink.scala"))
+    val sink = "graft/sink/ChangelogSink.scala"
+    assert(where("dropDuplicates\\(\"uid\"\\)") == Seq(sink))
+    // every changelog write goes through the sink's one staged commit:
+    // one DataFrame write in the file, and no thread pool of its own
+    assert(where("\\.write\\b").filter(_ == sink) == Seq(sink))
+    assert(where("Executors\\.").filter(_.startsWith("graft/sink/")).isEmpty)
     // a parquet read with no schema runs an inference job; it lives
     // only in the job-free open helper, and every other read goes
     // through it or passes .schema(...). Matched on each file's joined
