@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources
+import graft.model.Envelope
 import graft.transform.Transforms
 
 /**
@@ -25,40 +25,23 @@ object Pipeline {
     Transforms.enrich(ValueJsonField)(Sources.eventsAsRecords(spark, sfDir))
 
   /**
-   * Heterogeneous two-topic changelog (events + orders), unioned by name
-   * with missing columns null — the reference's multiple-topics-into-one-
-   * index model (kafana.http:75). Flattened for the oracle; the JSON
-   * field keeps both payload shapes searchable.
+   * Heterogeneous two-topic changelog (events + orders): the flat view of
+   * the envelopes' `unionByName` with missing columns null — the union
+   * rule [[graft.ingest.AvroIngest.ingestTopics]] applies, and the
+   * reference's multiple-topics-into-one-index model (kafana.http:75).
+   * The JSON field keeps both payload shapes searchable.
    */
-  def multiTopicFlat(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = envelopeFlat(spark, sfDir)
-    val ord = Transforms.enrich(ValueJsonField)(
-        Sources.ordersAsRecords(spark, sfDir))
-      .select(
-        col("uid"), col("key"), col("topic"), col("partition"),
-        col("offset"), col("timestamp"),
-        col("message.o_orderstatus").as("o_orderstatus"),
-        col("message.o_totalprice").as("o_totalprice"),
-        col("message.o_orderpriority").as("o_orderpriority"),
-        col(s"message.$ValueJsonField").as(ValueJsonField))
-    ev.unionByName(ord, allowMissingColumns = true)
-  }
+  def multiTopicFlat(spark: SparkSession, sfDir: String): DataFrame =
+    Envelope.flat(envelope(spark, sfDir).unionByName(
+      Transforms.enrich(ValueJsonField)(
+        Sources.ordersAsRecords(spark, sfDir)),
+      allowMissingColumns = true))
 
   /**
-   * Oracle-friendly flat projection of the envelope: every payload field
-   * and metadata field as a top-level column. Column order/names are the
-   * stable contract the DuckDB oracle reproduces.
+   * Oracle-friendly flat projection of the envelope ([[Envelope.flat]]):
+   * every payload field and metadata field as a top-level column. Column
+   * order/names are the stable contract the DuckDB oracle reproduces.
    */
   def envelopeFlat(spark: SparkSession, sfDir: String): DataFrame =
-    envelope(spark, sfDir).select(
-      col("uid"),
-      col("key"),
-      col("topic"),
-      col("partition"),
-      col("offset"),
-      col("timestamp"),
-      col("message.event_type").as("event_type"),
-      col("message.value").as("value"),
-      col("message.props").as("props"),
-      col(s"message.$ValueJsonField").as(ValueJsonField))
+    Envelope.flat(envelope(spark, sfDir))
 }

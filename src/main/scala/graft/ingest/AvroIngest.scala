@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.Envelope
 import graft.transform.Transforms
 
 /**
@@ -14,12 +15,14 @@ import graft.transform.Transforms
  */
 object AvroIngest {
 
-  /** Decode a topic's framed-Avro `value` column into its typed struct
-    * (null value stays null = tombstone; enrich materializes the sentinel). */
-  def decodeTopic(records: DataFrame, schemaJson: String): DataFrame = {
-    val (structCol, _) = ConfluentAvro.decodeOrTombstone(col("value"), schemaJson)
-    records.withColumn("value", structCol)
-  }
+  /** Decode a topic's framed-Avro `value` column into its typed value: a
+    * struct for a record schema, the bare value for a primitive one. A
+    * null frame (tombstone) stays null without reaching Avro; T1
+    * ([[Transforms.insertValueAsString]]) writes the sentinel and wraps a
+    * primitive into the `message` struct. */
+  def decodeTopic(records: DataFrame, schemaJson: String): DataFrame =
+    records.withColumn("value",
+      ConfluentAvro.decodeStruct(col("value"), schemaJson))
 
   /** One topic: decode + full SMT-chain enrichment. */
   def ingestTopic(records: DataFrame, schemaJson: String,
@@ -27,19 +30,20 @@ object AvroIngest {
     Transforms.enrich(valueJsonField)(decodeTopic(records, schemaJson))
 
   /**
-   * Multi-topic changelog: per-topic envelopes unioned by name with
-   * missing columns allowed — Foo rows carry null Bar fields and vice
-   * versa, while the JSON-string field keeps every payload searchable
-   * across schemas (the reference's key trick, SURVEY.md §7 hard-parts).
-   * The union is plan-level only — no shuffle, no repartition.
+   * Multi-topic changelog: the per-topic envelopes unioned by name with
+   * missing columns allowed, so `message` carries every topic's payload
+   * fields (the first topic's first) — Foo rows hold null Bar fields and
+   * vice versa, while the JSON-string field keeps every payload
+   * searchable across schemas (the reference's key trick, SURVEY.md §7
+   * hard-parts). The result is an envelope: one
+   * [[graft.sink.ChangelogSink.append]] stores it and
+   * [[graft.query.Changelog]] queries it. The union is plan-level only —
+   * no shuffle, no repartition.
    */
   def ingestTopics(perTopic: Seq[(DataFrame, String)],
       valueJsonField: String = "value"): DataFrame =
     perTopic.map { case (records, schema) =>
-      // flatten message so unionByName can align heterogeneous payloads
-      val env = ingestTopic(records, schema, valueJsonField)
-      env.select(col("message.*"), col("timestamp"), col("topic"),
-        col("partition"), col("offset"), col("key"), col("uid"))
+      ingestTopic(records, schema, valueJsonField)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Writer schema v1 of the evolution demo topic. */
@@ -57,23 +61,6 @@ object AvroIngest {
       |{"name":"value","type":"double"},
       |{"name":"props","type":"string","default":"n/a"}]}""".stripMargin
 
-  /**
-   * Schema-evolution demo (kq10): ONE topic whose records were written
-   * under two registered schema versions — even offsets under v1, odd
-   * offsets under v2 (ids 1 and 2 in the frame) — decoded in a single
-   * pass with per-record writer dispatch and surfaced AS the evolved
-   * reader schema: v1 records come back with `props = "n/a"` (the
-   * default), v2 records with their written value. This is the normal
-   * registry workflow the reference inherits from Confluent's
-   * `AvroConverter` (TombstoneAwareAvroConverter.java:16-23,
-   * kafana.http:74): the 4-byte schema id in each frame selects the
-   * writer schema; Avro resolution maps it onto the reader.
-   *
-   * The encode half runs in the same plan (fixture events → framed
-   * bytes), so the query exercises S2 encode → S1 id-dispatch decode →
-   * evolution end-to-end, and the DuckDB oracle checks the result against
-   * the raw table with the default spliced in.
-   */
   /**
    * The reference's ACTUAL byte-level contract end-to-end (kq22): the
    * events fixture re-shaped into a Kafka record frame whose `value` is
@@ -103,36 +90,48 @@ object AvroIngest {
       pmod(col("user_id"), lit(4)).cast("int").as("partition"),
       col("event_id").as("offset"),
       col("ts").as("timestamp"))
-    val env = Transforms.enrich(valueJsonField)(
-      decodeTopic(framed, EventV2))
-    env.select(
-      col("uid"), col("key"), col("topic"), col("partition"),
-      col("offset"), col("timestamp"),
-      col("message.event_type").as("event_type"),
-      col("message.value").as("value"),
-      col("message.props").as("props"),
-      col(s"message.$valueJsonField").as(valueJsonField))
+    Envelope.flat(ingestTopic(framed, EventV2, valueJsonField))
   }
 
-  def evolutionDemo(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(spark, dir, "events")
-    val framed = ev.select(col("event_id"),
-      when(pmod(col("event_id"), lit(2)) === 0,
-        ConfluentAvroEncode.encode(
-          struct(col("event_type"), col("value")), EventV1, 1))
-        .otherwise(ConfluentAvroEncode.encode(
-          struct(col("event_type"), col("value"), col("props")), EventV2, 2))
-        .as("framed"))
-    framed
+  /**
+   * Schema-evolution demo (kq10): ONE topic whose records were written
+   * under two registered schema versions — even offsets under v1, odd
+   * offsets under v2 (ids 1 and 2 in the frame) — decoded in a single
+   * pass with per-record writer dispatch and surfaced AS the evolved
+   * reader schema: v1 records come back with `props = "n/a"` (the
+   * default), v2 records with their written value. This is the normal
+   * registry workflow the reference inherits from Confluent's
+   * `AvroConverter` (TombstoneAwareAvroConverter.java:16-23,
+   * kafana.http:74): the 4-byte schema id in each frame selects the
+   * writer schema; Avro resolution maps it onto the reader.
+   *
+   * The encode half runs in the same plan (fixture events → framed
+   * bytes), so the query exercises S2 encode → S1 id-dispatch decode →
+   * evolution end-to-end, and the DuckDB oracle checks the result against
+   * the raw table with the default spliced in.
+   */
+  def evolutionDemo(spark: SparkSession, dir: String): DataFrame =
+    evolutionDecoded(spark, dir, StaticSchemaRegistry(
+      Map(1 -> EventV1, 2 -> EventV2))).orderBy(col("event_id"))
+
+  /** The evolution demo's frame: each event encoded under v1 (even
+    * ids, schema id 1) or v2 (odd ids, schema id 2), decoded through
+    * `resolver` as v2, and projected to its three payload fields. */
+  private def evolutionDecoded(spark: SparkSession, dir: String,
+      resolver: SchemaResolver): DataFrame =
+    Tables.load(spark, dir, "events")
       .select(col("event_id"),
-        ConfluentAvro.decodeStruct(col("framed"),
-          Map(1 -> EventV1, 2 -> EventV2), EventV2).as("v"))
+        when(pmod(col("event_id"), lit(2)) === 0,
+          ConfluentAvroEncode.encode(
+            struct(col("event_type"), col("value")), EventV1, 1))
+          .otherwise(ConfluentAvroEncode.encode(
+            struct(col("event_type"), col("value"), col("props")),
+            EventV2, 2))
+          .as("framed"))
       .select(col("event_id"),
-        col("v.event_type").as("event_type"),
-        col("v.value").as("value"),
-        col("v.props").as("props"))
-      .orderBy(col("event_id"))
-  }
+        ConfluentAvro.decodeStruct(col("framed"), resolver, EventV2)
+          .as("v"))
+      .select(col("event_id"), col("v.*"))
 
   /**
    * [[evolutionDemo]] through a LIVE REST registry (kq103): an
@@ -175,25 +174,9 @@ object AvroIngest {
     try {
       val resolver = HttpSchemaResolver(
         s"http://127.0.0.1:${server.getAddress.getPort}")
-      val ev = Tables.load(spark, dir, "events")
-      val framed = ev.select(col("event_id"),
-        when(pmod(col("event_id"), lit(2)) === 0,
-          ConfluentAvroEncode.encode(
-            struct(col("event_type"), col("value")), EventV1, 1))
-          .otherwise(ConfluentAvroEncode.encode(
-            struct(col("event_type"), col("value"), col("props")),
-            EventV2, 2))
-          .as("framed"))
-      val decoded = framed
-        .select(col("event_id"),
-          ConfluentAvro.decodeStruct(col("framed"), resolver, EventV2)
-            .as("v"))
-        .select(col("event_id"),
-          col("v.event_type").as("event_type"),
-          col("v.value").as("value"),
-          col("v.props").as("props"))
-        .localCheckpoint() // materialize while the registry is live
-      decoded.orderBy(col("event_id"))
+      // materialize while the registry is live
+      evolutionDecoded(spark, dir, resolver).localCheckpoint()
+        .orderBy(col("event_id"))
     } finally server.stop(0)
   }
 }

@@ -13,7 +13,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,10 +41,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * deliberate: the body is a library decode call with nothing for codegen
  * to fuse; surrounding expressions stay inside whole-stage codegen.
  *
- * The tombstone rule composes OUTSIDE the decode, exactly like the
+ * The tombstone rule holds without a check of its own, exactly like the
  * reference (null check precedes decode — the converter filters
- * `SchemaAndValue.NULL` before ever touching Avro): see
- * [[ConfluentAvro.decodeOrTombstone]].
+ * `SchemaAndValue.NULL` before ever touching Avro): both expressions are
+ * `UnaryExpression`s, so a null frame yields null and never reaches
+ * Avro; T1 ([[graft.transform.Transforms.insertValueAsString]]) then
+ * writes the sentinel.
  */
 private[ingest] trait WireFormatDecode {
   def resolver: SchemaResolver
@@ -167,23 +168,6 @@ case class ConfluentAvroDecodeStruct(child: Expression,
 object ConfluentAvro {
 
   import org.apache.spark.sql.GraftColumnBridge
-
-  /** Single-schema JSON decode (id-dispatch degenerate case: one
-    * registered writer, reader = writer). */
-  def decodeJson(value: Column, schemaJson: String): Column =
-    decodeJson(value, StaticSchemaRegistry(Map(1 -> schemaJson)), schemaJson)
-
-  /** Registry-style JSON decode: per-record writer dispatch + reader view. */
-  def decodeJson(value: Column, writerSchemas: Map[Int, String],
-      readerSchemaJson: String): Column =
-    decodeJson(value, StaticSchemaRegistry(writerSchemas), readerSchemaJson)
-
-  /** JSON decode against any [[SchemaResolver]] (registry-backed in
-    * production). */
-  def decodeJson(value: Column, resolver: SchemaResolver,
-      readerSchemaJson: String): Column =
-    GraftColumnBridge.column(ConfluentAvroDecode(
-      GraftColumnBridge.expression(value), resolver, readerSchemaJson))
 
   /** Typed struct decode, single schema. */
   def decodeStruct(value: Column, schemaJson: String): Column =
@@ -331,40 +315,5 @@ object ConfluentAvro {
           throw new IllegalArgumentException(s"unsupported avro type $other")
       }
     }
-  }
-
-  /**
-   * Full decode of a framed-Avro `value` column into a typed struct, with
-   * the reference's tombstone substitution: null value → the sentinel in
-   * the JSON field, never a decode attempt (S1 ordering).
-   * Returns (structCol, jsonCol). The struct is decoded NATIVELY
-   * (one Avro pass per record, no JSON serialize/re-parse round-trip).
-   */
-  def decodeOrTombstone(value: Column, schemaJson: String): (Column, Column) =
-    decodeOrTombstone(value, Map(1 -> schemaJson), schemaJson)
-
-  /** Registry-style flavor of [[decodeOrTombstone]]: per-record writer
-    * dispatch with the data surfaced as `readerSchemaJson`. */
-  def decodeOrTombstone(value: Column, writerSchemas: Map[Int, String],
-      readerSchemaJson: String): (Column, Column) =
-    decodeOrTombstone(value, StaticSchemaRegistry(writerSchemas),
-      readerSchemaJson)
-
-  /** [[decodeOrTombstone]] against any [[SchemaResolver]]. */
-  def decodeOrTombstone(value: Column, resolver: SchemaResolver,
-      readerSchemaJson: String): (Column, Column) = {
-    val schema = new Schema.Parser().parse(readerSchemaJson)
-    val decoded = decodeStruct(value, resolver, readerSchemaJson)
-    val (st, structVal) = sparkType(schema) match {
-      case s: StructType => (s, decoded)
-      case other => // non-record topic: wrap into a 1-field struct
-        (StructType(Seq(StructField("value", other))),
-          struct(decoded.as("value")))
-    }
-    val json = when(value.isNull, lit(graft.model.Envelope.Tombstone))
-      .otherwise(decodeJson(value, resolver, readerSchemaJson))
-    val structCol = when(value.isNull, lit(null).cast(st))
-      .otherwise(structVal)
-    (structCol, json)
   }
 }

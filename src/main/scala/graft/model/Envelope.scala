@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -51,4 +51,13 @@ object Envelope {
     concat_ws("+", topic, partition, offset)
 
   def uid: Column = uid(col("topic"), col("partition"), col("offset"))
+
+  /** The flat view of an envelope: the identity and metadata columns,
+    * then every `message` field as a top-level column, in the struct's
+    * order. The one projection behind every flat frame and its DuckDB
+    * oracle; over a multi-topic union the fields of topics after the
+    * first come after the first topic's, as `unionByName` appends them. */
+  def flat(env: DataFrame): DataFrame =
+    env.select(col("uid"), col("key"), col("topic"), col("partition"),
+      col("offset"), col("timestamp"), col("message.*"))
 }

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.Tables
+import graft.model.Envelope
 import graft.transform.Transforms
 
 /**
@@ -198,10 +199,6 @@ object StreamPipeline {
       }
     }
   }
-
-  /** Enrich a STREAMING record frame (same chain as batch — stateless). */
-  def ingest(records: DataFrame, valueJsonField: String): DataFrame =
-    Transforms.enrich(valueJsonField)(records)
 
   /** Q1b streaming: watermarked tumbling-window counts. */
   def discoverHistogram(env: DataFrame, bucket: String = "1 hour",
@@ -1523,13 +1520,8 @@ object StreamPipeline {
     import spark.implicits._
     val raw = graft.ingest.Sources.eventsAsRecords(spark, dir)
     val vj = graft.Pipeline.ValueJsonField
-    val flat = graft.transform.Transforms.enrich(vj)(
-        r.slices(raw, unix_micros(col("timestamp"))))
-      .select(col("uid"), col("key"), col("topic"), col("partition"),
-        col("offset"), col("timestamp"),
-        col("message.event_type").as("event_type"),
-        col("message.value").as("value"),
-        col(s"message.$vj").as(vj))
+    val flat = Envelope.flat(Transforms.enrich(vj)(
+      r.slices(raw, unix_micros(col("timestamp")))))
     val gated = flat.where(graft.functions.HashedLinearScore
       .hashedLinearScore(col(vj)) > 0)
     val verdicts = array(storedQueries.map { case (id, p) =>

@@ -1,16 +1,19 @@
 package graft
 
 import java.io.ByteArrayOutputStream
+import java.nio.file.Files
 
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumWriter}
 import org.apache.avro.io.EncoderFactory
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ingest.{AvroIngest, ConfluentAvro}
 import graft.model.Envelope
+import graft.query.Changelog
+import graft.sink.ChangelogSink
 
 /**
  * Reproduces the reference's own end-to-end demo (kafana.http:1-61): Foo
@@ -32,16 +35,21 @@ class AvroPipelineSpec extends SparkSpec {
       .stripMargin
 
   /** Confluent wire format: magic 0x0 + 4-byte schema id + avro binary. */
+  private def framed(schema: Schema, datum: Any): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    out.write(Array[Byte](0, 0, 0, 0, 1)) // magic + id=1
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[Any](schema).write(datum, enc)
+    enc.flush()
+    out.toByteArray
+  }
+
+  /** A framed record of `schemaJson` with `fields` set. */
   private def frame(schemaJson: String, fields: (String, Any)*): Array[Byte] = {
     val schema = new Schema.Parser().parse(schemaJson)
     val rec = new GenericData.Record(schema)
     fields.foreach { case (k, v) => rec.put(k, v) }
-    val out = new ByteArrayOutputStream()
-    out.write(Array[Byte](0, 0, 0, 0, 1)) // magic + id=1
-    val enc = EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericData.Record](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    framed(schema, rec)
   }
 
   private val recSchema = StructType(Seq(
@@ -433,16 +441,69 @@ class AvroPipelineSpec extends SparkSpec {
     // Q3: key AND topic
     assert(changelog.where($"key" === "1" && $"topic" === "foo").count() == 2)
     // Q4: structured field search on a schema-specific field (Bar.baz)
-    assert(changelog.where($"baz" === "qux").count() == 1)
+    assert(changelog.where($"message.baz" === "qux").count() == 1)
     // Q4 heterogeneous: JSON-string search spans BOTH schemas' `bar` field
     val barValued = changelog.where(
-      get_json_object($"value", "$.bar").isNotNull)
+      get_json_object($"message.value", "$.bar").isNotNull)
     assert(barValued.count() == 3) // foo×2 + bar×1 (tombstones excluded)
     // Q5: tombstones visible, one per topic
-    val tombs = changelog.where($"value" === Envelope.Tombstone)
+    val tombs = changelog.where($"message.value" === Envelope.Tombstone)
     assert(tombs.count() == 2)
     assert(tombs.select($"topic").distinct().count() == 2)
     // uid identity holds across the union
     assert(changelog.select($"uid").distinct().count() == 5)
+  }
+
+  test("ingestTopics is an envelope: ONE append of Foo and Bar, then the " +
+      "Changelog facade searches either topic's fields and erases a key " +
+      "of both in one commit") {
+    val dir = Files.createTempDirectory("two-topic-changelog").toString
+    val bar3 = records("bar", Seq(
+      ("3", frame(barSchema, "bar" -> 7, "baz" -> "keep"), 2L)))
+    ChangelogSink.append(AvroIngest.ingestTopics(Seq(
+      fooRecords -> fooSchema, barRecords.union(bar3) -> barSchema)), dir)
+    val log = Changelog(spark, dir)
+    def topics(df: DataFrame) =
+      df.select($"topic").as[String].collect().toSeq.sorted
+    assert(topics(log.searchField("baz", "qux")) == Seq("bar"))
+    assert(topics(log.searchField("foo", "bar")) == Seq("foo"))
+    assert(topics(log.searchKey("1")) == Seq("bar", "bar", "foo", "foo"))
+    assert(topics(log.tombstones()) == Seq("bar", "foo"))
+    // one file schema: Foo's payload fields, then Bar's missing one
+    val (schema, jobs) = withJobCount(ChangelogSink.read(spark, dir).schema)
+    assert(jobs == 0)
+    assert(schema("message").dataType.asInstanceOf[StructType].fieldNames
+      .toSeq == Seq("foo", "bar", "value", "baz"))
+    assertUidsUnique(dir)
+    // key 1 lives in both topics: one schema group, so one staged write
+    val (_, writes) = withWriteCount(
+      ChangelogSink.forgetKey(spark, dir, "1").collect())
+    assert(writes == 1)
+    assert(ChangelogSink.read(spark, dir).schema == schema)
+    assert(log.searchKey("1").isEmpty)
+    assert(log.frame.select($"topic", $"message.foo", $"message.baz")
+      .collect().map(_.toString).toSet ==
+      Set("[foo,baz,null]", "[bar,null,keep]"))
+  }
+
+  test("a primitive-valued topic is wrapped once, by T1: `value` by " +
+      "default, the configured field otherwise, TOMBSTONE for a null") {
+    val long = new Schema.Parser().parse("\"long\"")
+    val nums = records("nums", Seq(
+      ("1", framed(long, 42L), 0L), ("1", null, 1L)))
+    for (field <- Seq("value", "value_json")) {
+      val env = AvroIngest.ingestTopic(nums, "\"long\"", field)
+      assert(env.select($"message.*").columns.toSeq == Seq(field))
+      assert(env.orderBy($"offset").select($"message.$field").as[String]
+        .collect().toSeq == Seq("42", Envelope.Tombstone))
+    }
+  }
+
+  test("Envelope.flat of the two-topic fixture union has the oracle's " +
+      "`u` columns, in order") {
+    assert(Pipeline.multiTopicFlat(spark, sf).columns.toSeq == Seq(
+      "uid", "key", "topic", "partition", "offset", "timestamp",
+      "event_type", "value", "props", "value_json",
+      "o_orderstatus", "o_totalprice", "o_orderpriority"))
   }
 }

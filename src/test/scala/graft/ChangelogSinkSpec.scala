@@ -1194,9 +1194,6 @@ class ChangelogSinkSpec extends SparkSpec {
   test("rollIfNeeded compacts every fragmented partition of two topics, " +
       "the null-timestamp one included, in one write command: " +
       "ceil(bytes/target) files each, rows unchanged, re-run a no-op") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.datasources
-      .InsertIntoHadoopFsRelationCommand
     val dir = Files.createTempDirectory("sink-sweep").toString
     fragmentedTable(dir, big = 1200, appends = 3)
     def part(rel: String) = new java.io.File(dir, rel)
@@ -1212,28 +1209,10 @@ class ChangelogSinkSpec extends SparkSpec {
       .toSeq.sorted
     val before = rows()
 
-    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        if (qe.logical.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand]))
-          writes.incrementAndGet()
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val swept = try {
-      val r = ChangelogSink.rollIfNeeded(spark, dir, "2024-01-01", target)
-      // listener events are async: wait until the count is stable
-      var (last, stableFor) = (-1, 0)
-      while (stableFor < 4) {
-        Thread.sleep(250)
-        if (writes.get() == last) stableFor += 1
-        else { last = writes.get(); stableFor = 0 }
-      }
-      r
-    } finally spark.listenerManager.unregister(listener)
+    val (swept, writes) = withWriteCount(
+      ChangelogSink.rollIfNeeded(spark, dir, "2024-01-01", target))
     assert(swept == ((0, 3)))
-    assert(writes.get() == 1, s"${writes.get()} write commands for 3 partitions")
+    assert(writes == 1, s"$writes write commands for 3 partitions")
     sweptRels.foreach(r => assert(dataFiles(part(r)).size == want(r), r))
     assert(rows() == before)
     assert(!new java.io.File(dir).list().exists(_.startsWith(".")))

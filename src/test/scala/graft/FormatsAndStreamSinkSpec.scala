@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.sink.ChangelogSink
 import graft.streaming.StreamPipeline
+import graft.transform.Transforms
 
 /** File-format coverage (SURVEY.md §2.3: parquet is the canonical sink;
   * json/csv/orc round-trip through the same envelope) and the streaming
@@ -50,7 +51,7 @@ class FormatsAndStreamSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("streamsink").toString
     val ckpt = Files.createTempDirectory("ckpt").toString
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     val q = ChangelogSink.streamAppend(env, s"$dir/table", ckpt)
     try {
       // duplicate record in one batch → deduped by uid
@@ -68,7 +69,7 @@ class FormatsAndStreamSinkSpec extends SparkSpec {
       "micro-batch, or a whole batch retried, is stored once") {
     val dir = Files.createTempDirectory("streamsink-replay").toString
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     def stored(table: String): Long = ChangelogSink.read(spark, table).count()
     val q = ChangelogSink.streamAppend(env, s"$dir/table",
       Files.createTempDirectory("ckpt").toString)
@@ -89,7 +90,7 @@ class FormatsAndStreamSinkSpec extends SparkSpec {
     val again = MemoryStream[RecIn]
     again.addData(rec("a", 1, 0), rec("b", 2, 1), rec("b", 2, 1),
       rec("c", 3, 2))
-    val retried = StreamPipeline.ingest(again.toDF(), "value_json").writeStream
+    val retried = Transforms.enrich("value_json")(again.toDF()).writeStream
       .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         ChangelogSink.append(batch, s"$dir/retried")
@@ -102,7 +103,7 @@ class FormatsAndStreamSinkSpec extends SparkSpec {
 
   test("session windows: gap-separated activity sessions per key") {
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     val sessions = StreamPipeline.sessionActivity(env, gap = "5 minutes")
     val q = sessions.writeStream.format("memory").queryName("sessions_out")
       .outputMode(OutputMode.Complete()).start()

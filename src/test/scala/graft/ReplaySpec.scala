@@ -75,16 +75,16 @@ class ReplaySpec extends SparkSpec {
     assert(dirs() -- before == Set.empty)
   }
 
-  test("guard: Trigger.AvailableNow, the state-store provider and " +
-      "streaming conf writes appear only inside the replay helper") {
+  /** (path relative to `src/main/scala`, code line) for every
+    * non-comment line of the main sources. */
+  private lazy val code: Seq[(String, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"no sources under ${root.getAbsolutePath}")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f =>
         if (f.isDirectory) files(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    // (path relative to root, code line) for every non-comment line
-    val code = files(root).flatMap { f =>
+    files(root).flatMap { f =>
       val path = root.toPath.relativize(f.toPath).toString
       java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
         .filterNot { l =>
@@ -92,8 +92,14 @@ class ReplaySpec extends SparkSpec {
           t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
         }.map(path -> _)
     }
-    def where(pattern: String): Seq[String] =
-      code.collect { case (p, l) if pattern.r.findFirstIn(l).isDefined => p }
+  }
+
+  /** The file of each code line `pattern` matches, once per line. */
+  private def where(pattern: String): Seq[String] =
+    code.collect { case (p, l) if pattern.r.findFirstIn(l).isDefined => p }
+
+  test("guard: Trigger.AvailableNow, the state-store provider and " +
+      "streaming conf writes appear only inside the replay helper") {
     val helper = "graft/streaming/StreamPipeline.scala"
     // each lives once, in the helper: Replay.run and Replay.session
     assert(where("Trigger\\.AvailableNow") == Seq(helper))
@@ -121,5 +127,11 @@ class ReplaySpec extends SparkSpec {
         if "read(\\s*\\.option\\([^)]*\\))*\\s*\\.parquet\\(".r
           .findFirstIn(t).isDefined => p }.toSeq ==
       Seq("graft/ingest/Tables.scala"))
+  }
+
+  test("guard: the envelope's flat view is written once, in " +
+      "Envelope.flat") {
+    // a second `message.*` projection is a second copy of the flat shape
+    assert(where("message\\.\\*") == Seq("graft/model/Envelope.scala"))
   }
 }

@@ -49,6 +49,35 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `f`'s result and the file-write commands (one per
+    * `DataFrame.write`) that succeeded while it ran. Listener events
+    * arrive asynchronously, so the count is read once it has held still
+    * for a second. */
+  protected def withWriteCount[T](f: => T): (T, Int) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources
+      .InsertIntoHadoopFsRelationCommand
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.logical.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand]))
+          writes.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = f
+      var (last, stableFor) = (-1, 0)
+      while (stableFor < 4) {
+        Thread.sleep(250)
+        if (writes.get() == last) stableFor += 1
+        else { last = writes.get(); stableFor = 0 }
+      }
+      (result, writes.get())
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Fails unless the changelog table at `dir` stores each uid once. */
   protected def assertUidsUnique(dir: String): Unit = {
     val dups = graft.sink.ChangelogSink.read(spark, dir)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamPipeline
+import graft.transform.Transforms
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -25,7 +26,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ingest: enrichment chain runs on an unbounded frame") {
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     val q = env.writeStream.format("memory").queryName("ingest_out")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -41,7 +42,7 @@ class StreamingSpec extends SparkSpec {
   test("KQL predicates (incl. analyzed match_phrase) filter a STREAMING " +
       "envelope — live-tail search, stateless map-side filter") {
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     // the Kibana search box pointed at a live tail: a quoted phrase must
     // match [event, type, click] at consecutive analyzed positions of
     // the payload JSON; bare-term and field clauses compose as in batch
@@ -62,7 +63,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming histogram: watermarked windowed counts") {
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     val hist = StreamPipeline.discoverHistogram(env, "1 hour", "2 hours")
     val q = hist.writeStream.format("memory").queryName("hist_out")
       .outputMode(OutputMode.Complete()).start()
@@ -101,7 +102,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static join: broadcast dim attaches to flowing records") {
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     val dim = Seq(("a", "gold")).toDF("dim_key", "tier")
     val joined = StreamPipeline.joinDim(env, dim, "dim_key")
     val q = joined.writeStream.format("memory").queryName("dimjoin_out")
@@ -120,8 +121,8 @@ class StreamingSpec extends SparkSpec {
     val lIn = MemoryStream[RecIn]
     val rIn = MemoryStream[RecIn]
     val joined = StreamPipeline.streamStreamJoin(
-      StreamPipeline.ingest(lIn.toDF(), "value_json"),
-      StreamPipeline.ingest(rIn.toDF(), "value_json"),
+      Transforms.enrich("value_json")(lIn.toDF()),
+      Transforms.enrich("value_json")(rIn.toDF()),
       within = "1 hour")
     val q = joined.writeStream.format("memory").queryName("ssj_out")
       .outputMode(OutputMode.Append()).start()
@@ -145,7 +146,7 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[RecIn]
     val latest = StreamPipeline.latestStatePerKey(
-      StreamPipeline.ingest(in.toDF(), "value_json"), "value_json")
+      Transforms.enrich("value_json")(in.toDF()), "value_json")
     val q = latest.toDF().writeStream.format("memory").queryName("rocks_out")
       .outputMode(OutputMode.Update()).start()
     try {
@@ -170,7 +171,7 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[RecIn]
     val stats = StreamPipeline.keyStatsPerKey(
-      StreamPipeline.ingest(in.toDF(), "value_json"), "value_json")
+      Transforms.enrich("value_json")(in.toDF()), "value_json")
     val q = stats.toDF().writeStream.format("memory").queryName("tws_out")
       .outputMode(OutputMode.Update()).start()
     try {
@@ -197,7 +198,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming latest-state: state survives across triggers, max wins") {
     val in = MemoryStream[RecIn]
-    val env = StreamPipeline.ingest(in.toDF(), "value_json")
+    val env = Transforms.enrich("value_json")(in.toDF())
     val latest = StreamPipeline.latestStatePerKey(env, "value_json")
     val q = latest.toDF().writeStream.format("memory").queryName("state_out")
       .outputMode(OutputMode.Update()).start()
